@@ -8,7 +8,7 @@ for every SQL-expressible one. Column names and float rounding match
 on both sides so the driver's order-insensitive value-hash agrees.
 
 Non-SQL-expressible entries (iterative CC internals aside — the CC
-*result* is oracled via a chain graph; xxhash64 MinHash-LSH; IVF/LSH
+*result* is oracled via a chain graph; siphash MinHash-LSH; IVF/LSH
 ANN; mapInPandas feature extraction) intentionally omit the oracle:
 the driver records the weaker rows-only check for those.
 """
@@ -781,10 +781,9 @@ def _dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_embedding_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sign-LSH dedup FLOW (bucket equi-join + exact-cosine verify)
-    with md5-derived ±1 Rademacher planes, so the whole bucketed
-    near-dup path is value-reproducible in DuckDB — the gaussian-plane
-    production path (dedup_embedding_lsh) stays rows-only."""
+    """dedup_embedding_lsh's own flow (bucket equi-join + exact-cosine
+    verify) with md5-derived ±1 Rademacher planes, so the whole
+    bucketed near-dup path is value-reproducible in DuckDB."""
     return dedup.embedding_near_dup_pairs(
         _t(spark, sf_dir, "embeddings"), threshold=0.3, method="rademacher",
         n_planes=8, n_tables=8, dim=64,
@@ -841,9 +840,9 @@ WHERE (floor((CASE WHEN sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding
 
 
 def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production xxhash64 MinHash-LSH near-dup path (rows-only check:
-    xxhash64 has no DuckDB twin; parity of the banding algorithm is
-    oracled separately via er_lsh_band_pairs)."""
+    """Production MinHash-LSH near-dup path (rows-only check: its
+    pandas-siphash token hashes have no DuckDB twin; the same flow with
+    the md5 signature is value-oracled by dedup_minhash_lsh_parity)."""
     # 3-token shingles: near-dup (not same-vocab) semantics, so LSH
     # bands genuinely prune — unigram shingling over a small shared
     # vocabulary would degenerate to an all-pairs join
@@ -853,14 +852,16 @@ def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_minhash_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME near-dup flow as dedup_minhash_lsh (shingle -> MinHash
-    -> band -> block join -> exact-Jaccard verify, minus hot-block
-    salting — the oracle enumerates ALL bucket pairs) with the
-    md5-parity signature kernel, so DuckDB reproduces the whole
-    operator value-for-value — converts the MinHash-LSH dedup family
-    from rows-only to hash-green."""
-    return dedup.minhash_lsh_dup_pairs_parity(
-        _t(spark, sf_dir, "documents"), jaccard_threshold=0.5, shingle_k=3
+    """dedup_minhash_lsh's own flow (shingle -> MinHash -> band ->
+    salted block join -> exact-Jaccard verify) with signature="md5",
+    so DuckDB reproduces the whole operator value-for-value. The
+    oracle enumerates ALL bucket pairs; no fixture block reaches the
+    salt threshold (sqrt(2 * pair_budget) rows), so salting is a
+    value-checked no-op here."""
+    return dedup.minhash_lsh_dup_pairs(
+        _t(spark, sf_dir, "documents"), jaccard_threshold=0.5, shingle_k=3,
+        num_hashes=_N_PARITY_HASHES, bands=_PARITY_BANDS,
+        rows_per_band=_PARITY_ROWS, signature="md5",
     )
 
 
@@ -1641,17 +1642,15 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN with md5-derived ±1 Rademacher planes (Achlioptas
-    2001) — the SAME bucket->equi-join->exact-rescore->top-k flow as
-    ann_lsh_topk, expressed so a DuckDB oracle reproduces it
-    value-for-value (plane entries are shared integer literals; the
-    sign decision and cosine use the same sequential folds both
-    engines already agree on). Converts the sign-LSH ANN family from
-    rows-only to hash-green; the gaussian-plane Arrow kernel stays the
-    production path."""
+    """ann_lsh_topk's own flow (bucket -> equi-join -> exact rescore ->
+    top-k) with md5-derived ±1 Rademacher planes (Achlioptas 2001), so
+    a DuckDB oracle reproduces it value-for-value: plane entries are
+    shared integer literals, and the sign decision and cosine use the
+    same sequential folds both engines already agree on."""
     emb = _t(spark, sf_dir, "embeddings")
-    return ann.lsh_topk_parity(
-        emb, _ann_queries(emb), k=5, n_planes=8, n_tables=6, dim=64
+    return ann.lsh_topk(
+        emb, _ann_queries(emb), k=5, n_planes=8, n_tables=6, dim=64,
+        planes="rademacher",
     )
 
 
@@ -3010,18 +3009,18 @@ def oracle_sql() -> dict[str, str]:
         "dedup_simhash_fingerprints": _DEDUP_SIMHASH_FP_SQL,
         "dedup_simhash_pairs": _DEDUP_SIMHASH_PAIRS_SQL,
         "dedup_embedding_cosine": _DEDUP_EMBEDDING_SQL,
-        # dedup_embedding_lsh: gaussian planes — rows-only; the
-        # bucketed flow is value-oracled by the Rademacher twin
+        # dedup_embedding_lsh: gaussian planes — rows-only; the same
+        # bucketed flow is value-oracled with Rademacher planes
         "dedup_embedding_lsh_parity": _dedup_embedding_lsh_parity_sql(),
-        # dedup_minhash_lsh: xxhash64 — rows-only (the identical flow
-        # is value-oracled by the md5-parity twin right below)
+        # dedup_minhash_lsh: siphash signature — rows-only (the same
+        # flow with signature="md5" is value-oracled right below)
         "dedup_minhash_lsh_parity": _dedup_minhash_lsh_parity_sql(),
         "dedup_keep_representatives": _DEDUP_KEEP_REPS_SQL,
         "dedup_decontaminate": _DEDUP_DECON_SQL,
         "ann_cosine_topk": _ANN_COSINE_SQL,
         # ann_ivf_topk / ann_lsh_topk: approximate engine-hash paths —
-        # rows-only; the sign-LSH FLOW is value-oracled by the
-        # Rademacher parity twin below
+        # rows-only; the same sign-LSH flow is value-oracled with
+        # Rademacher planes below
         "ann_lsh_parity": _ann_lsh_parity_sql(),
         "ann_nnd_parity": _ANN_NND_PARITY_SQL,
         "ann_ivf_parity": _ann_ivf_parity_sql(),

@@ -102,44 +102,6 @@ def labeled_pair_metrics(
     }
 
 
-def blocking_recall(blocks: DataFrame, gold: DataFrame, id_col: str = "file_id") -> dict:
-    """Fraction of gold pairs sharing >= 1 block key — the analog of
-    the reference's retrieval recall@k
-    (/root/reference/blink/biencoder/eval_cluster_linking.py:529-541)."""
-    ga = gold.select(F.col(id_col).alias("id_a"), "entity_id")
-    gb = gold.select(F.col(id_col).alias("id_b"), "entity_id")
-    gold_pairs = (
-        ga.join(gb, "entity_id").where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    )
-    # Never materialize the full block self-join: expand only the GOLD
-    # pairs by id_a's block keys, then semi-join to test id_b shares
-    # one. ONE aggregation job computes both counts (was two count()
-    # jobs over the all-covered-pairs join).
-    ba = blocks.select("block_key", F.col(id_col).alias("id_a"))
-    bb = blocks.select("block_key", F.col(id_col).alias("id_b"))
-    covered = (
-        gold_pairs.join(ba, "id_a")
-        .join(bb, ["block_key", "id_b"], "left_semi")
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cov", F.lit(1))
-    )
-    row = (
-        gold_pairs.join(covered, ["id_a", "id_b"], "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_gold"),
-            F.coalesce(F.sum("cov"), F.lit(0)).alias("n_cov"),
-        )
-        .collect()[0]
-    )
-    n_gold, n_cov = int(row["n_gold"]), int(row["n_cov"])
-    return {
-        "gold_pairs": n_gold,
-        "covered": n_cov,
-        "recall": (n_cov / n_gold) if n_gold else 1.0,
-    }
-
-
 def linking_accuracy(
     pred: DataFrame, gold: DataFrame, id_col: str = "file_id"
 ) -> dict:

@@ -7,11 +7,11 @@ signature is the "embedding", band keys are the "index buckets", and
 (bands, rows) tunes recall the way nlist/nprobe does
 (/root/reference/blink/common/params.py:181-184).
 
-Split of labor:
-  * string -> int64 hashing happens JVM-side (xxhash64, codegen) in
-    functions.text.token_hashes;
-  * the n_hashes permutations run in ONE Arrow-vectorized numpy kernel
-    (pandas UDF) — no per-row Python, per BASELINE.json input_hint.
+All per-doc work runs in ONE fused Arrow pandas UDF
+(content_signature_features_udf) inside Python worker processes:
+tokenize, string -> int64 token hashing (pandas ``hash_array``, i.e.
+siphash), numeric k-gram shingling, and the n_hashes permutations as
+one vectorized numpy min-reduction per doc.
 
 Permutation family: v_i(h) = (a_i * h + b_i) mod 2^64, a_i odd
 (multiply-add over Z/2^64 — deterministic, seedable, vectorized;
@@ -25,7 +25,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,55 +81,6 @@ def minhash_py(hashes: list[int], num_hashes: int, seed: int, shingle_k: int = 1
         m = min(((int(a[i]) * (h & 0xFFFFFFFFFFFFFFFF) + int(b[i])) & 0xFFFFFFFFFFFFFFFF) for h in hashes)
         out.append(m >> 1)
     return out
-
-
-def minhash_signature_udf(num_hashes: int = 128, seed: int = 42, shingle_k: int = 1):
-    """pandas UDF: array<bigint> token hashes -> array<bigint> signature.
-
-    Iterator form so (a, b) are built once per executor task, not per
-    batch — mirrors the reference's batched GPU encode loop
-    (/root/reference/blink/biencoder/data_process_mult.py:252-291).
-
-    shingle_k > 1 first combines each window of k consecutive token
-    hashes into one 64-bit k-gram hash (vectorized Horner over uint64)
-    — numeric shingling, so no shingle strings are ever materialized.
-    """
-    a_params, b_params = perm_params(num_hashes, seed)
-    c = _U64(SHINGLE_C)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        a = a_params[None, :]  # [1, P]
-        b = b_params[None, :]
-        empty = ((_U64(1) << _U64(62)) + np.arange(num_hashes, dtype=_U64)) >> _U64(1)
-        empty = empty.astype(np.int64).tolist()
-        for series in batches:
-            out = []
-            for hs in series:
-                if hs is None or len(hs) == 0:
-                    out.append(empty)
-                    continue
-                h = np.asarray(hs, dtype=np.int64).astype(_U64)
-                if shingle_k > 1:
-                    n = len(h)
-                    if n <= shingle_k:
-                        acc = _U64(0)
-                        for v in h:
-                            acc = (acc * c + v) & _MASK64
-                        h = np.array([acc], dtype=_U64)
-                    else:
-                        m = n - shingle_k + 1
-                        acc = np.zeros(m, dtype=_U64)
-                        for j in range(shingle_k):  # Horner across window slots
-                            acc = (acc * c + h[j : j + m]) & _MASK64
-                        h = acc
-                h = h[:, None]  # [n, 1]
-                v = (h * a + b) & _MASK64  # wraps mod 2^64 (intended)
-                sig = (v.min(axis=0) >> _U64(1)).astype(np.int64)
-                out.append(sig.tolist())
-            yield pd.Series(out)
-
-    return _sig
 
 
 def tokenize_py(content: str) -> list[str]:
@@ -303,8 +253,8 @@ def content_signature_features_udf(
 
 # ------------------------------------------------ SQL-parity variant
 #
-# The production signature above uses xxhash64 (JVM-only). For the
-# driver's DuckDB oracle we also provide a second, fully SQL-portable
+# The production signature above uses pandas siphash (Python-only). For
+# the driver's DuckDB oracle we also provide a second, fully SQL-portable
 # construction: token hash = first 60 bits of md5, permutations
 # h -> (a_i*h + b_i) mod p over the prime field p = 2^31-1, with
 # (a_i, b_i) themselves derived from md5 so BOTH engines can compute
@@ -364,18 +314,4 @@ def parity_band_key_sql(sig_expr: str, band: int, rows: int) -> str:
     return (
         f"array_to_string(list_slice({sig_expr}, "
         f"{band * rows + 1}, {band * rows + rows}), '-')"
-    )
-
-
-def band_keys(sig_col: Column, bands: int, rows: int) -> Column:
-    """array<bigint> of LSH band hashes (len == bands), JVM-side.
-
-    Band j's key = xxhash64(sig[j*rows : (j+1)*rows], j) — two docs
-    collide on band j iff that signature slice is identical.
-    """
-    return F.array(
-        *[
-            F.xxhash64(F.slice(sig_col, j * rows + 1, rows), F.lit(j))
-            for j in range(bands)
-        ]
     )

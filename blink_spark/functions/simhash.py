@@ -130,20 +130,6 @@ def hamming(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def hamming_sql(a: str, b: str) -> str:
-    return f"bit_count(xor({a}, {b}))"
-
-
-def band_values(sim_col: Column, bands: int = DEFAULT_BANDS) -> list[Column]:
-    """Split the fingerprint into `bands` contiguous bit slices."""
-    width = N_BITS // bands
-    mask = (1 << width) - 1
-    return [
-        F.shiftright(sim_col, b * width).bitwiseAND(F.lit(mask)).alias(f"band{b}")
-        for b in range(bands)
-    ]
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

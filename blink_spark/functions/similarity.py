@@ -182,26 +182,6 @@ def tf_cosine_udf():
 # ----------------------------------------------- fused hashed-pair scorer
 
 
-def hashed_jaccard_cosine_py(a: list[int], b: list[int]) -> tuple[float, float]:
-    """Pure-Python oracle for the fused kernel below."""
-    import math
-    from collections import Counter
-
-    ca, cb = Counter(a or []), Counter(b or [])
-    if not ca and not cb:
-        return 1.0, 0.0
-    if not ca or not cb:
-        return 0.0, 0.0
-    inter = set(ca) & set(cb)
-    union = len(ca) + len(cb) - len(inter)
-    jac = len(inter) / union if union else 1.0
-    dot = sum(ca[k] * cb[k] for k in inter)
-    na = math.sqrt(sum(v * v for v in ca.values()))
-    nb = math.sqrt(sum(v * v for v in cb.values()))
-    cos = dot / (na * nb) if na and nb else 0.0
-    return jac, cos
-
-
 def presorted_pair_scores_udf():
     """The fused stage-2 scorer: ONE Arrow pass per pair batch computes
     Jaro-Winkler on paths plus token-set Jaccard and TF-cosine over
@@ -295,51 +275,6 @@ def presorted_jaccard_udf():
             yield pd.Series(out)
 
     return _jac
-
-
-def hashed_pair_scores_udf():
-    """Fused pair scorer over PRE-HASHED token arrays: one Arrow pass
-    computes both token-set Jaccard and TF-cosine with vectorized
-    numpy set ops (np.unique / np.intersect1d on int64) — the
-    throughput path for stage 2. Token hashing happens once upstream
-    (JVM xxhash64), so no strings cross the shuffle or the Arrow
-    boundary. Exact-integer math => deterministic at any parallelism.
-
-    (array<long>, array<long>) -> struct<jaccard: double, cosine: double>
-    """
-    import math
-
-    import numpy as np
-
-    @F.pandas_udf("jaccard double, cosine double")
-    def _scores(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        for a, b in batches:
-            n = len(a)
-            jac = np.empty(n, dtype=np.float64)
-            cos = np.empty(n, dtype=np.float64)
-            for i, (x, y) in enumerate(zip(a, b)):
-                xa = np.asarray(x if x is not None else [], dtype=np.int64)
-                ya = np.asarray(y if y is not None else [], dtype=np.int64)
-                if xa.size == 0 and ya.size == 0:
-                    jac[i], cos[i] = 1.0, 0.0
-                    continue
-                if xa.size == 0 or ya.size == 0:
-                    jac[i], cos[i] = 0.0, 0.0
-                    continue
-                ux, cx = np.unique(xa, return_counts=True)
-                uy, cy = np.unique(ya, return_counts=True)
-                inter, ix, iy = np.intersect1d(
-                    ux, uy, assume_unique=True, return_indices=True
-                )
-                union = ux.size + uy.size - inter.size
-                jac[i] = inter.size / union if union else 1.0
-                dot = float((cx[ix] * cy[iy]).sum())
-                na = math.sqrt(float((cx * cx).sum()))
-                nb = math.sqrt(float((cy * cy).sum()))
-                cos[i] = dot / (na * nb) if na and nb else 0.0
-            yield pd.DataFrame({"jaccard": jac, "cosine": cos})
-
-    return _scores
 
 
 # ------------------------------------------------------------ vector cosine

@@ -65,9 +65,3 @@ def stable_file_id(*cols: Column | str) -> Column:
     cs = [F.col(c) if isinstance(c, str) else c for c in cols]
     return F.xxhash64(*cs)
 
-
-def token_hashes(tokens_col: Column, distinct: bool = True) -> Column:
-    """array<bigint> xxhash64 of each (distinct) token/shingle —
-    JVM-side string hashing feeding the vectorized MinHash kernel."""
-    arr = F.array_distinct(tokens_col) if distinct else tokens_col
-    return F.transform(arr, lambda s: F.xxhash64(s))

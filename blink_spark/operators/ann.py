@@ -12,7 +12,7 @@ Here the same exact->approximate ladder is expressed as DataFrames:
                       assignment via one vectorized numpy matmul UDF,
                       queries probe nprobe cells (the IndexIVFFlat
                       analog; cell equi-join replaces the cross join)
-  * hyperplane_buckets random-hyperplane sign-LSH bucket keys (the
+  * lsh_topk          random-hyperplane sign-LSH bucket keys (the
                       HNSW/ANN alternative; bucket equi-join)
 
 Scores are rounded to 6 dp so results hash identically across engines
@@ -130,27 +130,6 @@ def _matmul_assign_udf(centroids: np.ndarray, nprobe: int):
     return _assign
 
 
-def ivf_cells(
-    corpus: DataFrame,
-    n_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> np.ndarray:
-    """Deterministic centroid sample: the n_cells rows with smallest
-    xxhash64(id, seed) — order-free, parallelism-independent (the
-    kmeans-free analog of FAISS's clustering; one refinement pass can
-    be layered on without changing the contract)."""
-    rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .withColumn("h", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("h")
-        .limit(n_cells)
-        .collect()
-    )
-    return np.asarray([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-
-
 def ivf_cells_df(
     corpus: DataFrame,
     n_cells: int,
@@ -159,11 +138,12 @@ def ivf_cells_df(
     seed: int = 42,
     id_hash: str = "xxhash",
 ) -> DataFrame:
-    """Centroid TABLE (cell_id, centroid) — the same deterministic
-    hash-min sample as ivf_cells but never collected to the driver:
-    the scale path when nlist grows past what a task closure should
-    ship (~10^4 centroids; at nlist = sqrt(10^12) the closure is GBs,
-    a broadcast-joined table is not).
+    """Centroid TABLE (cell_id, centroid): the n_cells rows with
+    smallest xxhash64(id, seed) — order-free, parallelism-independent
+    (the kmeans-free analog of FAISS's clustering). Never collected to
+    the driver here: the scale path when nlist grows past what a task
+    closure should ship (~10^4 centroids; at nlist = sqrt(10^12) the
+    closure is GBs, a broadcast-joined table is not).
 
     id_hash="md5" swaps xxhash64 for the first 60 bits of
     md5(str(id)) so a SQL oracle can reproduce the sample (the
@@ -329,8 +309,8 @@ def ivf_topk(
         )
     else:
         # collect the (refined) centroid table ordered by cell_id —
-        # same bounded collect as ivf_cells, now sharing the init +
-        # refinement with the join path
+        # n_cells rows, sharing the init + refinement with the join
+        # path
         cents = np.asarray(
             [
                 np.asarray(r["centroid"], dtype=np.float64)
@@ -399,46 +379,6 @@ def hyperplane_bucket_udf(
     return _buckets
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame | None = None,
-    k: int = 10,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Sign-LSH ANN: candidates share (table, bucket) in >=1 of
-    n_tables; exact cosine rescoring + top-k. Recall is tuned by
-    (n_planes down, n_tables up) like the reference's nprobe.
-
-    dim is optional: the bucket UDF reads it from the data per batch
-    (no driver-side .first() job during plan construction)."""
-    udf = hyperplane_bucket_udf(dim, n_planes, n_tables, seed)
-
-    def keyed(df: DataFrame, idn: str, vn: str) -> DataFrame:
-        return df.select(F.col(id_col).alias(idn), F.col(vec_col).alias(vn)).select(
-            idn, vn, F.posexplode(udf(F.col(vn))).alias("table_id", "bucket")
-        )
-
-    q = queries if queries is not None else corpus
-    qs = keyed(q, "query_id", "q_vec")
-    cs = keyed(corpus, "neighbor_id", "c_vec")
-    scored = (
-        qs.join(cs, ["table_id", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            qround(array_cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _topk_window(scored, k)
-
-
 def rademacher_planes(
     dim: int, n_planes: int = 8, n_tables: int = 4, seed: int = 42
 ) -> list[list[list[int]]]:
@@ -479,40 +419,79 @@ def _plane_dot(vec: Column, plane: list[int]) -> Column:
     )
 
 
-def lsh_topk_parity(
+def _sign_lsh_buckets(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+    dim: int | None,
+    planes: str,
+) -> DataFrame:
+    """(id, vec, table_id, bucket): one row per (vector, LSH table).
+    Table t's bucket packs the signs of n_planes hyperplanes as
+    Σ bit_j·2^j. The planes are the only swappable part:
+
+      * "gaussian"    seeded gaussian planes in one vectorized Arrow
+                      UDF (hyperplane_bucket_udf); dim may be None.
+      * "rademacher"  md5-derived ±1 planes as Column expressions, so
+                      a DuckDB oracle reproduces every bucket; needs an
+                      explicit dim."""
+    if planes == "gaussian":
+        udf = hyperplane_bucket_udf(dim, n_planes, n_tables, seed)
+        return df.select(
+            F.col(id_col),
+            F.col(vec_col),
+            F.posexplode(udf(F.col(vec_col))).alias("table_id", "bucket"),
+        )
+    if planes != "rademacher":
+        raise ValueError(f"unknown planes: {planes!r} (gaussian|rademacher)")
+    if dim is None:
+        raise ValueError("planes='rademacher' needs an explicit dim")
+    signs = rademacher_planes(dim, n_planes, n_tables, seed)
+    out = None
+    for t in range(n_tables):
+        key = None
+        for j in range(n_planes):
+            bit = (_plane_dot(F.col(vec_col), signs[t][j]) > 0).cast("long") * F.lit(
+                2**j
+            )
+            key = bit if key is None else key + bit
+        kb = df.select(
+            F.col(id_col), F.col(vec_col), F.lit(t).alias("table_id"), key.alias("bucket")
+        )
+        out = kb if out is None else out.unionByName(kb)
+    return out
+
+
+def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame | None = None,
     k: int = 10,
-    n_planes: int = 8,
+    n_planes: int = 12,
     n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    dim: int | None = None,
+    seed: int = 42,
+    planes: str = "gaussian",
 ) -> DataFrame:
-    """SQL-reproducible twin of :func:`lsh_topk`: sign-LSH bucketing
-    with md5-derived ±1 planes as pure Column expressions (bucket bit
-    j = (x · s_tj) > 0, key = Σ bit_j·2^j), bucket equi-join, exact
-    cosine rescore, top-k window — the whole approximate-search flow a
-    DuckDB oracle can state value-for-value. The gaussian-plane Arrow
-    kernel (lsh_topk) stays the production path."""
-    planes = rademacher_planes(dim, n_planes, n_tables, seed)
+    """Sign-LSH ANN: candidates share (table, bucket) in >=1 of
+    n_tables; exact cosine rescoring + top-k. Recall is tuned by
+    (n_planes down, n_tables up) like the reference's nprobe.
+
+    planes="gaussian" (default) buckets with the Arrow kernel; dim is
+    optional there (read from the data per batch, so no driver-side
+    .first() job during plan construction). planes="rademacher" runs
+    the same flow on md5-derived ±1 planes, value-reproducible by a
+    DuckDB oracle (needs dim)."""
 
     def keyed(df: DataFrame, idn: str, vn: str) -> DataFrame:
-        base = df.select(F.col(id_col).alias(idn), F.col(vec_col).alias(vn))
-        out = None
-        for t in range(n_tables):
-            key = None
-            for j in range(n_planes):
-                bit = (_plane_dot(F.col(vn), planes[t][j]) > 0).cast("long") * F.lit(
-                    2**j
-                )
-                key = bit if key is None else key + bit
-            kb = base.select(
-                idn, vn, F.lit(t).alias("table_id"), key.alias("bucket")
-            )
-            out = kb if out is None else out.unionByName(kb)
-        return out
+        return _sign_lsh_buckets(
+            df.select(F.col(id_col).alias(idn), F.col(vec_col).alias(vn)),
+            idn, vn, n_planes, n_tables, seed, dim, planes,
+        )
 
     q = queries if queries is not None else corpus
     qs = keyed(q, "query_id", "q_vec")

@@ -18,34 +18,8 @@ the family into one component.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from blink_spark.functions.minhash import band_keys
-
-
-def exact_block_key(lang: Column, sha: Column) -> Column:
-    """Degenerate blocking for exact duplicates: (lang, sha256)."""
-    return F.concat_ws("|", F.lit("x"), lang, sha)
-
-
-def lsh_blocks(
-    df: DataFrame,
-    id_col: str = "file_id",
-    lang_col: str = "lang",
-    sig_col: str = "minhash",
-    bands: int = 16,
-    rows: int = 8,
-) -> DataFrame:
-    """Explode LSH band keys -> (block_key, <id>). One row per (doc, band)."""
-    bk = band_keys(F.col(sig_col), bands, rows)
-    return (
-        df.select(F.col(id_col), F.col(lang_col), F.posexplode(bk).alias("band", "bhash"))
-        .select(
-            F.concat_ws("|", F.col(lang_col), F.col("band"), F.col("bhash")).alias("block_key"),
-            F.col(id_col),
-        )
-    )
 
 
 def salt_hot_blocks(
@@ -56,43 +30,13 @@ def salt_hot_blocks(
 ) -> DataFrame:
     """Split any block with > pair_budget pairs via secondary salting.
 
-    Returns (block_key, <id>) with the salt folded into block_key.
-    Block sizes come from one aggregation; the per-block salt count is
-    ceil(n / rows_budget) where rows_budget keeps each salted
-    sub-block under the pair budget. Small blocks pass through with
-    salt 0 (key unchanged shape, so downstream is oblivious).
-    """
-    # rows_budget: n rows -> ~n^2/2 pairs; keep sub-block rows <= sqrt(2*budget)
-    rows_budget = max(2, int((2 * pair_budget) ** 0.5))
-    sizes = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
-    nsalts = F.least(
-        F.greatest(F.ceil(F.col("n") / rows_budget).cast("int"), F.lit(1)),
-        F.lit(max_salts),
-    )
-    sized = blocks.join(
-        F.broadcast(sizes.where(F.col("n") > rows_budget).withColumn("nsalts", nsalts)),
-        "block_key",
-        "left",
-    )
-    salt = F.when(
-        F.col("nsalts").isNull(), F.lit(0)
-    ).otherwise(F.pmod(F.xxhash64(F.col(id_col), F.col("block_key")), F.col("nsalts")).cast("int"))
-    return sized.select(
-        F.concat_ws("|", F.col("block_key"), salt).alias("block_key"),
-        F.col(id_col),
-    )
-
-
-def salt_hot_blocks_numeric(
-    blocks: DataFrame,
-    id_col: str = "file_id",
-    pair_budget: int = 5_000_000,
-    max_salts: int = 1024,
-) -> DataFrame:
-    """salt_hot_blocks for NUMERIC (long) block keys: the salted key is
-    xxhash64(block_key, salt); unsalted blocks keep their key. Numeric
-    keys keep the block shuffle at 8 bytes/row and avoid JVM string
-    building on the hot path (the pipeline's stage-1 path)."""
+    Takes and returns (block_key, <id>) with NUMERIC (long) keys: a
+    salted key is xxhash64(block_key, salt); unsalted blocks keep their
+    key. Block sizes come from one aggregation; the per-block salt
+    count is ceil(n / rows_budget) where rows_budget keeps each salted
+    sub-block under the pair budget. Numeric keys keep the block
+    shuffle at 8 bytes/row and avoid JVM string building on the hot
+    path."""
     rows_budget = max(2, int((2 * pair_budget) ** 0.5))
     sizes = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
     nsalts = F.least(

@@ -34,10 +34,6 @@ class CCStats:
     rounds: list[dict] = field(default_factory=list)
 
 
-def _local_checkpoint(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
 def make_parquet_checkpointer(scratch_dir: str, keep_last: int = 2, name: str = "cc_iter"):
     """Per-iteration checkpointer backed by scratch parquet. Preferred
     over localCheckpoint: measured on this host, the local block store

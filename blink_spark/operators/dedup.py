@@ -63,42 +63,92 @@ def minhash_lsh_dup_pairs(
     jaccard_threshold: float = 0.5,
     seed: int = 42,
     pair_budget: int = 5_000_000,
+    signature: str = "arrow",
 ) -> DataFrame:
     """Candidate pairs from MinHash-LSH banding, verified by exact
     shingle-set Jaccard >= threshold. The production near-dup path:
     banding bounds the join, the exact Jaccard on the shingle-hash
     arrays removes LSH false positives.
 
-    One fused Arrow pass (tokenize -> numeric k-gram shingles ->
-    MinHash -> numeric band keys, group folded in) computes everything
-    per doc; the table then spills ONCE to scratch parquet before
-    feeding blocking and both verify-join sides. Measured here,
-    localCheckpoint burned ~100x CPU/row and JVM-regex shingling did
-    not scale across local task threads — this is the same kernel +
-    parquet-boundary design as the flagship pipeline's s1."""
-    from blink_spark.functions.minhash import content_signature_features_udf
+    The signature step emits, per doc, ``bands`` (one 64-bit key per
+    (group, band, signature slice)) and ``su`` (the sorted distinct
+    shingle hashes). ``signature`` picks how:
+
+      * "arrow"  one fused Arrow pass (tokenize -> pandas siphash
+                 token hashes -> numeric k-gram shingles -> MinHash
+                 over Z/2^64 -> band keys, group folded in).
+      * "md5"    JVM Column expressions: md5-over-prime-field MinHash
+                 (functions.minhash.parity_minhash_expr) over string
+                 shingles, the 60-bit md5 prefix of each shingle as
+                 ``su`` — so a DuckDB oracle reproduces the pairs
+                 value-for-value while no block reaches the salt
+                 threshold (seed is unused: md5 is seedless).
+
+    Everything after is shared: the table spills ONCE to scratch
+    parquet, then feeds hot-block salting, the bucket pair join and
+    both verify-join sides. Measured here, localCheckpoint burned
+    ~100x CPU/row and JVM-regex shingling did not scale across local
+    task threads — this is the same kernel + parquet-boundary design
+    as the flagship pipeline's s1."""
     from blink_spark.functions.similarity import presorted_jaccard_udf
     from blink_spark.io.scratch import spill_scratch
 
-    feat_udf = content_signature_features_udf(
-        num_hashes,
-        seed,
-        shingle_k=shingle_k,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        return_shingles=True,
-    )
     grp = F.col(group_col) if group_col else F.lit("all")
-    base = df.select(
-        F.col(id_col).alias("file_id"),
-        feat_udf(F.col(text_col), grp).alias("ft"),
-    ).select(
-        "file_id",
-        F.col("ft.bands").alias("bands"),
-        F.col("ft.su").alias("su"),
-    )
+    if signature == "arrow":
+        from blink_spark.functions.minhash import content_signature_features_udf
+
+        feat_udf = content_signature_features_udf(
+            num_hashes,
+            seed,
+            shingle_k=shingle_k,
+            bands=bands,
+            rows_per_band=rows_per_band,
+            return_shingles=True,
+        )
+        base = df.select(
+            F.col(id_col).alias("file_id"),
+            feat_udf(F.col(text_col), grp).alias("ft"),
+        ).select(
+            "file_id",
+            F.col("ft.bands").alias("bands"),
+            F.col("ft.su").alias("su"),
+        )
+    elif signature == "md5":
+        from blink_spark.functions.minhash import parity_minhash_expr
+
+        sig = F.expr(parity_minhash_expr("sh", num_hashes))
+        base = df.select(
+            F.col(id_col).alias("file_id"),
+            grp.alias("grp"),
+            text.shingles(text.tokenize(text_col), shingle_k).alias("sh"),
+        ).select(
+            "file_id",
+            F.array(
+                *[
+                    F.xxhash64(
+                        F.col("grp"),
+                        F.lit(b),
+                        F.slice(sig, b * rows_per_band + 1, rows_per_band),
+                    )
+                    for b in range(bands)
+                ]
+            ).alias("bands"),
+            # parityhash.md5_prefix_hash64 of each distinct shingle
+            F.array_sort(
+                F.array_distinct(
+                    F.transform(
+                        "sh",
+                        lambda x: F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast(
+                            "bigint"
+                        ),
+                    )
+                )
+            ).alias("su"),
+        )
+    else:
+        raise ValueError(f"unknown signature: {signature!r} (arrow|md5)")
     base, _ = spill_scratch(base, "minhash_sig")
-    blocks = blocking.salt_hot_blocks_numeric(
+    blocks = blocking.salt_hot_blocks(
         base.select("file_id", F.explode("bands").alias("block_key")),
         "file_id",
         pair_budget,
@@ -111,74 +161,6 @@ def minhash_lsh_dup_pairs(
         pairs.join(fa, "id_a")
         .join(fb, "id_b")
         .select("id_a", "id_b", qround(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
-
-
-def minhash_lsh_dup_pairs_parity(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str | None = "lang",
-    shingle_k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """SQL-parity twin of :func:`minhash_lsh_dup_pairs`: the SAME
-    pipeline shape (fused signatures -> band keys -> one spill ->
-    blocking -> pair join -> exact-Jaccard verify) with the
-    md5-over-prime-field MinHash (functions.minhash parity helpers)
-    instead of the xxhash64 Arrow kernel, so a DuckDB oracle can
-    reproduce the FULL near-dup flow value-for-value — the engine-hash
-    production kernel stays rows-only, the algorithm itself is now
-    value-checked end-to-end. Slower per doc (the md5 portability tax
-    noted on er_lsh_band_pairs); use the xxhash variant in production.
-
-    Unlike the production path this twin does NOT salt hot blocks: the
-    SQL oracle enumerates ALL bucket pairs, so a salted (pair-dropping)
-    Spark side would silently depend on no block crossing the salt
-    threshold and false-mismatch on a skewed fixture. Salting is
-    value-checked on its own (tests/test_blocking.py) and exercised by
-    the production flow's pipeline tests."""
-    from blink_spark.functions.minhash import (
-        parity_band_key_expr,
-        parity_minhash_expr,
-    )
-    from blink_spark.io.scratch import spill_scratch
-
-    grp = F.col(group_col) if group_col else F.lit("all")
-    base = (
-        df.select(
-            F.col(id_col).alias("file_id"),
-            grp.alias("grp"),
-            text.shingles(text.tokenize(text_col), shingle_k).alias("sh"),
-        )
-        .withColumn("sig", F.expr(parity_minhash_expr("sh", num_hashes)))
-        .select("file_id", "grp", F.array_distinct("sh").alias("shd"), "sig")
-    )
-    base, _ = spill_scratch(base, "minhash_parity_sig")
-    keyed = None
-    for b in range(bands):
-        kb = base.select(
-            F.concat_ws(
-                "|",
-                F.col("grp"),
-                F.lit(b),
-                F.expr(parity_band_key_expr("sig", b, rows_per_band)),
-            ).alias("block_key"),
-            "file_id",
-        )
-        keyed = kb if keyed is None else keyed.unionByName(kb)
-    pairs = candidate_pairs(keyed, "file_id")
-    fa = base.select(F.col("file_id").alias("id_a"), F.col("shd").alias("sh_a"))
-    fb = base.select(F.col("file_id").alias("id_b"), F.col("shd").alias("sh_b"))
-    jac = qround(token_set_jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-    return (
-        pairs.join(fa, "id_a")
-        .join(fb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= jaccard_threshold)
     )
 
@@ -227,7 +209,6 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    block_col: str | None = None,
     method: str = "lsh",
     n_planes: int = 12,
     n_tables: int = 6,
@@ -243,84 +224,31 @@ def embedding_near_dup_pairs(
     (n_planes down, n_tables up) and is high for near-dup thresholds
     (the regime this operator is for) — see the pytest recall floor.
 
+    method="rademacher": the same bucket flow on md5-derived ±1
+    planes (see ann.lsh_topk), value-reproducible by a DuckDB oracle;
+    needs an explicit dim.
+
     method="exact": the O(n^2) brute-force verifier/oracle path (the
     DuckDB-twin query uses it); pairs every partition with every other
     via a shuffle-replicated nested loop — correct at any size, but
     quadratic by definition. Keep it for verification corpora only.
-
-    block_col: use a precomputed coarse key (e.g. an IVF cell from
-    operators.ann) instead of either of the above.
     """
-    base = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        *([F.col(block_col)] if block_col else []),
-    )
-    if block_col:
-        key = [block_col]
-        a = base.select(*key, F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-        b = base.select(*key, F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        joined = a.join(b, key)
-    elif method == "exact":
-        a = base.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-        b = base.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        joined = a.hint("shuffle_replicate_nl").crossJoin(b)
-    elif method == "lsh":
-        from blink_spark.operators.ann import hyperplane_bucket_udf
+    base = df.select(F.col(id_col), F.col(vec_col))
+    if method == "exact":
+        key = []
+    elif method in ("lsh", "rademacher"):
+        from blink_spark.operators.ann import _sign_lsh_buckets
 
-        udf = hyperplane_bucket_udf(
-            n_planes=n_planes, n_tables=n_tables, seed=seed
+        base = _sign_lsh_buckets(
+            base, id_col, vec_col, n_planes, n_tables, seed, dim,
+            "gaussian" if method == "lsh" else "rademacher",
         )
-        keyed = base.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode(udf(F.col(vec_col))).alias("table_id", "bucket"),
-        )
-        a = keyed.select(
-            "table_id", "bucket",
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
-        )
-        b = keyed.select(
-            "table_id", "bucket",
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),
-        )
-        joined = a.join(b, ["table_id", "bucket"])
-    elif method == "rademacher":
-        # SQL-parity bucketing: md5-derived ±1 planes as Column
-        # expressions (see ann.lsh_topk_parity) — the same bucket
-        # equi-join flow, reproducible by the DuckDB oracle. Requires
-        # a known fixed dim; production stays the Arrow kernel.
-        from blink_spark.operators.ann import _plane_dot, rademacher_planes
-
-        if dim is None:
-            raise ValueError("method='rademacher' needs an explicit dim")
-        planes = rademacher_planes(dim, n_planes, n_tables, seed)
-        keyed = None
-        for t in range(n_tables):
-            key = None
-            for j in range(n_planes):
-                bit = (_plane_dot(F.col(vec_col), planes[t][j]) > 0).cast(
-                    "long"
-                ) * F.lit(2**j)
-                key = bit if key is None else key + bit
-            kb = base.select(
-                F.col(id_col),
-                F.col(vec_col),
-                F.lit(t).alias("table_id"),
-                key.alias("bucket"),
-            )
-            keyed = kb if keyed is None else keyed.unionByName(kb)
-        a = keyed.select(
-            "table_id", "bucket",
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
-        )
-        b = keyed.select(
-            "table_id", "bucket",
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),
-        )
-        joined = a.join(b, ["table_id", "bucket"])
+        key = ["table_id", "bucket"]
     else:
         raise ValueError(f"unknown method: {method!r} (lsh|exact|rademacher)")
+    a = base.select(*key, F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
+    b = base.select(*key, F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    joined = a.join(b, key) if key else a.hint("shuffle_replicate_nl").crossJoin(b)
     return (
         joined.where(F.col("id_a") < F.col("id_b"))
         .select(

@@ -145,7 +145,7 @@ def dendrogram_purity(
     graph (distances = negated similarities, dendrogram_purity.py:303),
     run the graph-HAC, score purity against gold labels. Caps the
     collect at max_leaves leaves (deterministic smallest-hash sample of
-    label rows, same discipline as ivf_cells) — this is ANALYSIS, not a
+    label rows, same discipline as ivf_cells_df) — this is ANALYSIS, not a
     pipeline stage; use nmi_ari / pairwise_metrics for scalable gates.
 
     The edge collect is bounded IN SPARK: edges are semi-joined against

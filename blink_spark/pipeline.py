@@ -156,7 +156,7 @@ class ERPipeline:
             F.xxhash64(F.lit("x"), F.col("lang"), F.col("sha256")).alias("block_key"),
             "file_id",
         )
-        return blocking.salt_hot_blocks_numeric(
+        return blocking.salt_hot_blocks(
             lsh.unionByName(exact), "file_id", c.pair_budget
         )
 

@@ -13,9 +13,13 @@ a density artifact:
   similarity EXACTLY (unigram and shingle Jaccard, minhash collision
   structure, simhash feature sets, exact-dup groups — all functions
   of token identity only), so per-row candidate density is
-  bit-faithful to sf0.1 and total candidate volume scales exactly
-  linearly; across replicas token sets share nothing, so the
-  scale-up cannot quadratically inflate candidates. Two rejected
+  similarity-faithful to sf0.1; across replicas token sets share
+  nothing, so the scale-up cannot quadratically inflate candidates.
+  Density is not bit-faithful: hash-valued kernels (md5 simhash bits,
+  MinHash values) see new token strings, so pair counts near a
+  threshold drift (SF1BENCH.json: dedup_simhash_pairs 9.02 -> 14.85
+  pairs/row). scale_documents checks the disjointness after scaling
+  and fails if a token is shared by two replicas. Two rejected
   designs, for the record: substituting 1/3 of token INSTANCES left
   cross-replica distinct-token Jaccard at ~0.6 (unigram-minhash
   queries went x28.9 at 10x), and a random vocabulary PERMUTATION
@@ -42,6 +46,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -70,6 +75,7 @@ def scale_documents(src: str, dst: str, factor: int) -> int:
             langs.append(lang[i])
             srcs.append(source[i])
             nchars.append(len(s))
+    check_disjoint_vocabularies(txts, n, factor)
     out = pa.table(
         {
             "doc_id": pa.array(ids, pa.int64()),
@@ -81,6 +87,24 @@ def scale_documents(src: str, dst: str, factor: int) -> int:
     )
     pq.write_table(out, f"{dst}/documents.parquet")
     return out.num_rows
+
+
+def check_disjoint_vocabularies(texts: list[str], n: int, factor: int) -> None:
+    """Exit with an error unless the replicas' token vocabularies are
+    pairwise disjoint, tokenized as the engine does (lowercase, split
+    on functions.text.TOKEN_SPLIT_RE). A source token such as "az1"
+    would collide with replica 1's copy of the token "a"."""
+    split = re.compile(r"[^a-z0-9_]+")
+    owner: dict[str, int] = {}
+    for r in range(factor):
+        for s in texts[r * n : (r + 1) * n]:
+            for tok in split.split(s.lower()):
+                if tok and owner.setdefault(tok, r) != r:
+                    raise SystemExit(
+                        f"make_sf1: token {tok!r} occurs in replicas "
+                        f"{owner[tok]} and {r}; replica vocabularies must be "
+                        "disjoint"
+                    )
 
 
 def scale_embeddings(src: str, dst: str, factor: int) -> int:

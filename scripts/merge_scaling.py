@@ -1,8 +1,13 @@
-"""Merge the round-5 scaling runs into SCALING.json.
+"""Merge one scaling run into SCALING.json.
 
-Round-5 measurement (first-action on the fresh VM, per round-4 VERDICT
-item 1: probes + four pairings before any other job warmed the box; all
-runs on the same shared /root/scale_corpus_r5 parquet — 492,785 files,
+Usage: python scripts/merge_scaling.py RAW_DIR, where RAW_DIR is the
+directory scripts/run_scaling.sh wrote (probes + four pairing JSONL
+files). Run from the repo root; SCALING.json is read (for the fields
+carried over) and rewritten in place.
+
+The committed SCALING.json is the round-5 measurement (first-action on
+the fresh VM, per round-4 VERDICT item 1: probes + four pairings before
+any other job warmed the box; all runs on the same shared /root/scale_corpus_r5 parquet — 492,785 files,
 2,770,475 scored pairs — sequential children on an otherwise-idle box,
 cluster checksum identical to rounds 2-4):
 
@@ -27,8 +32,6 @@ from __future__ import annotations
 import json
 import sys
 
-RAW = "scaling_r5_raw"
-
 
 def load(path: str):
     rows = [json.loads(ln) for ln in open(path) if ln.strip()]
@@ -48,17 +51,21 @@ def pair_block(s, pinned):
 
 
 def main() -> int:
-    probe = json.load(open(f"{RAW}/bandwidth_probe.json"))
+    if len(sys.argv) != 2:
+        print("usage: python scripts/merge_scaling.py RAW_DIR", file=sys.stderr)
+        return 2
+    raw = sys.argv[1].rstrip("/")
+    probe = json.load(open(f"{raw}/bandwidth_probe.json"))
     bw_ceiling = probe["machine_parallel_eff_bandwidth"]
     try:
-        probe_post = json.load(open(f"{RAW}/bandwidth_probe_post.json"))
+        probe_post = json.load(open(f"{raw}/bandwidth_probe_post.json"))
     except FileNotFoundError:
         probe_post = None
 
-    un14_c, un14 = load(f"{RAW}/unpinned_1_4.jsonl")
-    pin14_c, pin14 = load(f"{RAW}/pinned_1_4.jsonl")
-    un28_c, un28 = load(f"{RAW}/unpinned_2_8.jsonl")
-    pin28_c, pin28 = load(f"{RAW}/pinned_2_8.jsonl")
+    un14_c, un14 = load(f"{raw}/unpinned_1_4.jsonl")
+    pin14_c, pin14 = load(f"{raw}/pinned_1_4.jsonl")
+    un28_c, un28 = load(f"{raw}/unpinned_2_8.jsonl")
+    pin28_c, pin28 = load(f"{raw}/pinned_2_8.jsonl")
     prev = json.load(open("SCALING.json"))
 
     all_children = (
@@ -197,9 +204,9 @@ def main() -> int:
             **prev["sensitivity_smaller_corpus"]},
         "measurement_hygiene": prev["measurement_hygiene"],
         "reproduce": (
-            "bash scripts/run_scaling_r5.sh (cold box; datagen once via "
-            "--keep-input, then four pairings + post probe; merge with "
-            "python scripts/merge_scaling_r5.py)"
+            f"bash scripts/run_scaling.sh {raw} (cold box; datagen once "
+            "via --keep-input, then four pairings + post probe; merge with "
+            f"python scripts/merge_scaling.py {raw})"
         ),
         "host": "32-vCPU VM (round-5 host), single JVM local mode",
         "measured_round": 5,

@@ -1,11 +1,13 @@
 #!/bin/bash
-# Round-5 first-action scaling measurement (VERDICT r4 item #1).
+# Scaling measurement for SCALING.json.
 # Runs on a COLD box: datagen once, host probes, then four N->4N
 # pairings (unpinned+pinned, 1->4 and 2->8) on the same corpus.
 # Nothing else may run concurrently (memory-bandwidth contamination).
+# Usage: bash scripts/run_scaling.sh RAW_DIR
+#   then: python scripts/merge_scaling.py RAW_DIR
 set -u
-cd /root/repo
-OUT=scaling_r5_raw
+cd "$(dirname "$0")/.."
+OUT=${1:?usage: run_scaling.sh RAW_DIR}
 mkdir -p "$OUT"
 CORPUS=/root/scale_corpus_r5
 export SCALE_ENTITIES=240000 SCALE_HOT_FAMILY=2000

@@ -170,15 +170,16 @@ def main() -> int:
     # density evidence: output pairs per input row must hold ~constant
     # across the scale-up, or the per-row wall ratios above are
     # measuring data drift instead of plan cost (untimed)
-    out["density"] = {}
-    for name, per in (("er_lsh_band_pairs", 5000), ("dedup_minhash_lsh", 5000),
-                      ("dedup_simhash_pairs", 5000)):
+    docs01 = spark.read.parquet(f"{sf01}/documents.parquet").count()
+    docs10 = spark.read.parquet(f"{sf10}/documents.parquet").count()
+    out["density"] = {"documents_sf01": docs01, "documents_sf10": docs10}
+    for name in ("er_lsh_band_pairs", "dedup_minhash_lsh", "dedup_simhash_pairs"):
         c01 = qs[name](spark, sf01).count()
         c10 = qs[name](spark, sf10).count()
         out["density"][name] = {
             "pairs_sf01": c01, "pairs_sf10": c10,
-            "per_row_sf01": round(c01 / per, 4),
-            "per_row_sf10": round(c10 / (per * FACTOR), 4),
+            "per_row_sf01": round(c01 / docs01, 4),
+            "per_row_sf10": round(c10 / docs10, 4),
         }
 
     import bench

@@ -160,6 +160,15 @@ def main() -> int:
                 print(json.dumps({"error": proc.stderr[-400:]}))
                 return 1
             results[cores] = json.loads(proc.stdout.strip().splitlines()[-1])
+            if not results[cores]["rows_per_sec"]:
+                print(json.dumps({
+                    "error": f"rows_per_sec is "
+                             f"{results[cores]['rows_per_sec']!r} at {cores} "
+                             "cores (no busy trigger time or no input rows); "
+                             "efficiency undefined",
+                    "child": results[cores],
+                }))
+                return 1
 
         eff = (
             (results[hi]["rows_per_sec"] / results[lo]["rows_per_sec"])

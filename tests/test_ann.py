@@ -122,7 +122,9 @@ def test_lsh_parity_recall_and_flow(spark, emb):
     recall floor as the gaussian-plane kernel (Achlioptas 2001: ±1
     projections preserve the sign statistics)."""
     exact = ann.cosine_topk(emb, k=5)
-    approx = ann.lsh_topk_parity(emb, k=5, n_planes=6, n_tables=8, dim=16)
+    approx = ann.lsh_topk(
+        emb, k=5, n_planes=6, n_tables=8, dim=16, planes="rademacher"
+    )
     r = ann.recall_vs_exact(approx, exact)
     assert r >= 0.7, r
 

@@ -7,24 +7,25 @@ from blink_spark.operators import blocking
 
 
 def test_salt_hot_blocks_respects_budget(spark):
-    # one hot block of 1000 rows, one small block of 5
-    rows = [("hot", i) for i in range(1000)] + [("cold", 10_000 + i) for i in range(5)]
-    df = spark.createDataFrame(rows, "block_key string, file_id long")
+    # one hot block of 1000 rows (key 1), one small block of 5 (key 2)
+    rows = [(1, i) for i in range(1000)] + [(2, 10_000 + i) for i in range(5)]
+    df = spark.createDataFrame(rows, "block_key long, file_id long")
     budget = 5000  # rows_budget = sqrt(2*5000) = 100
     salted = blocking.salt_hot_blocks(df, "file_id", pair_budget=budget)
-    sizes = salted.groupBy("block_key").count().collect()
-    hot_sizes = [r["count"] for r in sizes if r["block_key"].startswith("hot|")]
-    cold = [r for r in sizes if r["block_key"].startswith("cold|")]
+    sizes = {r["block_key"]: r["count"] for r in salted.groupBy("block_key").count().collect()}
+    assert sizes.pop(2) == 5, "a small block keeps its key"
+    assert 1 not in sizes, "the hot block's key is replaced by salted keys"
+    hot_sizes = list(sizes.values())
     assert len(hot_sizes) >= 5, "hot block must be split"
     assert max(hot_sizes) * (max(hot_sizes) - 1) / 2 <= budget * 2.2  # hash imbalance slack
-    assert len(cold) == 1 and cold[0]["count"] == 5
     # row preservation
+    assert sum(hot_sizes) == 1000
     assert salted.count() == 1005
 
 
 def test_salting_deterministic_across_partitioning(spark):
-    rows = [("hot", i) for i in range(500)]
-    df = spark.createDataFrame(rows, "block_key string, file_id long")
+    rows = [(7, i) for i in range(500)]
+    df = spark.createDataFrame(rows, "block_key long, file_id long")
     a = sorted(
         (r["block_key"], r["file_id"])
         for r in blocking.salt_hot_blocks(df.repartition(3), "file_id", 1000).collect()
@@ -34,6 +35,7 @@ def test_salting_deterministic_across_partitioning(spark):
         for r in blocking.salt_hot_blocks(df.repartition(11), "file_id", 1000).collect()
     )
     assert a == b
+    assert len({k for k, _ in a}) > 1
 
 
 def test_block_stats(spark):

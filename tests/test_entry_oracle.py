@@ -37,6 +37,10 @@ FAST_QUERIES = [
     "er_sorted_neighborhood",
     "er_fs_weights",
     "eval_bcubed",
+    # the sign-LSH flows run by ann_lsh_topk / dedup_embedding_lsh,
+    # with Rademacher planes
+    "ann_lsh_parity",
+    "dedup_embedding_lsh_parity",
 ]
 
 pytestmark = pytest.mark.skipif(

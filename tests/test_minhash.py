@@ -1,60 +1,30 @@
-"""MinHash kernel vs pure-Python oracle; determinism; LSH banding."""
+"""LSH banding and the empty-doc sentinel, checked on the ``bands`` /
+``minhash`` outputs of the fused stage-1 kernel (its agreement with the
+pure-Python oracles and its determinism across partitionings are in
+test_signature_features.py)."""
 
-import random
-
-from pyspark.sql import functions as F
-
-from blink_spark.functions import text
-from blink_spark.functions.minhash import band_keys, minhash_py, minhash_signature_udf
+from blink_spark.functions.minhash import content_signature_features_udf
 
 
-def _sig_df(spark, docs, n_hashes=32, seed=42):
-    df = spark.createDataFrame(docs, "id int, s string")
-    hs = df.select("id", text.token_hashes(text.shingles(text.tokenize("s"), 3)).alias("h"))
-    sig = hs.select(
-        "id", F.col("h"), minhash_signature_udf(n_hashes, seed)(F.col("h")).alias("sig")
+def _features(spark, docs, n_hashes, bands, rows_per_band):
+    df = spark.createDataFrame(
+        [(i, s, "l") for i, s in docs], "id int, s string, lang string"
     )
-    return {r["id"]: (list(r["h"]), list(r["sig"])) for r in sig.collect()}
-
-
-def test_udf_matches_python_oracle(spark):
-    rng = random.Random(7)
-    docs = [
-        (i, " ".join(rng.choice("alpha beta gamma delta eps zeta eta".split()) for _ in range(rng.randint(0, 40))))
-        for i in range(25)
-    ]
-    got = _sig_df(spark, docs)
-    for i, (h, sig) in got.items():
-        assert sig == minhash_py(h, 32, 42), i
-
-
-def test_signature_deterministic_across_partitioning(spark):
-    docs = [(i, f"tok{i} " * 10 + "shared words here") for i in range(50)]
-    df = spark.createDataFrame(docs, "id int, s string")
-    udf = minhash_signature_udf(16, 42)
-
-    def sigs(parts):
-        return {
-            r["id"]: tuple(r["sig"])
-            for r in df.repartition(parts)
-            .select("id", udf(text.token_hashes(text.shingles(text.tokenize("s"), 3))).alias("sig"))
-            .collect()
-        }
-
-    assert sigs(2) == sigs(11)
+    udf = content_signature_features_udf(
+        n_hashes, 42, shingle_k=3, bands=bands, rows_per_band=rows_per_band
+    )
+    return {
+        r["id"]: r["ft"] for r in df.select("id", udf("s", "lang").alias("ft")).collect()
+    }
 
 
 def test_similar_docs_share_bands(spark):
     base = " ".join(f"w{i}" for i in range(200))
     near = base.replace("w100", "x100")  # tiny edit
     far = " ".join(f"z{i}" for i in range(200))
-    got = _sig_df(spark, [(0, base), (1, near), (2, far)], n_hashes=32)
-    df = spark.createDataFrame(
-        [(i, got[i][1]) for i in got], "id int, sig array<bigint>"
-    )
-    bands = {
-        r["id"]: list(r["b"]) for r in df.select("id", band_keys(F.col("sig"), 8, 4).alias("b")).collect()
-    }
+    got = _features(spark, [(0, base), (1, near), (2, far)], 32, 8, 4)
+    bands = {i: ft["bands"] for i, ft in got.items()}
+    assert all(len(b) == 8 for b in bands.values())
     shared_near = sum(1 for x, y in zip(bands[0], bands[1]) if x == y)
     shared_far = sum(1 for x, y in zip(bands[0], bands[2]) if x == y)
     assert shared_near >= 1
@@ -62,6 +32,8 @@ def test_similar_docs_share_bands(spark):
 
 
 def test_empty_doc_sentinel_signature(spark):
-    got = _sig_df(spark, [(0, ""), (1, "")], n_hashes=8)
-    assert got[0][1] == got[1][1]
-    assert all(v >= (1 << 61) for v in got[0][1])
+    got = _features(spark, [(0, ""), (1, "")], 8, 2, 4)
+    assert got[0]["minhash"] == got[1]["minhash"]
+    assert all(v >= (1 << 61) for v in got[0]["minhash"])
+    # the sentinel signature bands like any other: empty docs collide
+    assert got[0]["bands"] == got[1]["bands"]
