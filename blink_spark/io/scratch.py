@@ -48,9 +48,10 @@ def release(path: str) -> None:
 def spill(df: DataFrame, path: str) -> DataFrame:
     """Materialize df to parquet and return the re-read — a durable
     stage boundary that cuts lineage and stops multi-consumer plans
-    from recomputing upstream UDFs."""
+    from recomputing upstream UDFs. The re-read takes df's schema
+    rather than inferring it, which would cost a Spark job."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def spill_scratch(df: DataFrame, name: str = "t") -> tuple[DataFrame, str]:

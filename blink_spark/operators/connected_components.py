@@ -11,9 +11,16 @@ eval_cluster_linking.py:411-415, becomes localCheckpoint/checkpoint).
 
   * ``alternating`` — large-star / small-star (Kiveris et al., 2014,
     "Connected Components in MapReduce and Beyond"): O(log n) rounds
-    on pathological chains; the 100-TB-safe default.
+    on pathological chains; the 100-TB-safe default. A round is two
+    window minimums over ``partitionBy(u)`` and one ``distinct``.
   * ``hashmin`` — min-label propagation; O(diameter) rounds, cheapest
     per-round; clone-family graphs are near-cliques so diameter ~ 2.
+
+Each round runs one Spark action, its checkpoint write: the loop's
+convergence signature rides on that write via ``DataFrame.observe``
+(``observed_checkpoint``). So a checkpointer must EXECUTE its frame —
+a lazy one would block ``Observation.get``; every checkpointer in this
+repo is an eager parquet write.
 
 Component label = min node id in the component (order-free, so results
 are identical at any parallelism — required by the scaling check).
@@ -23,8 +30,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from blink_spark.io import scratch
 
 
 @dataclass
@@ -54,9 +63,7 @@ def make_parquet_checkpointer(scratch_dir: str, keep_last: int = 2, name: str = 
 
     def ckpt(df: DataFrame) -> DataFrame:
         counter["n"] += 1
-        path = f"{scratch_dir}/{name}_{counter['n']}"
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
+        out = scratch.spill(df, f"{scratch_dir}/{name}_{counter['n']}")
         stale = counter["n"] - keep_last
         if stale >= 1:
             shutil.rmtree(f"{scratch_dir}/{name}_{stale}", ignore_errors=True)
@@ -69,9 +76,21 @@ def scratch_parquet_checkpointer(name: str = "cc_iter", keep_last: int = 2):
     """A parquet checkpointer on a fresh session-scoped scratch dir
     (removed at interpreter exit) — the default for every iterative
     operator when the caller doesn't supply a durable location."""
-    from blink_spark.io.scratch import scratch_dir
+    return make_parquet_checkpointer(scratch.scratch_dir(), keep_last=keep_last, name=name)
 
-    return make_parquet_checkpointer(scratch_dir(), keep_last=keep_last, name=name)
+
+def observed_checkpoint(checkpoint_fn, df: DataFrame, *exprs: Column) -> tuple[DataFrame, dict]:
+    """``checkpoint_fn(df)`` plus the aggregates ``exprs``, keyed by
+    alias, over the rows its write saw — a convergence signature at no
+    extra Spark action. ``checkpoint_fn`` must execute the frame."""
+    obs = Observation()
+    out = checkpoint_fn(df.observe(obs, *exprs))
+    return out, obs.get
+
+
+def exact_sum(c: Column) -> Column:
+    """SUM as DECIMAL(38,0): exact (no BIGINT wrap-around), 0 on no rows."""
+    return F.coalesce(F.sum(c.cast("decimal(38,0)")), F.lit(0))
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -81,46 +100,30 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).where(F.col("u") != F.col("v"))
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _edge_signature() -> tuple[Column, Column]:
+    return F.count(F.lit(1)).alias("n"), exact_sum(F.xxhash64("u", "v")).alias("h")
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """For each u: connect every strictly-larger neighbor to
-    min(N(u) ∪ {u}). Output edges oriented (big -> small)."""
-    nbr = _symmetrize(edges)
-    mins = (
-        nbr.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
-    return (
-        nbr.join(mins, "u")
+def _alternating_round(edges: DataFrame) -> DataFrame:
+    """Large star then small star over oriented (u > v) edges. Large:
+    link each strictly larger neighbour of u to min(N(u) ∪ {u}), output
+    oriented and not deduplicated (duplicates never change a window
+    minimum). Small: link u and each smaller neighbour to min(N(u))."""
+    by_u = Window.partitionBy("u")
+    large = (
+        _symmetrize(edges)
+        .withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+    star = large.withColumn("m", F.min("v").over(by_u))
+    links = F.array(F.struct(F.col("v").alias("u"), "m"), F.struct("u", "m"))
+    return (
+        star.select(F.inline(links))
+        .select("u", F.col("m").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Orient (big -> small); for each u connect all smaller neighbors
-    and u itself to the minimum neighbor."""
-    e = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    mins = e.groupBy("u").agg(F.min("v").alias("m"))
-    with_min = e.join(mins, "u")
-    link_nbrs = (
-        with_min.where(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    link_self = mins.select(F.col("u"), F.col("m").alias("v"))
-    return link_nbrs.unionByName(link_self).where(F.col("u") != F.col("v")).distinct()
 
 
 def connected_components(
@@ -132,7 +135,10 @@ def connected_components(
 ) -> DataFrame:
     """edges(id_a, id_b) -> (id, component) for every node incident to
     an edge. Component id = min member id. Deterministic under any
-    partitioning/parallelism."""
+    partitioning/parallelism. One checkpoint write per round and no
+    other action; the result is lazy over the last round's table.
+    ``checkpoint_fn`` (df -> df) must execute its frame, as
+    ``make_parquet_checkpointer`` does (see the module docstring)."""
     if stats is None:
         stats = CCStats()
     stats.algorithm = algorithm
@@ -157,57 +163,43 @@ def _size_partitions(n_edges: int, spark) -> int:
 
 
 def _cc_alternating(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
-    cur = (
-        edges.select(
-            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    cur = _checkpoint(cur)
+    oriented = edges.select(
+        F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
+    ).where(F.col("u") != F.col("v")).distinct()
+    cur, sig = observed_checkpoint(_checkpoint, oriented, *_edge_signature())
     spark = cur.sparkSession
-    nparts = _size_partitions(cur.count(), spark)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
+    # the loop sizes its own shuffles; AQE would only split each round's
+    # write into one job per shuffle stage
+    scoped = {
+        "spark.sql.shuffle.partitions": str(_size_partitions(sig["n"], spark)),
+        "spark.sql.adaptive.enabled": "false",
+    }
+    restore = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
     try:
-        # checkpoint inside the narrowed-partitions scope so the final
-        # aggregation also runs at graph-sized parallelism
-        return _checkpoint(
-            _cc_alternating_loop(cur, max_iterations, stats, _checkpoint)
-        )
+        for it in range(max_iterations):
+            cur, new_sig = observed_checkpoint(
+                _checkpoint, _alternating_round(cur), *_edge_signature()
+            )
+            stats.iterations = it + 1
+            stats.rounds.append({"iter": it + 1, "edges": new_sig["n"]})
+            if new_sig == sig:
+                break
+            sig = new_sig
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
-def _cc_alternating_loop(cur: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
-    prev_sig = _edge_checksum(cur)
-    for it in range(max_iterations):
-        cur = _checkpoint(_small_star(_large_star(cur)))
-        sig = _edge_checksum(cur)
-        stats.iterations = it + 1
-        stats.rounds.append({"iter": it + 1, "edges": sig[0]})
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        for k, v in restore.items():
+            spark.conf.set(k, v)
     # converged: star edges (node -> root); roots label themselves
-    members = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = cur.select(F.col("v").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    return (
-        members.unionByName(roots)
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )
+    labelled = cur.unionByName(cur.select(F.col("v").alias("u"), "v"))
+    return labelled.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
 
 
 def _cc_hashmin(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
     # sym is STATIC input read by every iteration — it must live
     # outside the checkpointer's keep_last rotation (which would GC it
     # after two label checkpoints); one non-rotating scratch spill
-    from blink_spark.io.scratch import spill_scratch
-
-    sym, _ = spill_scratch(_symmetrize(edges).distinct(), "cc_hashmin_sym")
+    sym, _ = scratch.spill_scratch(_symmetrize(edges).distinct(), "cc_hashmin_sym")
     labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
@@ -228,10 +220,10 @@ def _cc_hashmin(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoi
                 ).alias("label"),
             )
         )
-        labels = _checkpoint(labels)
-        cur_sum = labels.agg(
-            F.coalesce(F.sum(F.col("label").cast("decimal(38,0)")), F.lit(0))
-        ).collect()[0][0]
+        labels, obs = observed_checkpoint(
+            _checkpoint, labels, exact_sum(F.col("label")).alias("s")
+        )
+        cur_sum = obs["s"]
         stats.iterations = it + 1
         stats.rounds.append({"iter": it + 1, "label_sum": str(cur_sum)})
         if prev_sum is not None and cur_sum == prev_sum:

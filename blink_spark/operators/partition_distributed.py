@@ -74,13 +74,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-
-def _ckpt(name: str):
-    from blink_spark.operators.connected_components import (
-        scratch_parquet_checkpointer,
-    )
-
-    return scratch_parquet_checkpointer(name=name)
+from blink_spark.operators.connected_components import (
+    exact_sum,
+    observed_checkpoint,
+    scratch_parquet_checkpointer,
+)
 
 
 def _propagate_min(
@@ -97,8 +95,9 @@ def _propagate_min(
     nodes(node_id, <label_col>) with BIGINT labels; edges(src, dst).
     forward=True: labels flow src->dst (label(v) = min over predecessors
     and self); forward=False: dst->src. Monotone non-increasing BIGINT
-    labels, so the exact SUM(label) aggregate is a convergence check
-    that costs one scan and no extra shuffle. Returns nodes at fixpoint.
+    labels, so the exact SUM(label), observed during each checkpoint
+    write, is a convergence check that costs no extra Spark action.
+    Returns nodes at fixpoint.
 
     Hop count to converge is the graph's directed diameter — same
     O(rounds) regime as the hashmin CC loop (connected_components.py).
@@ -117,7 +116,7 @@ def _propagate_min(
     the repo.
     """
     up, down = ("src", "dst") if forward else ("dst", "src")
-    ckpt = _ckpt(name)
+    ckpt = scratch_parquet_checkpointer(name=name)
     cur = ckpt(nodes.select("node_id", label_col))
     prev_sum = None
     hops_done = 0
@@ -133,12 +132,8 @@ def _propagate_min(
                 .agg(F.min(label_col).alias(label_col))
             )
             hops_done += 1
-        cur = ckpt(cur)
-        s = cur.agg(
-            F.coalesce(
-                F.sum(F.col(label_col).cast("decimal(38,0)")), F.lit(0)
-            ).alias("s")
-        ).collect()[0]["s"]
+        cur, obs = observed_checkpoint(ckpt, cur, exact_sum(F.col(label_col)).alias("s"))
+        s = obs["s"]
         if prev_sum is not None and s == prev_sum:
             return cur
         prev_sum = s
@@ -287,30 +282,33 @@ def _assign_by_doubling(
     chain halves, so depth-D chains resolve in ceil(log2 D) self-join
     rounds (the kept graph is acyclic in-trees rooted at entities —
     guarded anyway by the round cap)."""
-    ckpt = _ckpt("g4_chase")
+    ckpt = scratch_parquet_checkpointer(name="g4_chase")
+    undone = F.count(F.when(~F.col("done"), 1)).alias("undone")
     ent = flags.select(
         F.col("node_id").alias("cur"),
         F.col("is_entity").alias("cur_is_ent"),
     )
-    state = ckpt(
+    state, obs = observed_checkpoint(
+        ckpt,
         kept.select(F.col("src").alias("node_id"), F.col("dst").alias("cur"))
         .join(ent, "cur", "left")
         .select(
             "node_id",
             "cur",
             F.coalesce("cur_is_ent", F.lit(False)).alias("done"),
-        )
+        ),
+        undone,
     )
     for _ in range(max_iterations):
-        undone = state.where(~F.col("done")).count()
-        if undone == 0:
+        if obs["undone"] == 0:
             return state.select("node_id", F.col("cur").alias("entity_id"))
         hop = state.select(
             F.col("node_id").alias("cur"),
             F.col("cur").alias("nxt"),
             F.col("done").alias("nxt_done"),
         )
-        state = ckpt(
+        state, obs = observed_checkpoint(
+            ckpt,
             state.join(hop, "cur", "left").select(
                 "node_id",
                 F.when(F.col("done") | F.col("nxt").isNull(), F.col("cur"))
@@ -320,7 +318,8 @@ def _assign_by_doubling(
                     F.col("done")
                     | F.coalesce(F.col("nxt_done"), F.lit(False))
                 ).alias("done"),
-            )
+            ),
+            undone,
         )
     raise ValueError(
         "_assign_by_doubling: chains unresolved after "

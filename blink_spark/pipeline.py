@@ -268,11 +268,11 @@ class ERPipeline:
         """Run all stages. With a store, each stage persists to its
         table and an existing table short-circuits recompute (the
         reference's pickle-memoization contract). Without a store,
-        stages form one lazy plan, except multi-consumer tables (s1,
-        edges) which spill to scratch parquet — measured here, both
-        localCheckpoint and the columnar cache burn far more CPU than
-        a parquet round-trip for these shapes, and parquet is the same
-        mechanism the durable store uses anyway."""
+        stages form one lazy plan, except multi-consumer tables (s1
+        signatures, s2 scores) which spill to scratch parquet —
+        measured here, both localCheckpoint and the columnar cache burn
+        far more CPU than a parquet round-trip for these shapes, and
+        parquet is the same mechanism the durable store uses anyway."""
         from blink_spark.io import scratch as _scratch
 
         use_entity = self.cfg.partition == "entity"
@@ -343,7 +343,8 @@ class ERPipeline:
             return res
         pairs = stage("s2_pairs", lambda: self.s2_pairs(blocks))
         scores = stage("s2_scores", lambda: self.s2_scores(pairs, s1), True)
-        edges = stage("s2_edges", lambda: self.s2_edges(scores), True)
+        # not spilled: CC is its only consumer and checkpoints its own copy
+        edges = stage("s2_edges", lambda: self.s2_edges(scores))
         if until == "score":
             return res
         cc_stats = CCStats()

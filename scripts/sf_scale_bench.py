@@ -2,6 +2,8 @@
 sf0.1 and sf1.0 (scripts/make_sf1.py — a deterministic 10x scale-up of
 the driver tables that preserves per-row candidate density), reporting
 wall at both scales and the per-row cost ratio wall10/(10*wall01).
+Each wall is the median of REPEATS runs, and each sf0.1/sf1.0 pair is
+bracketed by two ``bench.calibrate_host()`` probes stored with the rung.
 
 Two suites, different contracts:
 
@@ -30,6 +32,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import statistics
 import sys
 import time
 
@@ -72,10 +75,33 @@ EXCLUDED = {
 }
 
 FACTOR = 10
+REPEATS = 3
 
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def timed_pair(thunks: dict) -> dict:
+    """Median-of-REPEATS wall for each scale's thunk, the pair bracketed
+    by host calib probes so a per-row ratio can be read against host
+    drift during the rung."""
+    import bench
+
+    row: dict = {"calib_sec": [bench.calibrate_host()["calib_sec"]]}
+    for tag, thunk in thunks.items():
+        runs = []
+        for _ in range(REPEATS):
+            t0 = time.time()
+            materialize(thunk())
+            runs.append(round(time.time() - t0, 3))
+        row[tag] = statistics.median(runs)
+        row[f"{tag}_runs"] = runs
+    row["calib_sec"].append(bench.calibrate_host()["calib_sec"])
+    ratio = row["sf10"] / row["sf01"]
+    row["ratio"] = round(ratio, 2)
+    row["per_row_ratio"] = round(ratio / FACTOR, 3)
+    return row
 
 
 def ann_scale_suite(spark, sf_dir: str, scaled: bool):
@@ -133,39 +159,25 @@ def main() -> int:
         "excluded_by_design": EXCLUDED,
     }
 
-    for name in REGISTRY_SUITE:
-        walls = {}
-        for tag, d in (("sf01", sf01), ("sf10", sf10)):
-            t0 = time.time()
-            materialize(qs[name](spark, d))
-            walls[tag] = round(time.time() - t0, 3)
-        ratio = walls["sf10"] / walls["sf01"]
-        out["registry"][name] = {
-            **walls,
-            "ratio": round(ratio, 2),
-            "per_row_ratio": round(ratio / FACTOR, 3),
-        }
-        print(f"{name:24s} {walls['sf01']:7.2f}s -> {walls['sf10']:7.2f}s  "
-              f"x{ratio:5.2f}  per-row x{ratio / FACTOR:.3f}", file=sys.stderr)
+    def report(name: str, row: dict) -> None:
+        print(f"{name:24s} {row['sf01']:7.2f}s -> {row['sf10']:7.2f}s  "
+              f"x{row['ratio']:5.2f}  per-row x{row['per_row_ratio']:.3f}  "
+              f"calib {row['calib_sec']}", file=sys.stderr)
 
-    for tag, d, scaled in (("sf01", sf01, False), ("sf10", sf10, True)):
-        suite, params = ann_scale_suite(spark, d, scaled)
-        if tag == "sf01":
-            out["ann_scale"]["params_sf01"] = params
-        else:
-            out["ann_scale"]["params_sf10"] = params
-        for name, thunk in suite.items():
-            t0 = time.time()
-            materialize(thunk())
-            out["ann_scale"].setdefault(name, {})[tag] = round(time.time() - t0, 3)
-    for name in list(out["ann_scale"]):
-        row = out["ann_scale"][name]
-        if isinstance(row, dict) and "sf01" in row and "sf10" in row:
-            ratio = row["sf10"] / row["sf01"]
-            row["ratio"] = round(ratio, 2)
-            row["per_row_ratio"] = round(ratio / FACTOR, 3)
-            print(f"{name:24s} {row['sf01']:7.2f}s -> {row['sf10']:7.2f}s  "
-                  f"x{ratio:5.2f}  per-row x{ratio / FACTOR:.3f}", file=sys.stderr)
+    for name in REGISTRY_SUITE:
+        row = timed_pair({
+            "sf01": lambda: qs[name](spark, sf01),
+            "sf10": lambda: qs[name](spark, sf10),
+        })
+        out["registry"][name] = row
+        report(name, row)
+
+    suite01, out["ann_scale"]["params_sf01"] = ann_scale_suite(spark, sf01, False)
+    suite10, out["ann_scale"]["params_sf10"] = ann_scale_suite(spark, sf10, True)
+    for name in suite01:
+        row = timed_pair({"sf01": suite01[name], "sf10": suite10[name]})
+        out["ann_scale"][name] = row
+        report(name, row)
 
     # density evidence: output pairs per input row must hold ~constant
     # across the scale-up, or the per-row wall ratios above are
@@ -182,9 +194,6 @@ def main() -> int:
             "per_row_sf10": round(c10 / docs10, 4),
         }
 
-    import bench
-
-    out["calibration"] = bench.calibrate_host()
     with open(os.path.join(ROOT, "SF1BENCH.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out))

@@ -68,3 +68,70 @@ def test_cc_stable_under_repartition(spark):
         for r in connected_components(df.repartition(17)).collect()
     )
     assert a == b
+
+
+def _awkward_graph(kind):
+    """Legal but awkward edge lists: a loop must not depend on edges
+    being distinct, oriented, non-self or short-diameter."""
+    rng = random.Random(11)
+    if kind == "duplicates":
+        base = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
+        return base + base + [(b, a) for a, b in base]
+    if kind == "self_loops":
+        return [(i, i) for i in range(20)]
+    if kind == "star500":
+        leaves = rng.sample([i for i in range(1000) if i != 777], 500)
+        return [(777, x) if i % 2 else (x, 777) for i, x in enumerate(leaves)]
+    if kind == "chain2000":
+        perm = list(range(2000))
+        rng.shuffle(perm)
+        return [(perm[i], perm[i + 1]) for i in range(1999)]
+    raise ValueError(kind)
+
+
+# hashmin needs O(diameter) rounds, ~1,000 on the permuted chain, so the
+# chain runs the alternating algorithm only (test_cc_long_chain covers
+# hashmin on a chain)
+@pytest.mark.parametrize(
+    "alg,kind,iterations",
+    [
+        ("alternating", "duplicates", 5),
+        ("hashmin", "duplicates", 14),
+        ("alternating", "self_loops", 1),
+        ("hashmin", "self_loops", 2),
+        ("alternating", "star500", 2),
+        ("hashmin", "star500", 3),
+        ("alternating", "chain2000", 10),
+    ],
+)
+def test_cc_awkward_graphs(spark, alg, kind, iterations):
+    """Union-find labels, and the round count each algorithm takes."""
+    edges = _awkward_graph(kind)
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    st = CCStats()
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(df, algorithm=alg, stats=st).collect()
+    }
+    n = 1 + max(max(e) for e in edges)
+    assert got == _oracle_labels([e for e in edges if e[0] != e[1]], n)
+    assert st.iterations == iterations
+
+
+def test_cc_alternating_job_budget(spark):
+    """One alternating call on a 2-round graph, result consumed: a round
+    is one checkpoint write with its convergence signature observed on
+    it, so there are no per-round probe jobs and no final checkpoint."""
+    sc = spark.sparkContext
+    edges = [(b * 10 + i, b * 10 + i + 1) for b in range(50) for i in range(2)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long").cache()
+    df.count()
+    st = CCStats()
+    sc.setJobGroup("cc_job_budget", "cc_job_budget")
+    try:
+        rows = connected_components(df, stats=st).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    assert st.iterations == 2 and len(rows) == 150
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_job_budget")) <= 16
