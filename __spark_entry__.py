@@ -138,7 +138,7 @@ def _er_chain_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("doc_id").alias("id_a"), nxt.alias("id_b"))
         .where(F.col("id_b").isNotNull())
     )
-    comp = connected_components(edges, algorithm="alternating")
+    comp = connected_components(edges)
     return assign_clusters(docs.select("doc_id"), comp, "doc_id")
 
 
@@ -1115,22 +1115,11 @@ SELECT doc_id, lang FROM (
 """
 
 
-_FS_FIELDS = ["source", "size", "bucket"]
-_FS_M = {"source": 0.95, "size": 0.9, "bucket": 0.85}
-_FS_U = {"source": 0.25, "size": 0.1, "bucket": 0.35}
-
-
-def _er_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi-Sunter match weights (Fellegi & Sunter 1969; the Splink
-    model) over sorted-neighborhood candidates: per-field agreement
-    gammas (source equality, |n_chars| proximity, n_chars century
-    bucket) scored with pinned m/u — the log2 weights enter both
-    engines as identical float literals summed in field order, so the
-    oracle is exact. EM estimation of m/u is pytest-proven
-    (tests/test_fellegi_sunter.py: recovers the generating latent-class
-    parameters, bit-deterministic across partitioning)."""
-    from blink_spark.operators import fellegi_sunter as fs
-    from blink_spark.operators.pairs import sorted_neighborhood_pairs
+def _fs_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The FS queries' shared input: documents, and their
+    sorted-neighborhood (window 3 on n_chars within lang) candidate
+    pairs joined to both sides' source / n_chars."""
+    from blink_spark.operators.pairs import attach_features, sorted_neighborhood_pairs
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
@@ -1138,27 +1127,82 @@ def _er_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = sorted_neighborhood_pairs(
         d, "n_chars", id_col="doc_id", window=3, by="lang"
     ).select("id_a", "id_b")
-    fa = d.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("source").alias("source_a"),
-        F.col("n_chars").alias("n_chars_a"),
+    return d, attach_features(pairs, d, "doc_id", ["source", "n_chars"])
+
+
+def _fs_weight_sql(weights: dict[str, list[float]]) -> str:
+    """The level-weight sum in field order — the same literals the Spark
+    plan's ``fs.weight_col`` inlines, qrounded to 6 places. ::DOUBLE —
+    DuckDB would otherwise type the 17-digit literals as DECIMAL and
+    overflow in the qround multiply."""
+    terms = " + ".join(
+        "(CASE g_{f} {whens} ELSE 0.0::DOUBLE END)".format(
+            f=f,
+            whens=" ".join(
+                f"WHEN {l} THEN {w!r}::DOUBLE" for l, w in enumerate(ws)
+            ),
+        )
+        for f, ws in weights.items()
     )
-    fb = d.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("source").alias("source_b"),
-        F.col("n_chars").alias("n_chars_b"),
+    return f"(floor((0.0 + {terms}) * 1000000.0 + 0.5) / 1000000.0)"
+
+
+_FS_PAIRS_SQL = """
+nn AS (
+  SELECT doc_id,
+         lead(doc_id, 1) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n1,
+         lead(doc_id, 2) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n2
+  FROM documents
+), p AS (
+  SELECT least(doc_id, n1) AS id_a, greatest(doc_id, n1) AS id_b
+  FROM nn WHERE n1 IS NOT NULL
+  UNION ALL
+  SELECT least(doc_id, n2) AS id_a, greatest(doc_id, n2) AS id_b
+  FROM nn WHERE n2 IS NOT NULL
+)"""
+
+_FS_BUCKET_SQL = """(CASE WHEN CAST(floor(a.n_chars / 100.0) AS BIGINT)
+                    = CAST(floor(b.n_chars / 100.0) AS BIGINT)
+               THEN 1 ELSE 0 END)::BIGINT AS g_bucket"""
+
+_FS_M = {"source": 0.95, "size": 0.9, "bucket": 0.85}
+_FS_U = {"source": 0.25, "size": 0.1, "bucket": 0.35}
+
+
+def _fs_binary_weights() -> dict[str, list[float]]:
+    """Pinned binary m/u as one-level [P(disagree), P(agree)] lists."""
+    from blink_spark.operators.fellegi_sunter import level_weights
+
+    return level_weights(
+        {f: [1.0 - m, m] for f, m in _FS_M.items()},
+        {f: [1.0 - u, u] for f, u in _FS_U.items()},
     )
-    joined = pairs.join(fa, "id_a").join(fb, "id_b")
+
+
+def _er_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fellegi-Sunter match weights (Fellegi & Sunter 1969; the Splink
+    model) over sorted-neighborhood candidates: per-field binary
+    agreement gammas (source equality, |n_chars| proximity, n_chars
+    century bucket) scored with pinned m/u — the log2 weights enter both
+    engines as identical float literals summed in field order, so the
+    oracle is exact. EM estimation of m/u is pytest-proven
+    (tests/test_fellegi_sunter.py: recovers the generating latent-class
+    parameters, bit-deterministic across partitioning)."""
+    from blink_spark.operators import fellegi_sunter as fs
+
+    _, joined = _fs_candidates(spark, sf_dir)
     gammas = fs.attach_gammas(
         joined,
         {
-            "source": F.col("source_a") == F.col("source_b"),
-            "size": F.abs(F.col("n_chars_a") - F.col("n_chars_b")) <= 2,
-            "bucket": (F.col("n_chars_a") / 100).cast("long")
-            == (F.col("n_chars_b") / 100).cast("long"),
+            "source": [F.col("source_a") == F.col("source_b")],
+            "size": [F.abs(F.col("n_chars_a") - F.col("n_chars_b")) <= 2],
+            "bucket": [
+                (F.col("n_chars_a") / 100).cast("long")
+                == (F.col("n_chars_b") / 100).cast("long")
+            ],
         },
     )
-    w = fs.match_weight_col(_FS_FIELDS, fs.field_weights(_FS_M, _FS_U))
+    w = fs.weight_col(list(_FS_M), _fs_binary_weights())
     return gammas.select(
         "id_a",
         "id_b",
@@ -1170,46 +1214,21 @@ def _er_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _er_fs_weights_sql() -> str:
-    from blink_spark.operators.fellegi_sunter import field_weights
-
-    ws = field_weights(_FS_M, _FS_U)
-    # ::DOUBLE — DuckDB would otherwise type the 17-digit literals as
-    # DECIMAL and overflow in the qround multiply
-    terms = " + ".join(
-        f"(CASE WHEN g_{f} = 1 THEN {ws[f][0]!r}::DOUBLE "
-        f"ELSE {ws[f][1]!r}::DOUBLE END)"
-        for f in _FS_FIELDS
-    )
     return f"""
-WITH n AS (
-  SELECT doc_id,
-         lead(doc_id, 1) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n1,
-         lead(doc_id, 2) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n2
-  FROM documents
-), p AS (
-  SELECT least(doc_id, n1) AS id_a, greatest(doc_id, n1) AS id_b
-  FROM n WHERE n1 IS NOT NULL
-  UNION ALL
-  SELECT least(doc_id, n2) AS id_a, greatest(doc_id, n2) AS id_b
-  FROM n WHERE n2 IS NOT NULL
-), g AS (
+WITH {_FS_PAIRS_SQL}, g AS (
   SELECT p.id_a, p.id_b,
          (CASE WHEN a.source = b.source THEN 1 ELSE 0 END)::BIGINT AS g_source,
          (CASE WHEN abs(a.n_chars - b.n_chars) <= 2 THEN 1 ELSE 0 END)::BIGINT AS g_size,
-         (CASE WHEN CAST(floor(a.n_chars / 100.0) AS BIGINT)
-                    = CAST(floor(b.n_chars / 100.0) AS BIGINT)
-               THEN 1 ELSE 0 END)::BIGINT AS g_bucket
+         {_FS_BUCKET_SQL}
   FROM p JOIN documents a ON p.id_a = a.doc_id
          JOIN documents b ON p.id_b = b.doc_id
 )
 SELECT id_a, id_b, g_source, g_size, g_bucket,
-       (floor((0.0 + {terms}) * 1000000.0 + 0.5) / 1000000.0) AS weight
+       {_fs_weight_sql(_fs_binary_weights())} AS weight
 FROM g
 """
 
 
-_FS_ML_FIELDS = ["source", "size", "bucket"]
-_FS_ML_LEVELS = {"source": 2, "size": 2, "bucket": 1}
 _FS_ML_M = {
     "source": [0.02, 0.08, 0.90],
     "size": [0.05, 0.15, 0.80],
@@ -1236,29 +1255,12 @@ def _er_fs_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the fitted params enter both engines as identical literals."""
     from blink_spark.functions.similarity import jaro_winkler_udf
     from blink_spark.operators import fellegi_sunter as fs
-    from blink_spark.operators.pairs import sorted_neighborhood_pairs
 
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
+    d, joined = _fs_candidates(spark, sf_dir)
     n_records = d.count()
-    pairs = sorted_neighborhood_pairs(
-        d, "n_chars", id_col="doc_id", window=3, by="lang"
-    ).select("id_a", "id_b")
-    fa = d.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("source").alias("source_a"),
-        F.col("n_chars").alias("n_chars_a"),
-    )
-    fb = d.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("source").alias("source_b"),
-        F.col("n_chars").alias("n_chars_b"),
-    )
-    joined = pairs.join(fa, "id_a").join(fb, "id_b")
     jw = jaro_winkler_udf()
     dn = F.abs(F.col("n_chars_a") - F.col("n_chars_b"))
-    gam = fs.attach_gammas_multilevel(
+    gam = fs.attach_gammas(
         joined,
         {
             "source": [
@@ -1276,9 +1278,7 @@ def _er_fs_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", "source_a"
     )
     gam = gam.join(F.broadcast(tf), "source_a")
-    w = fs.multilevel_weight_col(
-        _FS_ML_FIELDS, fs.multilevel_weights(_FS_ML_M, _FS_ML_U)
-    )
+    w = fs.weight_col(list(_FS_ML_M), fs.level_weights(_FS_ML_M, _FS_ML_U))
     adj = fs.tf_adjustment_col(
         "source", 2, _FS_ML_U["source"][2], n_records
     )
@@ -1296,33 +1296,11 @@ def _er_fs_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _er_fs_multilevel_sql() -> str:
     import math as _math
 
-    from blink_spark.operators.fellegi_sunter import multilevel_weights
+    from blink_spark.operators.fellegi_sunter import level_weights
 
-    ws = multilevel_weights(_FS_ML_M, _FS_ML_U)
-    terms = " + ".join(
-        "(CASE g_{f} {whens} ELSE 0.0::DOUBLE END)".format(
-            f=f,
-            whens=" ".join(
-                f"WHEN {l} THEN {ws[f][l]!r}::DOUBLE"
-                for l in range(len(ws[f]))
-            ),
-        )
-        for f in _FS_ML_FIELDS
-    )
     lu = repr(_math.log2(_FS_ML_U["source"][2]))
     return f"""
-WITH nn AS (
-  SELECT doc_id,
-         lead(doc_id, 1) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n1,
-         lead(doc_id, 2) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS n2
-  FROM documents
-), p AS (
-  SELECT least(doc_id, n1) AS id_a, greatest(doc_id, n1) AS id_b
-  FROM nn WHERE n1 IS NOT NULL
-  UNION ALL
-  SELECT least(doc_id, n2) AS id_a, greatest(doc_id, n2) AS id_b
-  FROM nn WHERE n2 IS NOT NULL
-), g AS (
+WITH {_FS_PAIRS_SQL}, g AS (
   SELECT p.id_a, p.id_b, a.source AS source_a,
          (CASE WHEN a.source = b.source THEN 2
                WHEN jaro_winkler_similarity(a.source, b.source) >= 0.85 THEN 1
@@ -1330,9 +1308,7 @@ WITH nn AS (
          (CASE WHEN abs(a.n_chars - b.n_chars) <= 2 THEN 2
                WHEN abs(a.n_chars - b.n_chars) <= 20 THEN 1
                ELSE 0 END)::BIGINT AS g_size,
-         (CASE WHEN CAST(floor(a.n_chars / 100.0) AS BIGINT)
-                    = CAST(floor(b.n_chars / 100.0) AS BIGINT)
-               THEN 1 ELSE 0 END)::BIGINT AS g_bucket
+         {_FS_BUCKET_SQL}
   FROM p JOIN documents a ON p.id_a = a.doc_id
          JOIN documents b ON p.id_b = b.doc_id
 ), tf AS (
@@ -1340,7 +1316,7 @@ WITH nn AS (
   FROM documents GROUP BY 1
 )
 SELECT id_a, id_b, g_source, g_size, g_bucket,
-       (floor((0.0 + {terms}) * 1000000.0 + 0.5) / 1000000.0) AS weight,
+       {_fs_weight_sql(level_weights(_FS_ML_M, _FS_ML_U))} AS weight,
        (floor((CASE WHEN g_source = 2
                     THEN {lu}::DOUBLE
                          + log2((SELECT count(*) FROM documents)::DOUBLE)

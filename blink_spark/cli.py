@@ -48,8 +48,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="per-node edge cap; 0 = keep all edges above threshold "
                         "(default — top-k fractures clone subgroups larger than k)")
     p.add_argument("--pair-budget", type=int, default=100_000)
-    p.add_argument("--cc-algorithm", default="alternating",
-                   choices=["alternating", "hashmin"])
     p.add_argument("--eval-gold", action="store_true",
                    help="synthetic corpus only: print pairwise P/R/F1")
     # ---- entity-linking mode (two-table: mentions vs catalogue) ----
@@ -234,28 +232,30 @@ def run_fs(spark, args, files) -> dict:
         records,
         pairs,
         {
-            "size": (
+            "size": [
                 F.abs(F.col("n_chars_a") - F.col("n_chars_b"))
                 <= F.greatest(F.col("n_chars_a"), F.col("n_chars_b")) * 0.03
-            ),
-            "toks": F.abs(F.col("n_toks_a") - F.col("n_toks_b")) <= 4,
-            "sim": hamming(F.col("simhash_a"), F.col("simhash_b")) <= 12,
+            ],
+            "toks": [F.abs(F.col("n_toks_a") - F.col("n_toks_b")) <= 4],
+            "sim": [hamming(F.col("simhash_a"), F.col("simhash_b")) <= 12],
         },
         id_col="file_id",
         em_iters=15,
         threshold_p=args.fs_threshold,
     )
     clusters = res["clusters"]
+    fit = res["fit"]
     out = {
         "mode": "fs",
         "fs_threshold": args.fs_threshold,
         "n_records": clusters.count(),
         "n_clusters": clusters.select("cluster_id").distinct().count(),
+        # one-level comparisons: P(agree) is the top level's probability
         "em": {
-            "lambda": res["fit"]["lambda"],
-            "m": res["fit"]["m"],
-            "u": res["fit"]["u"],
-            "n_pairs": res["fit"]["n_pairs"],
+            "lambda": fit["lambda"],
+            "m": {f: p[-1] for f, p in fit["m"].items()},
+            "u": {f: p[-1] for f, p in fit["u"].items()},
+            "n_pairs": fit["n_pairs"],
         },
     }
     if args.eval_gold and args.synthetic_entities:
@@ -275,7 +275,6 @@ def main(argv: list[str] | None = None) -> int:
         threshold=args.threshold,
         top_k=args.top_k or None,
         pair_budget=args.pair_budget,
-        cc_algorithm=args.cc_algorithm,
     )
     if args.synthetic_entities:
         files = generate_files(

@@ -73,6 +73,7 @@ def canopy_blocks(
     n_candidates: int = 64,
     seed: int = 42,
     id_hash: str = "xxhash",
+    batch_size: int = 1024,
 ) -> DataFrame:
     """Canopy clustering as overlapping blocks (McCallum, Nigam & Ungar,
     KDD 2000) over an embedding column: cheap-similarity canopies whose
@@ -85,22 +86,33 @@ def canopy_blocks(
     sequentially — unrunnable and partition-dependent at scale — so the
     center pool is the repo's deterministic hash-min sample
     (n_candidates rows with smallest hash(id)), greedily suppressed in
-    hash order on the driver (bounded: n_candidates rows), then
-    broadcast; membership is one broadcast join + similarity filter.
-    Points no surviving center covers become their own singleton canopy
-    (cover-all guarantee). Deterministic at any parallelism.
+    (hash, id) order on the driver, then broadcast; membership is one
+    broadcast join + similarity filter. Points no surviving center
+    covers become their own singleton canopy (cover-all guarantee).
+    Deterministic at any parallelism.
+
+    The driver holds at most ``batch_size`` candidates at a time. A pool
+    that fits one batch costs one collect. A larger pool is spilled to
+    scratch parquet and consumed in (hash, id)-ordered batches; between
+    batches, candidates within s_tight of a center accepted in the last
+    batch are pruned IN SPARK by a broadcast anti-join (they would be
+    suppressed later anyway, so the prune preserves the result). The
+    result is EXACTLY the sequential greedy over the full pool at any
+    ``batch_size`` (the only divergence risk is a candidate whose
+    cosine sits within 1 ulp of s_tight across the numpy / JVM
+    kernels). Accepted centers must still fit a broadcast — inherent to
+    canopy membership itself, not to the suppression.
 
     Returns (block_key, <id_col>) rows — one per (point, canopy) —
     feeding pairs.candidate_pairs like any other blocking.
     """
+    import os
+
+    from blink_spark.functions.similarity import array_cosine
+    from blink_spark.io.scratch import release, scratch_dir, spill
+
     if not s_tight > s_loose:
         raise ValueError("s_tight must exceed s_loose (tight ⊂ loose)")
-    if n_candidates > _CANOPY_POOL_CAP:
-        raise ValueError(
-            f"canopy_blocks: n_candidates={n_candidates} exceeds the "
-            f"driver-greedy pool cap {_CANOPY_POOL_CAP}; use "
-            "canopy_blocks_distributed for pools that outgrow the driver"
-        )
     pool = (
         df.select(
             F.col(id_col).alias("cid"),
@@ -109,15 +121,47 @@ def canopy_blocks(
         )
         .orderBy("h", "cid")
         .limit(n_candidates)
-        .collect()
     )
-    centers = _suppress_greedy(
-        [(r["cid"], r["cvec"]) for r in pool], [], s_tight
-    )
-    return _canopy_membership(df, centers, s_loose, id_col, vec_col)
-
-
-_CANOPY_POOL_CAP = 100_000  # rows a single driver collect may hold
+    # the two limits fold into the pool's own top-k: one collect
+    batch = pool.limit(batch_size).collect()
+    remaining, spark, d = pool, df.sparkSession, None
+    accepted: list = []
+    rnd = 0
+    while True:
+        n_before = len(accepted)
+        accepted = _suppress_greedy(
+            [(r["cid"], r["cvec"]) for r in batch], accepted, s_tight
+        )
+        if len(batch) < batch_size or n_candidates <= batch_size:
+            break
+        last = batch[-1]
+        nxt = remaining.where(
+            (F.col("h") > F.lit(last["h"]))
+            | ((F.col("h") == F.lit(last["h"])) & (F.col("cid") > F.lit(last["cid"])))
+        )
+        new_vecs = [[float(x) for x in cv] for _, cv, _ in accepted[n_before:]]
+        if new_vecs:
+            nc = F.broadcast(
+                spark.createDataFrame(
+                    [(v,) for v in new_vecs], "ncvec array<double>"
+                )
+            )
+            supp = (
+                nxt.crossJoin(nc)
+                .where(array_cosine(F.col("cvec"), F.col("ncvec")) > F.lit(s_tight))
+                .select("cid")
+                .distinct()
+            )
+            nxt = nxt.join(supp, "cid", "left_anti")
+        # the rest of the pool goes to scratch parquet: every later
+        # batch reads a durable table, not the pool's growing lineage
+        d = d or scratch_dir()
+        rnd += 1
+        remaining = spill(nxt, os.path.join(d, f"round_{rnd}"))
+        batch = remaining.orderBy("h", "cid").limit(batch_size).collect()
+    if d is not None:
+        release(d)
+    return _canopy_membership(df, accepted, s_loose, id_col, vec_col)
 
 
 def _canopy_hash(id_col: str, seed: int, id_hash: str):
@@ -194,87 +238,3 @@ def _canopy_membership(
         )
     )
     return member.unionByName(singletons)
-
-
-def canopy_blocks_distributed(
-    df: DataFrame,
-    s_loose: float,
-    s_tight: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_candidates: int = 64,
-    seed: int = 42,
-    id_hash: str = "xxhash",
-    batch_size: int = 1024,
-) -> DataFrame:
-    """`canopy_blocks` for center pools that outgrow a single driver
-    collect: the same deterministic hash-ordered greedy suppression,
-    consumed in bounded batches with broadcast tight-radius anti-join
-    rounds between them.
-
-    Per round: collect the next `batch_size` candidates in (hash, id)
-    order (bounded driver memory), run the sequential suppression
-    seeded with every center accepted so far, then prune the remaining
-    candidate pool IN SPARK — drop rows within s_tight of any center
-    accepted this round (they would be suppressed later anyway, so the
-    prune is semantics-preserving) — and spill the survivors to scratch
-    parquet (durable checkpoint: the iterative-path discipline). The
-    result is EXACTLY the sequential greedy over the full pool, so on
-    small pools this equals `canopy_blocks` (pytest-gated; the only
-    divergence risk is a candidate whose cosine sits within 1 ulp of
-    s_tight across the numpy / JVM kernels).
-
-    Accepted centers must still fit a broadcast — inherent to canopy
-    membership itself, not to the suppression."""
-    import os
-
-    from blink_spark.functions.similarity import array_cosine
-    from blink_spark.io.scratch import release, scratch_dir, spill
-
-    if not s_tight > s_loose:
-        raise ValueError("s_tight must exceed s_loose (tight ⊂ loose)")
-    pool = (
-        df.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            _canopy_hash(id_col, seed, id_hash).alias("h"),
-        )
-        .orderBy("h", "cid")
-        .limit(n_candidates)
-    )
-    d = scratch_dir()
-    remaining = spill(pool, os.path.join(d, "round_0"))
-    spark = df.sparkSession
-    accepted: list = []
-    rnd = 0
-    while True:
-        batch = remaining.orderBy("h", "cid").limit(batch_size).collect()
-        n_before = len(accepted)
-        accepted = _suppress_greedy(
-            [(r["cid"], r["cvec"]) for r in batch], accepted, s_tight
-        )
-        if len(batch) < batch_size:
-            break
-        last = batch[-1]
-        rnd += 1
-        nxt = remaining.where(
-            (F.col("h") > F.lit(last["h"]))
-            | ((F.col("h") == F.lit(last["h"])) & (F.col("cid") > F.lit(last["cid"])))
-        )
-        new_vecs = [[float(x) for x in cv] for _, cv, _ in accepted[n_before:]]
-        if new_vecs:
-            nc = F.broadcast(
-                spark.createDataFrame(
-                    [(v,) for v in new_vecs], "ncvec array<double>"
-                )
-            )
-            supp = (
-                nxt.crossJoin(nc)
-                .where(array_cosine(F.col("cvec"), F.col("ncvec")) > F.lit(s_tight))
-                .select("cid")
-                .distinct()
-            )
-            nxt = nxt.join(supp, "cid", "left_anti")
-        remaining = spill(nxt, os.path.join(d, f"round_{rnd}"))
-    release(d)
-    return _canopy_membership(df, accepted, s_loose, id_col, vec_col)

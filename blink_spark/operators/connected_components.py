@@ -4,17 +4,14 @@ The reference clusters its pruned k-NN graph with SciPy's
 connected_components on a driver-resident COO matrix
 (/root/reference/blink/biencoder/eval_cluster_linking.py:133-146).
 That is a single-node dead end at 10^12 rows, so this module is the
-"north-star" custom operator: two distributed formulations, both pure
-self-joins/aggregations with per-iteration checkpointing to cut
-lineage (the reference's pickle-every-stage memoization,
-eval_cluster_linking.py:411-415, becomes localCheckpoint/checkpoint).
-
-  * ``alternating`` — large-star / small-star (Kiveris et al., 2014,
-    "Connected Components in MapReduce and Beyond"): O(log n) rounds
-    on pathological chains; the 100-TB-safe default. A round is two
-    window minimums over ``partitionBy(u)`` and one ``distinct``.
-  * ``hashmin`` — min-label propagation; O(diameter) rounds, cheapest
-    per-round; clone-family graphs are near-cliques so diameter ~ 2.
+"north-star" custom operator: distributed large-star / small-star
+(Kiveris et al., 2014, "Connected Components in MapReduce and
+Beyond") with per-iteration checkpointing to cut lineage (the
+reference's pickle-every-stage memoization,
+eval_cluster_linking.py:411-415, becomes a parquet checkpoint). It needs O(log n) rounds even on
+pathological chains, where min-label propagation needs O(diameter).
+A round is two window minimums over ``partitionBy(u)`` and one
+``distinct``.
 
 Each round runs one Spark action, its checkpoint write: the loop's
 convergence signature rides on that write via ``DataFrame.observe``
@@ -38,7 +35,6 @@ from blink_spark.io import scratch
 
 @dataclass
 class CCStats:
-    algorithm: str = ""
     iterations: int = 0
     rounds: list[dict] = field(default_factory=list)
 
@@ -128,7 +124,6 @@ def _alternating_round(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    algorithm: str = "alternating",
     max_iterations: int = 50,
     stats: CCStats | None = None,
     checkpoint_fn=None,
@@ -139,18 +134,15 @@ def connected_components(
     other action; the result is lazy over the last round's table.
     ``checkpoint_fn`` (df -> df) must execute its frame, as
     ``make_parquet_checkpointer`` does (see the module docstring)."""
-    if stats is None:
-        stats = CCStats()
-    stats.algorithm = algorithm
     # default is DURABLE: scratch parquet, never localCheckpoint (see
     # make_parquet_checkpointer; io/scratch.py documents the measured
     # ~100x local-block-store CPU cost)
-    ckpt = checkpoint_fn or scratch_parquet_checkpointer()
-    if algorithm == "alternating":
-        return _cc_alternating(edges, max_iterations, stats, ckpt)
-    if algorithm == "hashmin":
-        return _cc_hashmin(edges, max_iterations, stats, ckpt)
-    raise ValueError(f"unknown CC algorithm: {algorithm}")
+    return _cc_alternating(
+        edges,
+        max_iterations,
+        stats if stats is not None else CCStats(),
+        checkpoint_fn or scratch_parquet_checkpointer(),
+    )
 
 
 def _size_partitions(n_edges: int, spark) -> int:
@@ -193,43 +185,6 @@ def _cc_alternating(edges: DataFrame, max_iterations: int, stats: CCStats, _chec
     # converged: star edges (node -> root); roots label themselves
     labelled = cur.unionByName(cur.select(F.col("v").alias("u"), "v"))
     return labelled.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
-
-
-def _cc_hashmin(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
-    # sym is STATIC input read by every iteration — it must live
-    # outside the checkpointer's keep_last rotation (which would GC it
-    # after two label checkpoints); one non-rotating scratch spill
-    sym, _ = scratch.spill_scratch(_symmetrize(edges).distinct(), "cc_hashmin_sym")
-    labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    )
-    labels = _checkpoint(labels)
-    prev_sum = None
-    for it in range(max_iterations):
-        nbr_min = (
-            sym.join(labels, sym["v"] == labels["id"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr_min, labels["id"] == nbr_min["u"], "left")
-            .select(
-                F.col("id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        labels, obs = observed_checkpoint(
-            _checkpoint, labels, exact_sum(F.col("label")).alias("s")
-        )
-        cur_sum = obs["s"]
-        stats.iterations = it + 1
-        stats.rounds.append({"iter": it + 1, "label_sum": str(cur_sum)})
-        if prev_sum is not None and cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.select("id", F.col("label").alias("component"))
 
 
 def assign_clusters(

@@ -3,17 +3,24 @@
 The reference links records with learned dense embeddings; classical
 record linkage (Fellegi & Sunter, JASA 1969 — the model behind Splink,
 the de-facto Spark ER tool) instead scores per-field agreement
-patterns: each candidate pair gets a vector of agreement indicators
-gamma, and the match weight is
+patterns. Each comparison is an ordered list of level predicates,
+strongest first (the Splink comparison-level model; Winkler 1990
+extends binary agreement to graded levels); a candidate pair's gamma
+g_i is the level that fires, and the match weight is
 
-    w = sum_i  g_i * log2(m_i / u_i) + (1 - g_i) * log2((1-m_i)/(1-u_i))
+    w = sum_i  log2(m_i[g_i] / u_i[g_i])
 
-where m_i = P(field i agrees | match) and u_i = P(agrees | non-match).
+where m_i[l] = P(gamma_i = l | match) and u_i[l] = P(gamma_i = l |
+non-match). A binary comparison is the one-level case
+(``{"src": [F.col("src_a") == F.col("src_b")]}``, ``m = [1 - m, m]``),
+whose weights are the classic log2(m/u) and log2((1-m)/(1-u)).
+
 m/u are estimated by EM over the unlabeled candidate pairs (the
 naive-Bayes latent-class model, Winkler 1988) — exactly the shape a
 1000-executor cluster wants: the E-step is a pure Column expression
 over the pairs (the current parameters enter as literals), the M-step
-is ONE aggregation job, and only 2k+1 floats ever touch the driver.
+is ONE aggregation job, and only a few floats per level ever touch
+the driver.
 
 Determinism: all M-step sums go through DECIMAL(38,12) (order-free),
 so the fitted parameters — and therefore every downstream weight —
@@ -32,150 +39,18 @@ from blink_spark.functions.rounding import qround
 _EPS = 1e-6
 
 
-def attach_gammas(pairs: DataFrame, comparisons: dict[str, Column]) -> DataFrame:
-    """Materialize the agreement vector: one 0/1 column g_<field> per
-    comparison (a boolean Column over the joined pair row, e.g.
-    ``F.col("source_a") == F.col("source_b")``). A NULL comparison
-    (null field on either side) counts as DISAGREEMENT (0) — without
-    the coalesce it would stay NULL, silently dropping out of the EM
-    sums while the E-step treats it as firm disagreement, and
-    diverging from a SQL CASE-WHEN twin."""
-    out = pairs
-    for name, cond in comparisons.items():
-        out = out.withColumn(
-            f"g_{name}", F.coalesce(cond.cast("int"), F.lit(0))
-        )
-    return out
-
-
-def _clamp(x: float) -> float:
-    return min(max(x, _EPS), 1.0 - _EPS)
-
-
-def em_fit(
-    gammas: DataFrame,
-    fields: list[str],
-    iters: int = 10,
-    init_m: float | list[float] = 0.9,
-    init_u: float | list[float] = 0.1,
-    init_lambda: float = 0.1,
-    spilled: bool = False,
-) -> dict:
-    """EM for (lambda, m_i, u_i) over the agreement vectors.
-
-    ``spilled=True`` means the caller already materialized ``gammas``
-    to scratch parquet (fs_cluster does); the g_ projection then reads
-    column-pruned from that spill instead of writing a second copy of
-    the largest intermediate.
-
-    Each iteration: the E-step posterior P(match | gamma) is a single
-    Column expression with the current parameters inlined as literals;
-    the M-step is one groupless aggregation whose sums are EXACT
-    DECIMAL — the result is independent of partitioning and input
-    order. Fixed iteration count (no data-dependent stopping) keeps
-    re-runs bit-identical.
-
-    Returns {"lambda": float, "m": {field: float}, "u": {field: float},
-    "n_pairs": int, "iterations": int}.
-    """
-    k = len(fields)
-    m = list(init_m) if isinstance(init_m, (list, tuple)) else [init_m] * k
-    u = list(init_u) if isinstance(init_u, (list, tuple)) else [init_u] * k
-    lam = _clamp(init_lambda)
-    m = [_clamp(x) for x in m]
-    u = [_clamp(x) for x in u]
-    gcols = [F.col(f"g_{f}") for f in fields]
-    # every EM iteration aggregates over the gammas — without a stage
-    # boundary each pass would re-execute the candidate-pair joins that
-    # produced them; project to the k agreement columns and spill once
-    # (unless the caller already spilled the full table)
-    gammas = gammas.select(*gcols)
-    if not spilled:
-        from blink_spark.io.scratch import spill_scratch
-
-        gammas, _ = spill_scratch(gammas, "fs_gammas")
-    n_pairs = None
-    for _ in range(iters):
-        pm = F.lit(lam)
-        pu = F.lit(1.0 - lam)
-        for gi, mi, ui in zip(gcols, m, u):
-            pm = pm * F.when(gi == 1, F.lit(mi)).otherwise(F.lit(1.0 - mi))
-            pu = pu * F.when(gi == 1, F.lit(ui)).otherwise(F.lit(1.0 - ui))
-        p = (pm / (pm + pu)).alias("p")
-        scored = gammas.select(p, *gcols)
-        dec = lambda c: c.cast("decimal(38,12)")  # noqa: E731 — exact sums
-        aggs = [
-            F.sum(dec(F.col("p"))).alias("sp"),
-            F.sum(dec(F.lit(1.0) - F.col("p"))).alias("snp"),
-            F.count(F.lit(1)).alias("n"),
-        ]
-        for f in fields:
-            aggs.append(F.sum(dec(F.col("p") * F.col(f"g_{f}"))).alias(f"spg_{f}"))
-            aggs.append(
-                F.sum(dec((F.lit(1.0) - F.col("p")) * F.col(f"g_{f}"))).alias(
-                    f"snpg_{f}"
-                )
-            )
-        row = scored.agg(*aggs).collect()[0]
-        n_pairs = int(row["n"])
-        if n_pairs == 0:
-            raise ValueError(
-                "em_fit: no candidate pairs — blocking produced an empty "
-                "gamma table; widen the blocking before fitting"
-            )
-        # max-guard: a degenerate posterior (all pairs certain matches
-        # or certain non-matches) zeroes one denominator; the clamp
-        # then pins the ratio instead of dividing by zero
-        sp = max(float(row["sp"]), _EPS)
-        snp = max(float(row["snp"]), _EPS)
-        lam = _clamp(sp / n_pairs)
-        m = [_clamp(float(row[f"spg_{f}"]) / sp) for f in fields]
-        u = [_clamp(float(row[f"snpg_{f}"]) / snp) for f in fields]
-    return {
-        "lambda": lam,
-        "m": dict(zip(fields, m)),
-        "u": dict(zip(fields, u)),
-        "n_pairs": n_pairs,
-        "iterations": iters,
-    }
-
-
-def field_weights(m: dict, u: dict) -> dict:
-    """log2 agreement / disagreement weights per field — the literals
-    both the Spark plan and a SQL oracle receive verbatim."""
-    return {
-        f: (
-            math.log2(m[f] / u[f]),
-            math.log2((1.0 - m[f]) / (1.0 - u[f])),
-        )
-        for f in m
-    }
-
-
-def match_weight_col(fields: list[str], weights: dict) -> Column:
-    """The Fellegi-Sunter match weight as one Column: a fixed-order sum
-    of shared float literals selected by the gamma flags — engine-
-    portable (no engine-side log/pow)."""
-    total = F.lit(0.0)
-    for f in fields:
-        wa, wd = weights[f]
-        total = total + F.when(
-            F.col(f"g_{f}") == 1, F.lit(wa)
-        ).otherwise(F.lit(wd))
-    return total
-
-
-def attach_gammas_multilevel(
+def attach_gammas(
     pairs: DataFrame, comparisons: dict[str, list[Column]]
 ) -> DataFrame:
-    """Multi-LEVEL agreement vectors (the Splink comparison-level model;
-    Winkler 1990 extends binary gammas to graded agreement): per field,
-    an ordered list of level predicates STRONGEST FIRST (e.g. exact
-    equality, then Jaro-Winkler >= 0.9); gamma g_<field> = L - i for
-    the first predicate i that fires (so the strongest level carries
-    the highest value, L = len(levels)), 0 = none ('other'). NULL
-    predicates coalesce to false — same NULL discipline as
-    attach_gammas."""
+    """Materialize the agreement vector: per field, an ordered list of
+    boolean level predicates over the joined pair row, STRONGEST FIRST
+    (e.g. exact equality, then Jaro-Winkler >= 0.9); gamma g_<field> =
+    L - i for the first predicate i that fires (so the strongest level
+    carries the highest value, L = len(levels)), 0 = none ('other').
+    A NULL predicate (null field on either side) counts as
+    DISAGREEMENT — without the coalesce it would stay NULL, silently
+    dropping out of the EM sums, and diverge from a SQL CASE-WHEN
+    twin."""
     out = pairs
     for name, levels in comparisons.items():
         expr = None
@@ -193,6 +68,10 @@ def attach_gammas_multilevel(
     return out
 
 
+def _clamp(x: float) -> float:
+    return min(max(x, _EPS), 1.0 - _EPS)
+
+
 def _normalize(dist: list[float]) -> list[float]:
     """Scale to sum 1, clamp each level prob away from {0, 1}, rescale
     (driver floats — they only re-enter the plan as literals). Scaling
@@ -203,15 +82,22 @@ def _normalize(dist: list[float]) -> list[float]:
     if s <= 0.0:
         # degenerate posterior (e.g. EM's all-non-match basin rounds
         # every per-class weight to exactly 0 in DECIMAL): no level
-        # information — uniform keeps the fit alive, mirroring the
-        # binary path's clamp-instead-of-divide-by-zero guard
+        # information — uniform keeps the fit alive
         return [1.0 / len(dist)] * len(dist)
     c = [_clamp(x / s) for x in dist]
     s2 = sum(c)
     return [x / s2 for x in c]
 
 
-def em_fit_multilevel(
+def _level_case(g: Column, values: list[float]) -> Column:
+    """CASE g WHEN 0 THEN values[0] WHEN 1 THEN values[1] ... (no ELSE)."""
+    expr = F.when(g == 0, F.lit(values[0]))
+    for l, v in enumerate(values[1:], start=1):
+        expr = expr.when(g == l, F.lit(v))
+    return expr
+
+
+def em_fit(
     gammas: DataFrame,
     levels: dict[str, int],
     iters: int = 10,
@@ -220,18 +106,29 @@ def em_fit_multilevel(
     init_lambda: float = 0.1,
     spilled: bool = False,
 ) -> dict:
-    """EM for (lambda, m_i[l], u_i[l]) with PER-LEVEL probabilities:
-    m_i[l] = P(gamma_i = l | match) over l in 0..L_i, summing to 1
-    (the categorical naive-Bayes latent-class model — binary em_fit is
-    the L=1 special case). Same execution discipline: E-step one
-    Column expression with parameter literals, M-step ONE aggregation
-    with exact-DECIMAL sums (bit-identical at any parallelism), fixed
-    iteration count.
+    """EM for (lambda, m_i[l], u_i[l]): m_i[l] = P(gamma_i = l | match)
+    over l in 0..L_i, summing to 1 (the categorical naive-Bayes
+    latent-class model).
 
-    levels: field -> number of NONZERO levels L (gamma in 0..L).
-    Default init spreads m toward high levels and u toward level 0.
-    Returns {"lambda", "m": {field: [p0..pL]}, "u": ..., "n_pairs",
-    "iterations"}."""
+    levels: field -> number of NONZERO levels L (gamma in 0..L); 1 for
+    a binary comparison. Default init spreads m toward high levels and
+    u toward level 0.
+
+    ``spilled=True`` means the caller already materialized ``gammas``
+    to scratch parquet (fs_cluster does); the g_ projection then reads
+    column-pruned from that spill instead of writing a second copy of
+    the largest intermediate.
+
+    Each iteration: the E-step posterior P(match | gamma) is a single
+    Column expression with the current parameters inlined as literals;
+    the M-step is one groupless aggregation whose sums are EXACT
+    DECIMAL — the result is independent of partitioning and input
+    order. Fixed iteration count (no data-dependent stopping) keeps
+    re-runs bit-identical.
+
+    Returns {"lambda": float, "m": {field: [p0..pL]}, "u": ...,
+    "n_pairs": int, "iterations": int}.
+    """
     fields = list(levels)
     m: dict[str, list[float]] = {}
     u: dict[str, list[float]] = {}
@@ -245,58 +142,47 @@ def em_fit_multilevel(
         )
     lam = _clamp(init_lambda)
     gcols = [F.col(f"g_{f}") for f in fields]
-    # same spill discipline as em_fit: skip the second parquet write of
-    # the largest intermediate when the caller already spilled it
+    # every EM iteration aggregates over the gammas — without a stage
+    # boundary each pass would re-execute the candidate-pair joins that
+    # produced them; project to the agreement columns and spill once
+    # (unless the caller already spilled the full table)
     gammas = gammas.select(*gcols)
     if not spilled:
         from blink_spark.io.scratch import spill_scratch
 
-        gammas, _ = spill_scratch(gammas, "fs_ml_gammas")
+        gammas, _ = spill_scratch(gammas, "fs_gammas")
     n_pairs = None
+    dec = lambda c: c.cast("decimal(38,12)")  # noqa: E731 — exact sums
     for _ in range(iters):
         pm = F.lit(lam)
         pu = F.lit(1.0 - lam)
-        for f in fields:
-            g = F.col(f"g_{f}")
-            em = None
-            eu = None
-            for l in range(levels[f] + 1):
-                em = (
-                    F.when(g == l, F.lit(m[f][l]))
-                    if em is None
-                    else em.when(g == l, F.lit(m[f][l]))
-                )
-                eu = (
-                    F.when(g == l, F.lit(u[f][l]))
-                    if eu is None
-                    else eu.when(g == l, F.lit(u[f][l]))
-                )
-            pm = pm * em.otherwise(F.lit(_EPS))
-            pu = pu * eu.otherwise(F.lit(_EPS))
-        p = (pm / (pm + pu)).alias("p")
-        scored = gammas.select(p, *gcols)
-        dec = lambda c: c.cast("decimal(38,12)")  # noqa: E731 — exact sums
+        for f, g in zip(fields, gcols):
+            pm = pm * _level_case(g, m[f]).otherwise(F.lit(_EPS))
+            pu = pu * _level_case(g, u[f]).otherwise(F.lit(_EPS))
+        p = F.col("p")
         aggs = [
-            F.sum(dec(F.col("p"))).alias("sp"),
-            F.sum(dec(F.lit(1.0) - F.col("p"))).alias("snp"),
+            F.sum(dec(p)).alias("sp"),
+            F.sum(dec(F.lit(1.0) - p)).alias("snp"),
             F.count(F.lit(1)).alias("n"),
         ]
-        for f in fields:
+        for f, g in zip(fields, gcols):
             for l in range(levels[f] + 1):
-                ind = (F.col(f"g_{f}") == l).cast("double")
-                aggs.append(F.sum(dec(F.col("p") * ind)).alias(f"spg_{f}_{l}"))
+                ind = (g == l).cast("double")
+                aggs.append(F.sum(dec(p * ind)).alias(f"spg_{f}_{l}"))
                 aggs.append(
-                    F.sum(dec((F.lit(1.0) - F.col("p")) * ind)).alias(
-                        f"snpg_{f}_{l}"
-                    )
+                    F.sum(dec((F.lit(1.0) - p) * ind)).alias(f"snpg_{f}_{l}")
                 )
+        scored = gammas.select((pm / (pm + pu)).alias("p"), *gcols)
         row = scored.agg(*aggs).collect()[0]
         n_pairs = int(row["n"])
         if n_pairs == 0:
             raise ValueError(
-                "em_fit_multilevel: no candidate pairs — blocking produced "
-                "an empty gamma table; widen the blocking before fitting"
+                "em_fit: no candidate pairs — blocking produced an empty "
+                "gamma table; widen the blocking before fitting"
             )
+        # max-guard: a degenerate posterior (all pairs certain matches
+        # or certain non-matches) zeroes one denominator; the guard
+        # pins the ratio instead of dividing by zero
         sp = max(float(row["sp"]), _EPS)
         snp = max(float(row["snp"]), _EPS)
         lam = _clamp(sp / n_pairs)
@@ -328,7 +214,7 @@ def em_fit_multilevel(
     }
 
 
-def multilevel_weights(
+def level_weights(
     m: dict[str, list[float]], u: dict[str, list[float]]
 ) -> dict[str, list[float]]:
     """Per-level log2(m_l/u_l) match weights — the literals both the
@@ -339,23 +225,15 @@ def multilevel_weights(
     }
 
 
-def multilevel_weight_col(
-    fields: list[str], weights: dict[str, list[float]]
-) -> Column:
-    """Multi-level Fellegi-Sunter match weight: per field, a CASE over
-    the gamma level selecting that level's literal weight; summed in
-    field order — engine-portable (no engine-side log/pow)."""
+def weight_col(fields: list[str], weights: dict[str, list[float]]) -> Column:
+    """The Fellegi-Sunter match weight as one Column: per field, a CASE
+    over the gamma level selecting that level's literal weight, summed
+    in field order — engine-portable (no engine-side log/pow)."""
     total = F.lit(0.0)
     for f in fields:
-        g = F.col(f"g_{f}")
-        expr = None
-        for l, w in enumerate(weights[f]):
-            expr = (
-                F.when(g == l, F.lit(w))
-                if expr is None
-                else expr.when(g == l, F.lit(w))
-            )
-        total = total + expr.otherwise(F.lit(0.0))
+        total = total + _level_case(F.col(f"g_{f}"), weights[f]).otherwise(
+            F.lit(0.0)
+        )
     return total
 
 
@@ -402,17 +280,31 @@ def tf_adjustment_col(
     ).otherwise(F.lit(0.0))
 
 
+def _sides(records: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """Both pair sides of ``records``: (id_a, <col>_a ...) and
+    (id_b, <col>_b ...) — the row shape every comparison predicate
+    reads once the two are joined."""
+    feat_cols = [c for c in records.columns if c != id_col]
+    return tuple(
+        records.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in feat_cols],
+        )
+        for s in ("a", "b")
+    )
+
+
 def estimate_u_probs(
     records: DataFrame,
-    comparisons: dict[str, Column],
+    comparisons: dict[str, list[Column]],
     id_col: str = "doc_id",
     sample: int = 200,
     seed: int = 42,
 ) -> dict:
-    """u_i = P(field i agrees | non-match), estimated from random
+    """u_i[l] = P(gamma_i = l | non-match), estimated from random
     record pairs (Splink's ``estimate_u_using_random_sampling``): at
     realistic match prevalence a uniformly random pair is a non-match
-    with overwhelming probability, so the agreement rate over random
+    with overwhelming probability, so the per-level rate over random
     pairs IS u. Sampling is the repo's deterministic hash-min pattern
     (smallest xxhash64(id, seed) rows, cross-paired a < b) — the same
     estimate at any parallelism. sample=200 -> 19,900 pairs; the
@@ -423,73 +315,9 @@ def estimate_u_probs(
         .limit(sample)
         .drop("_u_hash")
     )
-    a = ids.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in records.columns if c != id_col],
-    )
-    b = ids.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in records.columns if c != id_col],
-    )
+    a, b = _sides(ids, id_col)
     pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
     gam = attach_gammas(pairs, comparisons)
-    row = gam.agg(
-        *[F.avg(F.col(f"g_{f}")).alias(f) for f in comparisons],
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if int(row["n"]) == 0:
-        raise ValueError(
-            "estimate_u_probs: the corpus yields zero random pairs "
-            "(fewer than 2 records after sampling) — u cannot be "
-            "estimated; pass explicit init_u to em_fit instead"
-        )
-    return {
-        "u": {f: _clamp(float(row[f])) for f in comparisons},
-        "n_pairs": int(row["n"]),
-    }
-
-
-def score_pairs(
-    gammas: DataFrame, fields: list[str], m: dict, u: dict, lam: float
-) -> DataFrame:
-    """Adds qrounded ``weight`` and posterior ``p_match`` columns."""
-    w = match_weight_col(fields, field_weights(m, u))
-    prior = math.log2(lam / (1.0 - lam))
-    post = F.lit(1.0) / (
-        F.lit(1.0) + F.pow(F.lit(2.0), -(w + F.lit(prior)))
-    )
-    return gammas.withColumn("weight", qround(w, 6)).withColumn(
-        "p_match", qround(post, 6)
-    )
-
-
-def estimate_u_probs_multilevel(
-    records: DataFrame,
-    comparisons: dict[str, list[Column]],
-    id_col: str = "doc_id",
-    sample: int = 200,
-    seed: int = 42,
-) -> dict:
-    """Multi-level analog of :func:`estimate_u_probs`: the per-LEVEL
-    rate over deterministic random record pairs is u_i[l] (random
-    pairs are non-matches at realistic prevalence). Same hash-min
-    sampling, one aggregation."""
-    ids = (
-        records.withColumn("_u_hash", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("_u_hash")
-        .limit(sample)
-        .drop("_u_hash")
-    )
-    a = ids.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in records.columns if c != id_col],
-    )
-    b = ids.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in records.columns if c != id_col],
-    )
-    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    gam = attach_gammas_multilevel(pairs, comparisons)
     aggs = [F.count(F.lit(1)).alias("n")]
     for f, levels in comparisons.items():
         for l in range(len(levels) + 1):
@@ -499,9 +327,9 @@ def estimate_u_probs_multilevel(
     row = gam.agg(*aggs).collect()[0]
     if int(row["n"]) == 0:
         raise ValueError(
-            "estimate_u_probs_multilevel: the corpus yields zero random "
-            "pairs (fewer than 2 records after sampling) — u cannot be "
-            "estimated; pass explicit init_u to em_fit_multilevel instead"
+            "estimate_u_probs: the corpus yields zero random pairs "
+            "(fewer than 2 records after sampling) — u cannot be "
+            "estimated; pass explicit init_u to em_fit instead"
         )
     return {
         "u": {
@@ -514,16 +342,15 @@ def estimate_u_probs_multilevel(
     }
 
 
-def score_pairs_multilevel(
+def score_pairs(
     gammas: DataFrame,
     fields: list[str],
     m: dict[str, list[float]],
     u: dict[str, list[float]],
     lam: float,
 ) -> DataFrame:
-    """Multi-level ``score_pairs``: per-level weight literals, same
-    posterior transform."""
-    w = multilevel_weight_col(fields, multilevel_weights(m, u))
+    """Adds qrounded ``weight`` and posterior ``p_match`` columns."""
+    w = weight_col(fields, level_weights(m, u))
     prior = math.log2(lam / (1.0 - lam))
     post = F.lit(1.0) / (F.lit(1.0) + F.pow(F.lit(2.0), -(w + F.lit(prior))))
     return gammas.withColumn("weight", qround(w, 6)).withColumn(
@@ -531,65 +358,13 @@ def score_pairs_multilevel(
     )
 
 
-def fs_cluster_multilevel(
+def fs_cluster(
     records: DataFrame,
     pairs: DataFrame,
     comparisons: dict[str, list[Column]],
     id_col: str = "doc_id",
     em_iters: int = 10,
     threshold_p: float = 0.9,
-    u_sample: int = 200,
-    seed: int = 42,
-) -> dict:
-    """:func:`fs_cluster` with graded comparison levels — the Splink
-    workflow a linkage user actually runs: candidate pairs → per-level
-    gammas → u from deterministic random pairs → per-level EM →
-    posterior threshold → distributed connected components. Same
-    execution discipline as the binary path (one spill of the gamma
-    table, DECIMAL-exact EM, every record clustered)."""
-    from blink_spark.io.scratch import spill_scratch
-    from blink_spark.operators.connected_components import (
-        assign_clusters,
-        connected_components,
-    )
-
-    feat_cols = [c for c in records.columns if c != id_col]
-    fa = records.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in feat_cols],
-    )
-    fb = records.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in feat_cols],
-    )
-    joined = pairs.select("id_a", "id_b").join(fa, "id_a").join(fb, "id_b")
-    gammas = attach_gammas_multilevel(joined, comparisons)
-    gammas, _ = spill_scratch(gammas, "fs_ml_gammas_full")
-    fields = list(comparisons)
-    levels = {f: len(comparisons[f]) for f in fields}
-    u0 = estimate_u_probs_multilevel(
-        records, comparisons, id_col, u_sample, seed
-    )["u"]
-    fit = em_fit_multilevel(
-        gammas, levels, iters=em_iters, init_u=u0, spilled=True
-    )
-    scored = score_pairs_multilevel(
-        gammas, fields, fit["m"], fit["u"], fit["lambda"]
-    )
-    edges = scored.where(F.col("p_match") >= threshold_p).select("id_a", "id_b")
-    comp = connected_components(edges)
-    clusters = assign_clusters(records.select(id_col), comp, id_col)
-    return {"clusters": clusters, "scored": scored, "fit": fit, "u0": u0}
-
-
-def fs_cluster(
-    records: DataFrame,
-    pairs: DataFrame,
-    comparisons: dict[str, Column],
-    id_col: str = "doc_id",
-    em_iters: int = 10,
-    threshold_p: float = 0.9,
-    init_m: float = 0.9,
     u_sample: int = 200,
     seed: int = 42,
 ) -> dict:
@@ -604,37 +379,22 @@ def fs_cluster(
 
     Returns {"clusters": DataFrame(id_col, cluster_id),
     "scored": DataFrame, "fit": em_fit result, "u0": initial u}."""
+    from blink_spark.io.scratch import spill_scratch
     from blink_spark.operators.connected_components import (
         assign_clusters,
         connected_components,
     )
 
-    feat_cols = [c for c in records.columns if c != id_col]
-    fa = records.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"{c}_a") for c in feat_cols],
-    )
-    fb = records.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"{c}_b") for c in feat_cols],
-    )
+    fa, fb = _sides(records, id_col)
     joined = pairs.select("id_a", "id_b").join(fa, "id_a").join(fb, "id_b")
     gammas = attach_gammas(joined, comparisons)
     # the double feature-join lineage has three consumers (EM, scoring,
     # the thresholded edge set fed to CC) — materialize it once
-    from blink_spark.io.scratch import spill_scratch
-
     gammas, _ = spill_scratch(gammas, "fs_gammas_full")
     fields = list(comparisons)
+    levels = {f: len(comparisons[f]) for f in fields}
     u0 = estimate_u_probs(records, comparisons, id_col, u_sample, seed)["u"]
-    fit = em_fit(
-        gammas,
-        fields,
-        iters=em_iters,
-        init_m=init_m,
-        init_u=[u0[f] for f in fields],
-        spilled=True,
-    )
+    fit = em_fit(gammas, levels, iters=em_iters, init_u=u0, spilled=True)
     scored = score_pairs(gammas, fields, fit["m"], fit["u"], fit["lambda"])
     edges = scored.where(F.col("p_match") >= threshold_p).select("id_a", "id_b")
     comp = connected_components(edges)

@@ -99,9 +99,10 @@ def _propagate_min(
     write, is a convergence check that costs no extra Spark action.
     Returns nodes at fixpoint.
 
-    Hop count to converge is the graph's directed diameter — same
-    O(rounds) regime as the hashmin CC loop (connected_components.py).
-    Unlike CC, several one-hop updates are chained LAZILY into a
+    Hop count to converge is the graph's directed diameter: this is
+    min-label propagation, O(diameter) rounds, not the O(log n)
+    star contraction of connected_components.py (directed min-label
+    reachability is not undirected CC). Unlike CC, several one-hop updates are chained LAZILY into a
     single job before each durable parquet checkpoint + convergence
     probe: the shuffle count is identical, but the driver round-trip
     and checkpoint commit — the per-round latency floor on a large

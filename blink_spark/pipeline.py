@@ -69,19 +69,13 @@ class ERConfig:
     # BOTH endpoints and disconnects (measured: a 1000-file family's
     # 166 license-header variants split off at k=20 AND k=60, recall
     # 0.73). The reference avoids this with entity-constrained
-    # partitioning (special_partition.pyx:288-356); in pure dedup the
+    # partitioning (special_partition.pyx:288-356) — with a catalogue,
+    # that is blink_spark.linking.LinkPipeline; in pure dedup the
     # equivalent is threshold-only edges + CC. top_k remains available
     # as the T1/T2 ladder knob for recall-bounded retrieval use.
     top_k: int | None = None
     # stage 3
-    cc_algorithm: str = "alternating"
     cc_max_iterations: int = 50
-    # "cc": plain connected components (pure dedup). "entity": G4
-    # entity-constrained partition — requires run(entities=catalogue);
-    # the opt-in that makes top_k safe (each cluster anchors to exactly
-    # one entity, so per-node edge pruning can no longer fracture a
-    # family; reference special_partition.pyx:288-356)
-    partition: str = "cc"
 
 
 @dataclass
@@ -217,43 +211,11 @@ class ERPipeline:
     ) -> DataFrame:
         comp = connected_components(
             edges.select("id_a", "id_b"),
-            algorithm=self.cfg.cc_algorithm,
             max_iterations=self.cfg.cc_max_iterations,
             stats=stats,
             checkpoint_fn=checkpoint_fn,
         )
         return assign_clusters(s0.select("file_id"), comp, "file_id")
-
-    def _s3_entity_partition(
-        self, scores: DataFrame, mentions: DataFrame, entities: DataFrame
-    ) -> DataFrame:
-        """G4 stage-3: per-mention best-entity edge + top-k mention
-        edges, resolved by the entity-constrained partition; cluster_id
-        is the anchoring entity's file_id (mentions that reach no
-        entity stay singletons). See blink_spark.linking for the
-        full two-table API."""
-        from blink_spark.linking import LinkPipeline, flag_entity_endpoints
-        from blink_spark.operators.linking import entity_constrained_partition
-
-        ent_ids = self.s0_normalize(entities).select("file_id").distinct()
-        men_ids = self.s0_normalize(mentions).select("file_id").distinct()
-        flagged = flag_entity_endpoints(
-            scores.select("id_a", "id_b", "score"), ent_ids
-        )
-        lp = LinkPipeline(self.cfg, mention_knn=self.cfg.top_k or 4)
-        part = entity_constrained_partition(lp.joint_graph(flagged))
-        pred = men_ids.join(
-            part.where(~F.col("is_entity")).select(
-                F.col("node_id").alias("file_id"),
-                F.col("entity_id").alias("pred_entity_id"),
-            ),
-            "file_id",
-            "left",
-        )
-        return pred.select(
-            "file_id",
-            F.coalesce("pred_entity_id", F.col("file_id")).alias("cluster_id"),
-        )
 
     # ------------------------------------------------------------- run
     def run(
@@ -262,8 +224,6 @@ class ERPipeline:
         store: StageStore | None = None,
         resume: bool = True,
         until: str | None = None,
-        scratch_dir: str | None = None,
-        entities: DataFrame | None = None,
     ) -> ERResult:
         """Run all stages. With a store, each stage persists to its
         table and an existing table short-circuits recompute (the
@@ -275,23 +235,10 @@ class ERPipeline:
         parquet is the same mechanism the durable store uses anyway."""
         from blink_spark.io import scratch as _scratch
 
-        use_entity = self.cfg.partition == "entity"
-        if use_entity and entities is None:
-            raise ValueError(
-                "partition='entity' requires run(entities=<catalogue DataFrame>)"
-            )
-        mentions_only = files
-        if use_entity:
-            # catalogue rows flow through the same s0-s2 stages; s3
-            # splits edges by endpoint kind and anchors clusters
-            files = files.unionByName(
-                entities.select(*mentions_only.columns)
-            )
         res = ERResult()
-        if store is None and scratch_dir is None:
-            # registered for cleanup at interpreter exit (bench loops
-            # previously leaked one mkdtemp per run)
-            scratch_dir = _scratch.scratch_dir()
+        # registered for cleanup at interpreter exit (bench loops
+        # previously leaked one mkdtemp per run)
+        scratch_dir = None if store is not None else _scratch.scratch_dir()
 
         def spill(df: DataFrame, name: str) -> DataFrame:
             return _scratch.spill(df, f"{scratch_dir}/{name}")
@@ -358,22 +305,11 @@ class ERPipeline:
         if cc_dir is None:  # catalog-table store: CC scratch goes to temp
             cc_dir = f"{_scratch.scratch_dir()}/cc"
         cc_ckpt = make_parquet_checkpointer(cc_dir)
-        if use_entity:
-            clusters = stage(
-                "s3_clusters",
-                lambda: self._s3_entity_partition(scores, mentions_only, entities),
-            )
-        else:
-            clusters = stage(
-                "s3_clusters", lambda: self.s3_clusters(edges, s0, cc_stats, cc_ckpt)
-            )
+        clusters = stage(
+            "s3_clusters", lambda: self.s3_clusters(edges, s0, cc_stats, cc_ckpt)
+        )
         if cc_stats.iterations and store is not None:
-            store.write_metrics(
-                "s3_cc", {"algorithm": cc_stats.algorithm, "iterations": cc_stats.iterations}
-            )
-        res.metrics["cc"] = {
-            "algorithm": cc_stats.algorithm,
-            "iterations": cc_stats.iterations,
-        }
+            store.write_metrics("s3_cc", {"iterations": cc_stats.iterations})
+        res.metrics["cc"] = {"iterations": cc_stats.iterations}
         res.tables["clusters"] = clusters
         return res

@@ -190,34 +190,24 @@ def test_canopy_string_ids(spark):
     assert covered == {f"doc-{i}" for i in range(40)}
 
 
-def test_canopy_pool_cap_guard(spark):
-    from blink_spark.operators.blocking import _CANOPY_POOL_CAP, canopy_blocks
-
-    df = _clustered_emb(spark, n=10)
-    with pytest.raises(ValueError, match="canopy_blocks_distributed"):
-        canopy_blocks(df, 0.5, 0.9, n_candidates=_CANOPY_POOL_CAP + 1)
-
-
 def test_canopy_distributed_equals_driver(spark):
-    """The batched broadcast-anti-join suppression is EXACTLY the
-    sequential driver greedy on the same pool — same blocks, any batch
-    size (batch smaller than, equal to, and larger than the pool)."""
-    from blink_spark.operators.blocking import (
-        canopy_blocks,
-        canopy_blocks_distributed,
-    )
+    """The batched suppression (broadcast tight-radius anti-join between
+    batches) is EXACTLY the one-batch driver greedy on the same pool —
+    same blocks with a batch smaller than, equal to, and larger than
+    the 32-candidate pool."""
+    from blink_spark.operators.blocking import canopy_blocks
 
     df = _clustered_emb(spark)
-    want = sorted(
-        map(tuple, canopy_blocks(df, 0.5, 0.9, n_candidates=32).collect())
-    )
-    for bs in (7, 32, 100):
-        got = sorted(
+    got = {
+        bs: sorted(
             map(
                 tuple,
-                canopy_blocks_distributed(
+                canopy_blocks(
                     df, 0.5, 0.9, n_candidates=32, batch_size=bs
                 ).collect(),
             )
         )
-        assert got == want, f"batch_size={bs}"
+        for bs in (7, 32, 100)
+    }
+    assert got[7] == got[100], "batch_size=7"
+    assert got[32] == got[100], "batch_size=32"

@@ -30,29 +30,32 @@ def _oracle_labels(edges, n_nodes):
     return {node: find(node) for node in touched}
 
 
-@pytest.mark.parametrize("alg", ["alternating", "hashmin"])
-@pytest.mark.parametrize("seed,n,m", [(1, 50, 40), (2, 200, 150), (3, 100, 300)])
-def test_cc_matches_scipy(spark, alg, seed, n, m):
+# test ids carry the algorithm's name, "alternating" (large/small-star,
+# the module's one algorithm): the round counts pinned below are its own
+ALG = "alternating"
+SCIPY_CASES = [(1, 50, 40), (2, 200, 150), (3, 100, 300)]
+
+
+@pytest.mark.parametrize(
+    "seed,n,m", SCIPY_CASES, ids=[f"{s}-{n}-{m}-{ALG}" for s, n, m in SCIPY_CASES]
+)
+def test_cc_matches_scipy(spark, seed, n, m):
     rng = random.Random(seed)
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(df, algorithm=alg).collect()
-    }
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
     exp = _oracle_labels([e for e in edges if e[0] != e[1]], n)
     assert got == exp
 
 
-@pytest.mark.parametrize("alg", ["alternating", "hashmin"])
-def test_cc_long_chain(spark, alg):
-    edges = [(i, i + 1) for i in range(60)]
+@pytest.mark.parametrize("n", [60], ids=[ALG])
+def test_cc_long_chain(spark, n):
+    edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     st = CCStats()
-    got = connected_components(df, algorithm=alg, max_iterations=100, stats=st).collect()
-    assert len(got) == 61 and all(r["component"] == 0 for r in got)
-    if alg == "alternating":
-        assert st.iterations <= 12  # O(log n) rounds, not O(n)
+    got = connected_components(df, max_iterations=100, stats=st).collect()
+    assert len(got) == n + 1 and all(r["component"] == 0 for r in got)
+    assert st.iterations <= 12  # O(log n) rounds, not O(n)
 
 
 def test_cc_stable_under_repartition(spark):
@@ -89,29 +92,27 @@ def _awkward_graph(kind):
     raise ValueError(kind)
 
 
-# hashmin needs O(diameter) rounds, ~1,000 on the permuted chain, so the
-# chain runs the alternating algorithm only (test_cc_long_chain covers
-# hashmin on a chain)
+AWKWARD_CASES = [
+    ("duplicates", 5),
+    ("self_loops", 1),
+    ("star500", 2),
+    ("chain2000", 10),
+]
+
+
 @pytest.mark.parametrize(
-    "alg,kind,iterations",
-    [
-        ("alternating", "duplicates", 5),
-        ("hashmin", "duplicates", 14),
-        ("alternating", "self_loops", 1),
-        ("hashmin", "self_loops", 2),
-        ("alternating", "star500", 2),
-        ("hashmin", "star500", 3),
-        ("alternating", "chain2000", 10),
-    ],
+    "kind,iterations",
+    AWKWARD_CASES,
+    ids=[f"{ALG}-{k}-{i}" for k, i in AWKWARD_CASES],
 )
-def test_cc_awkward_graphs(spark, alg, kind, iterations):
-    """Union-find labels, and the round count each algorithm takes."""
+def test_cc_awkward_graphs(spark, kind, iterations):
+    """Union-find labels, and the round count the algorithm takes."""
     edges = _awkward_graph(kind)
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     st = CCStats()
     got = {
         r["id"]: r["component"]
-        for r in connected_components(df, algorithm=alg, stats=st).collect()
+        for r in connected_components(df, stats=st).collect()
     }
     n = 1 + max(max(e) for e in edges)
     assert got == _oracle_labels([e for e in edges if e[0] != e[1]], n)

@@ -36,6 +36,8 @@ FAST_QUERIES = [
     "ann_ivf_refined_parity",
     "er_sorted_neighborhood",
     "er_fs_weights",
+    "er_fs_multilevel",
+    "er_canopy_parity",
     "eval_bcubed",
     # the sign-LSH flows run by ann_lsh_topk / dedup_embedding_lsh,
     # with Rademacher planes

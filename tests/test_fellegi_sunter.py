@@ -1,15 +1,20 @@
 """Fellegi-Sunter probabilistic linkage: EM recovers the generating
 latent-class parameters; weights separate matches from non-matches;
-everything is bit-stable across partitioning (DECIMAL M-step sums)."""
+everything is bit-stable across partitioning (DECIMAL M-step sums).
+Binary comparisons are the one-level case of the comparison-level
+model: a one-predicate level list, gamma in {0, 1}, m / u as
+[P(disagree), P(agree)]."""
 
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from blink_spark.eval import pairwise_metrics
 from blink_spark.operators import fellegi_sunter as fs
 
 FIELDS = ["a", "b", "c"]
+LEVELS = {f: 1 for f in FIELDS}
 TRUE_LAM, TRUE_M, TRUE_U = 0.25, [0.95, 0.9, 0.85], [0.2, 0.1, 0.3]
 
 
@@ -34,15 +39,15 @@ def gammas(spark):
 
 
 def test_em_recovers_generating_parameters(gammas):
-    fit = fs.em_fit(gammas, FIELDS, iters=25)
+    fit = fs.em_fit(gammas, LEVELS, iters=25)
     assert fit["lambda"] == pytest.approx(TRUE_LAM, abs=0.05)
     for f, tm, tu in zip(FIELDS, TRUE_M, TRUE_U):
-        assert fit["m"][f] == pytest.approx(tm, abs=0.07), (f, fit["m"])
-        assert fit["u"][f] == pytest.approx(tu, abs=0.07), (f, fit["u"])
+        assert fit["m"][f][1] == pytest.approx(tm, abs=0.07), (f, fit["m"])
+        assert fit["u"][f][1] == pytest.approx(tu, abs=0.07), (f, fit["u"])
 
 
 def test_weights_separate_matches(gammas):
-    fit = fs.em_fit(gammas, FIELDS, iters=25)
+    fit = fs.em_fit(gammas, LEVELS, iters=25)
     scored = fs.score_pairs(gammas, FIELDS, fit["m"], fit["u"], fit["lambda"])
     stats = (
         scored.groupBy("is_match")
@@ -66,18 +71,19 @@ def test_weights_separate_matches(gammas):
 
 
 def test_em_deterministic_across_partitioning(gammas):
-    f1 = fs.em_fit(gammas.repartition(1), FIELDS, iters=8)
-    f2 = fs.em_fit(gammas.repartition(17), FIELDS, iters=8)
+    f1 = fs.em_fit(gammas.repartition(1), LEVELS, iters=8)
+    f2 = fs.em_fit(gammas.repartition(17), LEVELS, iters=8)
     assert f1 == f2  # bit-identical, not approx — DECIMAL M-step sums
 
 
 def test_weight_formula_hand_example(spark):
-    """One pair, known m/u: weight = sum of the selected log2 literals."""
+    """One pair, known m/u: weight = sum of the selected log2 literals
+    (agreement on a, disagreement on b)."""
     import math
 
     df = spark.createDataFrame([(1, 1, 0)], "pair_id long, g_a int, g_b int")
-    m = {"a": 0.9, "b": 0.8}
-    u = {"a": 0.1, "b": 0.4}
+    m = {"a": [0.1, 0.9], "b": [0.2, 0.8]}
+    u = {"a": [0.9, 0.1], "b": [0.6, 0.4]}
     scored = fs.score_pairs(df, ["a", "b"], m, u, 0.5)
     row = scored.collect()[0]
     exp = math.log2(0.9 / 0.1) + math.log2(0.2 / 0.6)
@@ -93,14 +99,14 @@ def test_estimate_u_from_random_pairs(spark):
     est = fs.estimate_u_probs(
         df,
         {
-            "src": F.col("src_a") == F.col("src_b"),
-            "dec": F.col("dec_a") == F.col("dec_b"),
+            "src": [F.col("src_a") == F.col("src_b")],
+            "dec": [F.col("dec_a") == F.col("dec_b")],
         },
         sample=150,
     )
     assert est["n_pairs"] == 150 * 149 // 2
-    assert est["u"]["src"] == pytest.approx(1 / 3, abs=0.05)
-    assert est["u"]["dec"] == pytest.approx(1 / 10, abs=0.04)
+    assert est["u"]["src"][1] == pytest.approx(1 / 3, abs=0.05)
+    assert est["u"]["dec"][1] == pytest.approx(1 / 10, abs=0.04)
 
 
 def _draw(rng, dist):
@@ -133,7 +139,7 @@ def test_em_multilevel_recovers_generating_parameters(spark):
             (_draw(rng, src["a"]), _draw(rng, src["b"]), _draw(rng, src["c"]))
         )
     df = spark.createDataFrame(rows, "g_a int, g_b int, g_c int")
-    fit = fs.em_fit_multilevel(df, {"a": 2, "b": 1, "c": 2}, iters=30)
+    fit = fs.em_fit(df, {"a": 2, "b": 1, "c": 2}, iters=30)
     assert abs(fit["lambda"] - LAM) < 0.05, fit["lambda"]
     for f in M:
         for l in range(len(M[f])):
@@ -146,12 +152,12 @@ def test_em_multilevel_deterministic_across_partitioning(spark):
 
     rng = random.Random(9)
     rows = [(rng.randrange(3), rng.randrange(2)) for _ in range(600)]
-    a = fs.em_fit_multilevel(
+    a = fs.em_fit(
         spark.createDataFrame(rows, "g_a int, g_b int").repartition(1),
         {"a": 2, "b": 1},
         iters=5,
     )
-    b = fs.em_fit_multilevel(
+    b = fs.em_fit(
         spark.createDataFrame(rows, "g_a int, g_b int").repartition(13),
         {"a": 2, "b": 1},
         iters=5,
@@ -164,7 +170,7 @@ def test_multilevel_gammas_strongest_first_and_nulls(spark):
         [(1, "x", "x"), (2, "x", "xy"), (3, "x", "zz"), (4, "x", None)],
         "id long, s_a string, s_b string",
     )
-    g = fs.attach_gammas_multilevel(
+    g = fs.attach_gammas(
         df,
         {
             "s": [
@@ -212,24 +218,22 @@ def test_estimate_u_too_few_records_raises(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, src string")
     with pytest.raises(ValueError, match="zero random pairs"):
         fs.estimate_u_probs(
-            df, {"src": F.col("src_a") == F.col("src_b")}, sample=10
+            df, {"src": [F.col("src_a") == F.col("src_b")]}, sample=10
         )
 
 
 def test_estimate_u_deterministic_across_partitioning(spark):
     rows = [(i, f"s{i % 4}") for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id long, src string")
-    comp = {"src": F.col("src_a") == F.col("src_b")}
+    comp = {"src": [F.col("src_a") == F.col("src_b")]}
     e1 = fs.estimate_u_probs(df.repartition(1), comp, sample=100)
     e2 = fs.estimate_u_probs(df.repartition(11), comp, sample=100)
     assert e1 == e2
 
 
-def test_fs_cluster_end_to_end(spark):
-    """Full Splink-style workflow on a synthetic duplicate corpus:
-    sorted-neighborhood blocking -> gammas -> u from random pairs ->
-    EM -> posterior threshold -> CC. Recovered clusters must match the
-    gold entities at pairwise F1 >= 0.95."""
+def _noisy_duplicates(spark):
+    """120 entities x three noisy copies (10% of copies lose their
+    source), plus sorted-neighborhood candidate pairs on size."""
     from blink_spark.operators.pairs import sorted_neighborhood_pairs
 
     rng = random.Random(7)
@@ -246,41 +250,34 @@ def test_fs_cluster_end_to_end(spark):
     df.count()
     records = df.select("doc_id", "src", "size", "dec")
     pairs = sorted_neighborhood_pairs(records, "size", id_col="doc_id", window=5)
+    return df, records, pairs
+
+
+def test_fs_cluster_end_to_end(spark):
+    """Full Splink-style workflow on a synthetic duplicate corpus:
+    sorted-neighborhood blocking -> gammas -> u from random pairs ->
+    EM -> posterior threshold -> CC. Recovered clusters must match the
+    gold entities at pairwise F1 >= 0.95."""
+    df, records, pairs = _noisy_duplicates(spark)
     res = fs.fs_cluster(
         records,
         pairs,
         {
-            "src": F.col("src_a") == F.col("src_b"),
-            "size": F.abs(F.col("size_a") - F.col("size_b")) <= 1,
-            "dec": F.col("dec_a") == F.col("dec_b"),
+            "src": [F.col("src_a") == F.col("src_b")],
+            "size": [F.abs(F.col("size_a") - F.col("size_b")) <= 1],
+            "dec": [F.col("dec_a") == F.col("dec_b")],
         },
         em_iters=15,
         threshold_p=0.9,
     )
-    # EM must find high m / low u without labels
-    assert all(v > 0.6 for v in res["fit"]["m"].values()), res["fit"]
-    assert all(v < 0.4 for v in res["fit"]["u"].values()), res["fit"]
+    # EM must find high P(agree | match) / low P(agree | non-match)
+    # without labels
+    assert all(v[1] > 0.6 for v in res["fit"]["m"].values()), res["fit"]
+    assert all(v[1] < 0.4 for v in res["fit"]["u"].values()), res["fit"]
     # pairwise F1 of recovered clusters vs gold entities
-    joined = res["clusters"].join(df.select("doc_id", "gold"), "doc_id")
-    both = joined.alias("x").join(
-        joined.alias("y"), F.col("x.doc_id") < F.col("y.doc_id")
-    )
-    agg = both.agg(
-        F.sum(
-            (
-                (F.col("x.cluster_id") == F.col("y.cluster_id"))
-                & (F.col("x.gold") == F.col("y.gold"))
-            ).cast("long")
-        ).alias("tp"),
-        F.sum(
-            (F.col("x.cluster_id") == F.col("y.cluster_id")).cast("long")
-        ).alias("pp"),
-        F.sum((F.col("x.gold") == F.col("y.gold")).cast("long")).alias("gp"),
-    ).collect()[0]
-    prec = agg["tp"] / agg["pp"]
-    rec = agg["tp"] / agg["gp"]
-    f1 = 2 * prec * rec / (prec + rec)
-    assert f1 >= 0.95, (f1, prec, rec)
+    gold = df.select("doc_id", F.col("gold").alias("entity_id"))
+    m = pairwise_metrics(res["clusters"], gold, "doc_id")
+    assert m["f1"] >= 0.95, m
 
 
 def test_fs_cluster_multilevel_end_to_end(spark):
@@ -288,24 +285,9 @@ def test_fs_cluster_multilevel_end_to_end(spark):
     graded gammas (exact src / shared prefix; size |Δ|<=1 / <=3) must
     recover gold entities at pairwise F1 >= 0.95, unsupervised, with
     EM landing high-level mass in m and level-0 mass in u."""
-    from blink_spark.operators.pairs import sorted_neighborhood_pairs
-
-    rng = random.Random(7)
-    rows = []
-    rid = 0
-    for e in range(120):
-        for _ in range(3):
-            src = f"src{e}" if rng.random() > 0.1 else "srcX"
-            rows.append((rid, e, src, 10 * e + rng.randrange(2), e % 97))
-            rid += 1
-    df = spark.createDataFrame(
-        rows, "doc_id long, gold long, src string, size long, dec long"
-    ).cache()
-    df.count()
-    records = df.select("doc_id", "src", "size", "dec")
-    pairs = sorted_neighborhood_pairs(records, "size", id_col="doc_id", window=5)
+    df, records, pairs = _noisy_duplicates(spark)
     dn = F.abs(F.col("size_a") - F.col("size_b"))
-    res = fs.fs_cluster_multilevel(
+    res = fs.fs_cluster(
         records,
         pairs,
         {
@@ -329,26 +311,9 @@ def test_fs_cluster_multilevel_end_to_end(spark):
         top = len(fit["m"][f]) - 1
         assert fit["m"][f][top] > fit["u"][f][top] + 0.3, (f, fit)
     assert fit["u"]["size"][0] > 0.6 and fit["u"]["dec"][0] > 0.6, fit["u"]
-    joined = res["clusters"].join(df.select("doc_id", "gold"), "doc_id")
-    both = joined.alias("x").join(
-        joined.alias("y"), F.col("x.doc_id") < F.col("y.doc_id")
-    )
-    agg = both.agg(
-        F.sum(
-            (
-                (F.col("x.cluster_id") == F.col("y.cluster_id"))
-                & (F.col("x.gold") == F.col("y.gold"))
-            ).cast("long")
-        ).alias("tp"),
-        F.sum(
-            (F.col("x.cluster_id") == F.col("y.cluster_id")).cast("long")
-        ).alias("pp"),
-        F.sum((F.col("x.gold") == F.col("y.gold")).cast("long")).alias("gp"),
-    ).collect()[0]
-    prec = agg["tp"] / agg["pp"]
-    rec = agg["tp"] / agg["gp"]
-    f1 = 2 * prec * rec / (prec + rec)
-    assert f1 >= 0.95, (f1, prec, rec)
+    gold = df.select("doc_id", F.col("gold").alias("entity_id"))
+    m = pairwise_metrics(res["clusters"], gold, "doc_id")
+    assert m["f1"] >= 0.95, m
 
 
 def test_estimate_u_multilevel_rates(spark):
@@ -356,7 +321,7 @@ def test_estimate_u_multilevel_rates(spark):
     (exact agreement 1/v), and the distribution sums to 1."""
     rows = [(i, f"s{i % 4}") for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id long, src string")
-    est = fs.estimate_u_probs_multilevel(
+    est = fs.estimate_u_probs(
         df,
         {"src": [F.col("src_a") == F.col("src_b")]},
         sample=120,
@@ -370,7 +335,7 @@ def test_estimate_u_multilevel_rates(spark):
 def test_em_fit_empty_pairs_raises(spark):
     empty = spark.createDataFrame([], "g_a int, g_b int")
     with pytest.raises(ValueError, match="no candidate pairs"):
-        fs.em_fit(empty, ["a", "b"], iters=1)
+        fs.em_fit(empty, {"a": 1, "b": 1}, iters=1)
 
 
 def test_gammas_null_fields_count_as_disagreement(spark):
@@ -378,7 +343,7 @@ def test_gammas_null_fields_count_as_disagreement(spark):
         [(1, "x", "x"), (2, None, "x"), (3, None, None)],
         "pair_id long, src_a string, src_b string",
     )
-    g = fs.attach_gammas(df, {"src": F.col("src_a") == F.col("src_b")})
+    g = fs.attach_gammas(df, {"src": [F.col("src_a") == F.col("src_b")]})
     got = {r["pair_id"]: r["g_src"] for r in g.collect()}
     assert got == {1: 1, 2: 0, 3: 0}  # never NULL
 

@@ -191,30 +191,6 @@ def test_topk_fracture_healed_by_entity_anchor(spark):
     assert m["f1"] >= 0.99, m
 
 
-def test_erpipeline_entity_partition_with_topk(spark):
-    """The ERPipeline opt-in: cfg.partition='entity' +
-    run(entities=...) turns s3 into the G4 path, making cfg.top_k safe
-    on the fracturing corpus (F1 >= 0.99 WITH top_k enabled)."""
-    from blink_spark.pipeline import ERPipeline
-
-    corpus = generate_files(spark, n_entities=30, seed=5, hot_family_size=120).cache()
-    corpus.count()
-    catalogue = _five(_catalogue_rows(corpus))
-    mentions = _five(corpus)
-    fid = text.stable_file_id("repo", "path", "commit")
-    ment_gold = corpus.select(fid.alias("file_id"), "entity_id")
-    cfg = ERConfig(
-        bands=16, rows_per_band=4, num_hashes=64, shingle_k=3,
-        top_k=3, partition="entity",
-    )
-    res = ERPipeline(cfg).run(mentions, entities=catalogue)
-    m = beval.pairwise_metrics(res.tables["s3_clusters"], ment_gold)
-    assert m["f1"] >= 0.99, m
-    # misconfiguration guard
-    with pytest.raises(ValueError):
-        ERPipeline(cfg).run(mentions)
-
-
 def test_transductive_pins(spark, link_fixture):
     """G2: +inf train-label edges force the labeled mentions onto
     their gold entity (eval_cluster_linking.py:578-589)."""
