@@ -790,9 +790,22 @@ def _dedup_embedding_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_embedding_lsh_parity_sql(
-    n_planes: int = 8, n_tables: int = 8, dim: int = 64
-) -> str:
+def _cosine_raw_sql(a: str, b: str) -> str:
+    """DuckDB twin of similarity.array_cosine over two array columns."""
+    dot = f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
+    na = f"sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
+    nb = f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))"
+    return f"(CASE WHEN {na} = 0 OR {nb} = 0 THEN 0.0 ELSE {dot} / ({na} * {nb}) END)"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """_cosine_raw_sql rounded like qround(·, 6)."""
+    return f"(floor({_cosine_raw_sql(a, b)} * 1000000.0 + 0.5) / 1000000.0)"
+
+
+def _rademacher_keyed_sql(src: str, n_planes: int, n_tables: int, dim: int) -> str:
+    """DuckDB twin of ann._sign_lsh_buckets(planes="rademacher"): one
+    (vec_id, embedding, table_id, bucket) row per vector and table."""
     from blink_spark.operators.ann import rademacher_planes
 
     planes = rademacher_planes(dim, n_planes, n_tables, 42)
@@ -805,37 +818,30 @@ def _dedup_embedding_lsh_parity_sql(
             for j in range(n_planes)
         )
 
-    keyed = " UNION ALL ".join(
+    return " UNION ALL ".join(
         f"SELECT vec_id, embedding, {t} AS table_id, {key_expr(t)} AS bucket "
-        f"FROM embeddings"
+        f"FROM {src}"
         for t in range(n_tables)
     )
+
+
+def _dedup_embedding_lsh_parity_sql(
+    n_planes: int = 8, n_tables: int = 8, dim: int = 64
+) -> str:
     cos = _cosine_sql("a.embedding", "b.embedding")
     return f"""
-WITH k AS ({keyed})
+WITH k AS ({_rademacher_keyed_sql('embeddings', n_planes, n_tables, dim)})
 SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
 FROM k a JOIN k b ON a.table_id = b.table_id AND a.bucket = b.bucket
 WHERE a.vec_id < b.vec_id AND {cos} >= 0.3
 """
 
 
-_DEDUP_EMBEDDING_SQL = """
+_DEDUP_EMBEDDING_SQL = f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       (floor((CASE WHEN sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) = 0
-               OR sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                   / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                      * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-         END) * 1000000.0 + 0.5) / 1000000.0) AS cosine
+       {_cosine_sql('a.embedding', 'b.embedding')} AS cosine
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE (floor((CASE WHEN sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) = 0
-               OR sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-                   / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                      * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-         END) * 1000000.0 + 0.5) / 1000000.0) >= 0.3
+WHERE {_cosine_sql('a.embedding', 'b.embedding')} >= 0.3
 """
 
 
@@ -989,7 +995,7 @@ def _er_canopy_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ER_CANOPY_PARITY_SQL = """
+_ER_CANOPY_PARITY_SQL = f"""
 WITH h AS (
   SELECT vec_id, embedding,
          ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT AS hh
@@ -1000,13 +1006,7 @@ WITH h AS (
 ), member AS (
   SELECT 'c|' || canopy_id AS block_key, e.vec_id
   FROM embeddings e CROSS JOIN pool p
-  WHERE (CASE WHEN sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) = 0
-               OR sqrt(list_dot_product(p.cvec, p.cvec)) = 0
-              THEN 0.0
-              ELSE list_dot_product(e.embedding::DOUBLE[], p.cvec)
-                   / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                      * sqrt(list_dot_product(p.cvec, p.cvec)))
-         END) > 0.6
+  WHERE {_cosine_raw_sql('e.embedding', 'p.cvec')} > 0.6
 )
 SELECT block_key, vec_id FROM member
 UNION ALL
@@ -1337,17 +1337,11 @@ def _ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann.cosine_topk(emb, _ann_queries(emb), k=5)
 
 
-_ANN_COSINE_SQL = """
+_ANN_COSINE_SQL = f"""
 WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         (floor((CASE WHEN sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[])) = 0
-                 OR sqrt(list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[])) = 0
-                THEN 0.0
-                ELSE list_dot_product(q.embedding::DOUBLE[], c.embedding::DOUBLE[])
-                     / (sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))
-                        * sqrt(list_dot_product(c.embedding::DOUBLE[], c.embedding::DOUBLE[])))
-           END) * 1000000.0 + 0.5) / 1000000.0) AS cosine
+         {_cosine_sql('q.embedding', 'c.embedding')} AS cosine
   FROM q CROSS JOIN embeddings c
   WHERE q.vec_id <> c.vec_id
 ), ranked AS (
@@ -1376,15 +1370,8 @@ def _ann_ivf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return ann.ivf_topk(
         emb, _ann_queries(emb), k=5, n_cells=16, nprobe=4,
-        assign="join", refine_iters=0, id_hash="md5",
+        refine_iters=0, id_hash="md5",
     )
-
-
-def _cosine_raw_sql(a: str, b: str) -> str:
-    dot = f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-    na = f"sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
-    nb = f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))"
-    return f"(CASE WHEN {na} = 0 OR {nb} = 0 THEN 0.0 ELSE {dot} / ({na} * {nb}) END)"
 
 
 def _ann_ivf_parity_sql(n_cells: int = 16, nprobe: int = 4, k: int = 5) -> str:
@@ -1416,8 +1403,7 @@ WITH h AS (
   WHERE rk <= {nprobe}
 ), scored AS (
   SELECT DISTINCT qa.query_id, ca.neighbor_id,
-         (floor(({_cosine_raw_sql('qa.q_vec', 'ca.c_vec')}) * 1000000.0 + 0.5)
-            / 1000000.0) AS cosine
+         {_cosine_sql('qa.q_vec', 'ca.c_vec')} AS cosine
   FROM qa JOIN ca USING (cell_id)
   WHERE qa.query_id <> ca.neighbor_id
 ), ranked AS (
@@ -1441,7 +1427,7 @@ def _ann_ivf_refined_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return ann.ivf_topk(
         emb, _ann_queries(emb), k=5, n_cells=16, nprobe=4,
-        assign="join", refine_iters=1, id_hash="md5",
+        refine_iters=1, id_hash="md5",
     )
 
 
@@ -1497,8 +1483,7 @@ WITH h AS (
   WHERE rk <= {nprobe}
 ), scored AS (
   SELECT DISTINCT qa.query_id, ca.neighbor_id,
-         (floor(({_cosine_raw_sql('qa.q_vec', 'ca.c_vec')}) * 1000000.0 + 0.5)
-            / 1000000.0) AS cosine
+         {_cosine_sql('qa.q_vec', 'ca.c_vec')} AS cosine
   FROM qa JOIN ca USING (cell_id)
   WHERE qa.query_id <> ca.neighbor_id
 ), ranked AS (
@@ -1630,42 +1615,11 @@ def _ann_lsh_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    dot = f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-    na = f"sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[]))"
-    nb = f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[]))"
-    return (
-        f"(floor((CASE WHEN {na} = 0 OR {nb} = 0 THEN 0.0 "
-        f"ELSE {dot} / ({na} * {nb}) END) * 1000000.0 + 0.5) / 1000000.0)"
-    )
-
-
 def _ann_lsh_parity_sql(n_planes: int = 8, n_tables: int = 6, dim: int = 64) -> str:
-    from blink_spark.operators.ann import rademacher_planes
-
-    planes = rademacher_planes(dim, n_planes, n_tables, 42)
-
-    def key_expr(t: int) -> str:
-        terms = []
-        for j in range(n_planes):
-            arr = "[" + ",".join(str(float(s)) for s in planes[t][j]) + "]"
-            terms.append(
-                f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-                f"{arr}::DOUBLE[]) > 0 THEN {2 ** j} ELSE 0 END)"
-            )
-        return " + ".join(terms)
-
-    def keyed(src: str) -> str:
-        return " UNION ALL ".join(
-            f"SELECT vec_id, embedding, {t} AS table_id, {key_expr(t)} AS bucket "
-            f"FROM {src}"
-            for t in range(n_tables)
-        )
-
     return f"""
 WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 = 0),
-kq AS ({keyed('q')}),
-kc AS ({keyed('embeddings')}),
+kq AS ({_rademacher_keyed_sql('q', n_planes, n_tables, dim)}),
+kc AS ({_rademacher_keyed_sql('embeddings', n_planes, n_tables, dim)}),
 scored AS (
   SELECT DISTINCT kq.vec_id AS query_id, kc.vec_id AS neighbor_id,
          {_cosine_sql('kq.embedding', 'kc.embedding')} AS cosine
@@ -1737,18 +1691,6 @@ def _ann_nnd_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nnd_cos_sql(a: str, b: str) -> str:
-    la, lb = f"{a}.embedding::DOUBLE[]", f"{b}.embedding::DOUBLE[]"
-    return (
-        f"(floor((CASE WHEN sqrt(list_dot_product({la}, {la})) = 0 "
-        f"OR sqrt(list_dot_product({lb}, {lb})) = 0 THEN 0.0 "
-        f"ELSE list_dot_product({la}, {lb}) / "
-        f"(sqrt(list_dot_product({la}, {la})) * "
-        f"sqrt(list_dot_product({lb}, {lb}))) END) * 1000000.0 + 0.5) "
-        f"/ 1000000.0)"
-    )
-
-
 _ANN_NND_PARITY_SQL = f"""
 WITH leads AS (
   SELECT vec_id AS query_id,
@@ -1760,7 +1702,7 @@ WITH leads AS (
   UNION ALL
   SELECT query_id, n2 AS neighbor_id FROM leads WHERE n2 IS NOT NULL
 ), e0s AS (
-  SELECT e0.query_id, e0.neighbor_id, {_nnd_cos_sql('a', 'b')} AS cosine
+  SELECT e0.query_id, e0.neighbor_id, {_cosine_sql('a.embedding', 'b.embedding')} AS cosine
   FROM e0 JOIN embeddings a ON e0.query_id = a.vec_id
           JOIN embeddings b ON e0.neighbor_id = b.vec_id
 ), sym AS (
@@ -1790,7 +1732,7 @@ WITH leads AS (
   LEFT JOIN e0 ON c.query_id = e0.query_id AND c.neighbor_id = e0.neighbor_id
   WHERE e0.query_id IS NULL
 ), scored_new AS (
-  SELECT f.query_id, f.neighbor_id, {_nnd_cos_sql('a', 'b')} AS cosine
+  SELECT f.query_id, f.neighbor_id, {_cosine_sql('a.embedding', 'b.embedding')} AS cosine
   FROM fresh f JOIN embeddings a ON f.query_id = a.vec_id
                JOIN embeddings b ON f.neighbor_id = b.vec_id
 ), merged AS (

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from blink_spark.functions.parityhash import check_id_hash
+
 # 2^60 — the md5-prefix hash is 15 hex digits = 60 bits; xxhash64 is
 # folded into the same range so both paths share the bucket math
 _HASH_SPACE = float(1 << 60)
@@ -25,7 +27,9 @@ def _id_hash64(id_col: str, seed: int, id_hash: str):
     """Both branches honor ``seed``: the md5 parity hash folds it into
     the hashed string (md5("<id>-<seed>")) so seed-varied splits (e.g.
     cross-validation folds) differ under either hash. A DuckDB twin
-    must hash the same concatenation: md5(id::VARCHAR || '-<seed>')."""
+    must hash the same concatenation: md5(id::VARCHAR || '-<seed>').
+    Any other id_hash raises (parityhash.check_id_hash)."""
+    check_id_hash(id_hash)
     if id_hash == "md5":
         return F.expr(
             f"cast(conv(substring(md5(concat(cast({id_col} as string), "

@@ -9,9 +9,10 @@ Here the same exact->approximate ladder is expressed as DataFrames:
   * cosine_topk       exact brute-force (the IndexFlatIP analog) —
                       join + window top-k; broadcast the smaller side
   * ivf_topk          IVF: deterministic centroid sample, cell
-                      assignment via one vectorized numpy matmul UDF,
-                      queries probe nprobe cells (the IndexIVFFlat
-                      analog; cell equi-join replaces the cross join)
+                      assignment via a broadcast join against the
+                      centroid table, queries probe nprobe cells (the
+                      IndexIVFFlat analog; cell equi-join replaces the
+                      cross join)
   * lsh_topk          random-hyperplane sign-LSH bucket keys (the
                       HNSW/ANN alternative; bucket equi-join)
 
@@ -30,9 +31,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
-from blink_spark.functions.similarity import array_cosine, array_dot
-
+from blink_spark.functions.parityhash import sample_hash64
 from blink_spark.functions.rounding import qround
+from blink_spark.functions.similarity import array_cosine, array_dot
 
 
 def _topk_window(scored: DataFrame, k: int) -> DataFrame:
@@ -52,14 +53,13 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, neighbor_id, cosine, rank).
 
     queries=None -> self-search (excludes self-pairs).
 
-    Broadcast policy (broadcast_queries=None -> auto): broadcast the
-    query side ONLY when an explicit bounded query table is given
+    Broadcast policy: broadcast the query side ONLY when an explicit
+    bounded query table is given
     (|queries| << |corpus| is the baseline shape — the corpus streams
     and never shuffles). Self-search broadcasts NOTHING: the "query
     side" is the whole corpus, and broadcasting it OOMs every executor
@@ -69,13 +69,11 @@ def cosine_topk(
     """
     self_search = queries is None
     q = corpus if self_search else queries
-    if broadcast_queries is None:
-        broadcast_queries = not self_search
     qs = q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     cs = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    if broadcast_queries:
+    if not self_search:
         qs = F.broadcast(qs)
     else:
         # bars BroadcastNestedLoopJoin (which would broadcast a side)
@@ -110,26 +108,6 @@ def _vec_matrix(series: pd.Series, dim: int, what: str) -> np.ndarray:
     return np.asarray(vecs, dtype=np.float64)
 
 
-def _matmul_assign_udf(centroids: np.ndarray, nprobe: int):
-    """pandas UDF: embedding -> nprobe nearest centroid ids (by cosine).
-    One numpy matmul per Arrow batch — the FAISS coarse quantizer."""
-    cn = centroids / np.maximum(
-        np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-    )
-    dim = centroids.shape[1]
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _assign(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in batches:
-            m = _vec_matrix(series, dim, "ivf cell assignment")
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            sims = m @ cn.T  # [batch, n_cells]
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            yield pd.Series([row.astype(np.int32).tolist() for row in order])
-
-    return _assign
-
-
 def ivf_cells_df(
     corpus: DataFrame,
     n_cells: int,
@@ -138,23 +116,17 @@ def ivf_cells_df(
     seed: int = 42,
     id_hash: str = "xxhash",
 ) -> DataFrame:
-    """Centroid TABLE (cell_id, centroid): the n_cells rows with
-    smallest xxhash64(id, seed) — order-free, parallelism-independent
-    (the kmeans-free analog of FAISS's clustering). Never collected to
-    the driver here: the scale path when nlist grows past what a task
-    closure should ship (~10^4 centroids; at nlist = sqrt(10^12) the
-    closure is GBs, a broadcast-joined table is not).
+    """Centroid TABLE (cell_id, centroid): the n_cells rows with the
+    smallest parityhash.sample_hash64(id) — order-free,
+    parallelism-independent (the kmeans-free analog of FAISS's
+    clustering). cell_id is the rank in the sample. Never collected to
+    the driver: at nlist = sqrt(10^12) a driver-side centroid matrix is
+    GBs, a broadcast-joined table is not. PQ codebooks draw their
+    codeword sample here too.
 
-    id_hash="md5" swaps xxhash64 for the first 60 bits of
-    md5(str(id)) so a SQL oracle can reproduce the sample (the
-    portability construction shared with the MinHash parity kernel);
-    production stays xxhash."""
-    if id_hash == "md5":
-        from blink_spark.functions.parityhash import md5_prefix_hash64
-
-        h = md5_prefix_hash64(id_col)
-    else:
-        h = F.xxhash64(F.col(id_col), F.lit(seed))
+    id_hash="md5" makes the sample SQL-reproducible for the parity
+    oracles; production stays xxhash."""
+    h = sample_hash64(id_col, seed, id_hash)
     sample = (
         corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("centroid"), h.alias("h"))
         .orderBy("h")
@@ -164,6 +136,31 @@ def ivf_cells_df(
     w = W.orderBy("h", "cid")
     return sample.select(
         (F.row_number().over(w) - 1).cast("int").alias("cell_id"), "centroid"
+    )
+
+
+def _component_means(assigned: DataFrame, keys: list[str], vec_col: str) -> DataFrame:
+    """(*keys, newc): the per-key mean of the vectors in vec_col — the
+    Lloyd update shared by ivf_refine_centroids and pq_codebooks.
+    posexplode + DECIMAL-exact component sums (order-free =>
+    parallelism-independent), reassembled with array_sort. The EXACT
+    decimal sum is cast to double BEFORE dividing: decimal division
+    scale rules are engine-specific, but (exact-decimal -> nearest-
+    double) / bigint is identical everywhere — what lets a SQL oracle
+    reproduce the means."""
+    stats = (
+        assigned.select(*keys, F.posexplode(vec_col).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.sum(F.col("x").cast("decimal(38,12)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+    return (
+        stats.withColumn("m", F.col("s").cast("double") / F.col("n"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(*keys, F.transform("pm", lambda s: s["m"]).alias("newc"))
     )
 
 
@@ -180,43 +177,22 @@ def ivf_refine_centroids(
     so results stay deterministic.
 
     Each pass: assign every corpus vector to its nearest centroid
-    (broadcast join + window argmax = the nprobe=1 coarse quantizer),
-    then per-cell mean via posexplode + DECIMAL-exact component sums
-    (order-free => parallelism-independent) reassembled with
-    array_sort. Cells that attract no vectors keep their previous
-    centroid. Tighter cells raise recall at fixed nprobe."""
+    (broadcast join + argmax = the nprobe=1 coarse quantizer), then
+    the per-cell mean (_component_means). Cells that attract no
+    vectors keep their previous centroid. Tighter cells raise recall
+    at fixed nprobe."""
+    from blink_spark.io.scratch import spill_scratch
+
     side = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vec"))
     for _ in range(iters):
         assigned = _assign_cells_join(side, cents_df, 1, "nid", "vec")
-        stats = (
-            assigned.select("cell_id", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("cell_id", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(38,12)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        means = (
-            # cast the EXACT decimal sum to double BEFORE dividing:
-            # decimal division scale rules are engine-specific, but
-            # (exact-decimal -> nearest-double) / bigint is identical
-            # everywhere — what lets a SQL oracle reproduce the means
-            stats.withColumn("m", F.col("s").cast("double") / F.col("n"))
-            .groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "cell_id",
-                F.transform("pm", lambda s: s["m"]).alias("newc"),
-            )
-        )
+        means = _component_means(assigned, ["cell_id"], "vec")
         cents_df = cents_df.join(means, "cell_id", "left").select(
             "cell_id", F.coalesce("newc", "centroid").alias("centroid")
         )
         # the table is n_cells rows but is consumed twice per pass
         # (assignment + mean join) and its lineage doubles each
         # iteration — spill per pass, same policy as the CC iterations
-        from blink_spark.io.scratch import spill_scratch
-
         cents_df, _ = spill_scratch(cents_df, "ivf_cents_iter")
     return cents_df
 
@@ -226,7 +202,8 @@ def _assign_cells_join(
 ) -> DataFrame:
     """Cell assignment via a broadcast join against the centroid table:
     rank each row's cosine to every centroid, keep the nprobe best.
-    Replaces the closure-shipped numpy matmul when nlist is large.
+    The one coarse quantizer: IVF search, IVF-PQ and every Lloyd pass
+    run it, and the IVF parity oracles restate it in SQL.
 
     nprobe=1 (the corpus-side shape — every row, every Lloyd pass) is
     a hash-agg max(struct) argmax instead of a row_number window: the
@@ -272,60 +249,33 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    assign: str = "closure",
     refine_iters: int = 1,
     id_hash: str = "xxhash",
 ) -> DataFrame:
     """IVF ANN: corpus rows live in their 1 nearest cell; queries probe
     their nprobe nearest cells; exact cosine + top-k within probed
     cells. Equi-join on cell_id replaces the cross join — shuffle
-    shrinks by ~n_cells/nprobe.
-
-    assign="closure": centroids collected once, shipped in the UDF
-    closure, one numpy matmul per Arrow batch (fastest; right up to
-    nlist ~ 10^4). assign="join": centroids stay a DataFrame and cell
-    assignment is a broadcast join + window (the nlist >> 10^4 scale
-    path — nothing centroid-sized ever touches the driver).
+    shrinks by ~n_cells/nprobe. Cell assignment is a broadcast join
+    against the centroid table (_assign_cells_join), so nothing
+    centroid-sized ever touches the driver.
 
     refine_iters Lloyd passes (default 1, distributed, deterministic —
     see ivf_refine_centroids) tighten the hash-sampled init centroids
-    before assignment; 0 restores the raw sample."""
+    before assignment; 0 keeps the raw sample."""
     q = queries if queries is not None else corpus
     cents_df = ivf_cells_df(corpus, n_cells, id_col, vec_col, seed, id_hash)
     if refine_iters:
         cents_df = ivf_refine_centroids(
             corpus, cents_df, refine_iters, id_col, vec_col
         )
-    if assign == "join":
-        cs = _assign_cells_join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-            ),
-            cents_df, 1, "neighbor_id", "c_vec",
-        )
-        qs = _assign_cells_join(
-            q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-            cents_df, nprobe, "query_id", "q_vec",
-        )
-    else:
-        # collect the (refined) centroid table ordered by cell_id —
-        # n_cells rows, sharing the init + refinement with the join
-        # path
-        cents = np.asarray(
-            [
-                np.asarray(r["centroid"], dtype=np.float64)
-                for r in cents_df.orderBy("cell_id").collect()
-            ]
-        )
-        assign1 = _matmul_assign_udf(cents, 1)
-        assignp = _matmul_assign_udf(cents, nprobe)
-        cs = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-        ).withColumn("cell_id", F.element_at(assign1(F.col("c_vec")), 1))
-        qs = (
-            q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-            .withColumn("cell_id", F.explode(assignp(F.col("q_vec"))))
-        )
+    cs = _assign_cells_join(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
+        cents_df, 1, "neighbor_id", "c_vec",
+    )
+    qs = _assign_cells_join(
+        q.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        cents_df, nprobe, "query_id", "q_vec",
+    )
     scored = (
         qs.join(cs, "cell_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -544,64 +494,33 @@ def pq_codebooks(
 ) -> DataFrame:
     """Per-subspace PQ codebooks (subspace, code, centroid) — the
     IndexPQ train() analog (Jégou, Douze & Schmid, TPAMI 2011; FAISS
-    ProductQuantizer). Init = the ksub corpus rows with smallest
-    hash(id) sliced into m subvectors (code = rank in the sample, so
-    the table is parallelism-independent); refine_iters distributed
-    Lloyd passes per subspace tighten them (assignment = broadcast
-    join + hash-agg argmin, means = DECIMAL-exact per-(subspace, code,
-    pos) sums — order-free, deterministic, the same discipline as
-    ivf_refine_centroids). id_hash="md5" makes the sample
-    SQL-reproducible for the parity oracle."""
-    if id_hash == "md5":
-        from blink_spark.functions.parityhash import md5_prefix_hash64
-
-        h = md5_prefix_hash64(id_col)
-    else:
-        h = F.xxhash64(F.col(id_col), F.lit(seed))
-    sample = (
-        corpus.select(
-            F.col(id_col).alias("sid"), F.col(vec_col).alias("vec"), h.alias("h")
-        )
-        .orderBy("h")
-        .limit(ksub)
-    )
-    w = W.orderBy("h", "sid")  # ksub rows only — bounded window
-    sample = sample.select(
-        (F.row_number().over(w) - 1).cast("int").alias("code"), "vec"
-    )
-    cb = _subvectors(sample, m, dim, "code", "vec").select(
-        "subspace", "code", F.col("sub").alias("centroid")
-    )
+    ProductQuantizer). Init = the ksub-row hash-min sample of
+    ivf_cells_df sliced into m subvectors (code = rank in the sample,
+    so the table is parallelism-independent); refine_iters distributed
+    Lloyd passes per subspace tighten them (assignment = pq_encode's
+    broadcast join + hash-agg argmin, update = _component_means per
+    (subspace, code), the same kernel as ivf_refine_centroids).
+    Codewords that attract no subvectors keep their previous value.
+    id_hash="md5" makes the sample SQL-reproducible for the parity
+    oracle."""
     from blink_spark.io.scratch import spill_scratch
 
+    sample = ivf_cells_df(corpus, ksub, id_col, vec_col, seed, id_hash)
+    cb = _subvectors(sample, m, dim, "cell_id", "centroid").select(
+        "subspace", F.col("cell_id").alias("code"), F.col("sub").alias("centroid")
+    )
+    # m·ksub rows, but consumed twice per Lloyd pass (encode + mean
+    # join) and by every downstream consumer (encode + LUT), each
+    # re-executing the full-corpus sample / training lineage — spill
+    # the init and every pass (same policy as the pipeline's
+    # multi-consumer tables)
+    cb, _ = spill_scratch(cb, "pq_codebook")
     for _ in range(refine_iters):
         assigned = pq_encode(corpus, cb, m, dim, id_col, vec_col, keep_sub=True)
-        stats = (
-            assigned.select("subspace", "code", F.posexplode("sub").alias("pos", "x"))
-            .groupBy("subspace", "code", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(38,12)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
+        means = _component_means(assigned, ["subspace", "code"], "sub")
+        cb = cb.join(means, ["subspace", "code"], "left").select(
+            "subspace", "code", F.coalesce("newc", "centroid").alias("centroid")
         )
-        means = (
-            # cast-then-divide: see ivf_refine_centroids on decimal
-            # division portability
-            stats.withColumn("mv", F.col("s").cast("double") / F.col("n"))
-            .groupBy("subspace", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mv"))).alias("pm"))
-            .select(
-                "subspace", "code", F.transform("pm", lambda s: s["mv"]).alias("newc")
-            )
-        )
-        # m·ksub rows, but the table is consumed twice per pass (encode
-        # + mean join) and by every downstream consumer (encode + LUT),
-        # each re-executing the full-corpus training lineage — spill per
-        # pass (same policy as the pipeline's multi-consumer tables)
-        cb, _ = spill_scratch(cb, "pq_codebook")
-    if refine_iters == 0:
-        # even the raw sample's lineage is a full-corpus orderBy scan;
-        # encode + LUT both consume cb
         cb, _ = spill_scratch(cb, "pq_codebook")
     return cb
 
@@ -666,7 +585,6 @@ def pq_topk(
     seed: int = 42,
     id_hash: str = "xxhash",
     refine_iters: int = 1,
-    residual: bool = True,
 ) -> DataFrame:
     """PQ-ADC ANN (the FAISS IndexPQ / IndexIVFPQ analog — the memory
     tier of the reference's retrieval ladder, faiss_indexer.py:72-137):
@@ -682,10 +600,10 @@ def pq_topk(
     must share a probed cell, cutting the ADC scan ~n_cells/nprobe —
     at 100 TB that's the difference between scanning 10⁹ codes and
     10⁷ per query, while the PQ codes keep the per-row payload at m
-    bytes instead of 4·dim. With residual=True (default, FAISS
-    IndexIVFPQ semantics) the codebooks quantize x − centroid(x)
-    instead of x — residuals are much smaller than raw vectors, so
-    the same code budget loses far less signal — and the ADC total
+    bytes instead of 4·dim. As in FAISS IndexIVFPQ, the codebooks
+    then quantize x − centroid(x) instead of x — residuals are much
+    smaller than raw vectors, so the same code budget loses far less
+    signal — and the ADC total
     uses the IP expansion q·x = q·centroid + q·residual: the coarse
     term is exact per (query, cell), only the residual goes through
     the LUT. Everything is equi-join + window: no cartesian product,
@@ -710,14 +628,12 @@ def pq_topk(
             "neighbor_id", "cell_id"
         )
         qa_full = _assign_cells_join(qs, cents, nprobe, "query_id", "q_vec")
-        if residual:
-            # both consumed twice in residual mode (pairs + residual /
-            # coarse term): n·1 and |Q|·nprobe rows — cheap spills that
-            # stop the broadcast-rank job from running twice
-            ca, _ = spill_scratch(ca, "pq_ca")
-            qa_full, _ = spill_scratch(qa_full, "pq_qa")
+        # both consumed twice (pairs + residual / coarse term): n·1 and
+        # |Q|·nprobe rows — cheap spills that stop the broadcast-rank
+        # job from running twice
+        ca, _ = spill_scratch(ca, "pq_ca")
+        qa_full, _ = spill_scratch(qa_full, "pq_qa")
         qa = qa_full.select("query_id", "cell_id")
-    if n_cells and residual:
         # quantize residuals x - centroid(x); one shared codebook
         rcorpus = (
             cs.join(ca, "neighbor_id")
@@ -746,8 +662,8 @@ def pq_topk(
         codes = pq_encode(corpus, cb, m, dim, id_col, vec_col)
     codes = codes.select(F.col("pq_id").alias("neighbor_id"), "subspace", "code")
     qsubs = _subvectors(qs, m, dim, "query_id", "q_vec")
-    # LUT on the RAW query either way: with residuals, q·x decomposes
-    # as q·centroid (exact coarse term) + q·residual (the LUT part)
+    # LUT on the RAW query: with the IVF layer, q·x decomposes as
+    # q·centroid (exact coarse term) + q·residual (the LUT part)
     lut = qsubs.join(F.broadcast(cb), "subspace").select(
         "query_id",
         "subspace",
@@ -762,19 +678,14 @@ def pq_topk(
             .select("query_id", "neighbor_id", "cell_id")
             .dropDuplicates(["query_id", "neighbor_id"])
         )
-        if residual:
-            qc = qa_full.join(F.broadcast(cents), "cell_id").select(
-                "query_id",
-                "cell_id",
-                qround(array_dot(F.col("q_vec"), F.col("centroid")), 6)
-                .cast("decimal(38,6)")
-                .alias("coarse"),
-            )
-            pairs = pairs.join(qc, ["query_id", "cell_id"])
-        else:
-            pairs = pairs.withColumn(
-                "coarse", F.lit(0).cast("decimal(38,6)")
-            )
+        qc = qa_full.join(F.broadcast(cents), "cell_id").select(
+            "query_id",
+            "cell_id",
+            qround(array_dot(F.col("q_vec"), F.col("centroid")), 6)
+            .cast("decimal(38,6)")
+            .alias("coarse"),
+        )
+        pairs = pairs.join(qc, ["query_id", "cell_id"])
         adc_in = pairs.join(codes, "neighbor_id").join(
             lut, ["query_id", "subspace", "code"]
         )
@@ -887,8 +798,6 @@ def nn_descent_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    early_stop: bool = True,
-    checkpoint_fn=None,
 ) -> DataFrame:
     """E7 graph-based ANN — the role HNSW plays in the reference's
     retrieval ladder (faiss_indexer.py's graph index family), built
@@ -905,7 +814,11 @@ def nn_descent_topk(
     the join fans out at most sample_k^2 per node); (3) exact-cosine
     score the new pairs only (anti-join against current edges);
     (4) merge + keep per-node top-k by window. Stops early when a
-    round improves nothing. Every step shuffles on node id — no
+    round changes no edge: its convergence signature — edge count and
+    the exact sum of xxhash64(query_id, neighbor_id) — is observed on
+    the round's checkpoint write (observed_checkpoint, as in
+    connected_components), so convergence costs no extra Spark job.
+    Every step shuffles on node id — no
     driver-side graph, no sequential insert, skew bounded by the
     degree cap.
 
@@ -914,38 +827,41 @@ def nn_descent_topk(
     Self-search semantics (query set == corpus), like the reference's
     within-corpus kNN during clustering.
 
-    The per-round graph is checkpointed DURABLY (scratch parquet by
-    default, same policy as connected_components — a lost executor
-    must not kill the whole descent). ``checkpoint_fn`` is a df->df
-    checkpointer for callers with a specific durable location."""
+    The per-round graph is checkpointed DURABLY to scratch parquet
+    (same policy as connected_components — a lost executor must not
+    kill the whole descent)."""
     if sample_k is None:
         sample_k = max(4, k // 2)
     from blink_spark.operators.connected_components import (
+        exact_sum,
+        observed_checkpoint,
         scratch_parquet_checkpointer,
     )
 
-    ckpt = checkpoint_fn or scratch_parquet_checkpointer("nnd_iter")
+    ckpt = scratch_parquet_checkpointer("nnd_iter")
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        exact_sum(F.xxhash64("query_id", "neighbor_id")).alias("h"),
+    )
     base = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vec"))
-    edges = lsh_topk(
-        corpus, k=k, id_col=id_col, vec_col=vec_col, seed=seed
-    ).select("query_id", "neighbor_id", "cosine")
-    edges = ckpt(edges)
+    edges, sig = observed_checkpoint(
+        ckpt,
+        lsh_topk(corpus, k=k, id_col=id_col, vec_col=vec_col, seed=seed).select(
+            "query_id", "neighbor_id", "cosine"
+        ),
+        *signature,
+    )
     cap_hash = F.xxhash64("query_id", "neighbor_id", F.lit(seed))
 
     for _ in range(iterations):
-        merged = nnd_round(edges, base, k, sample_k, cap_hash)
-        merged = ckpt(merged)
-        if early_stop:
-            no_change = merged.join(
-                edges.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_anti",
-            ).isEmpty()
-            edges = merged
-            if no_change:
-                break
-        else:
-            edges = merged
+        # an unchanged edge set keeps its (count, hash sum); a changed
+        # one changes it barring a 64-bit hash-sum collision
+        edges, new_sig = observed_checkpoint(
+            ckpt, nnd_round(edges, base, k, sample_k, cap_hash), *signature
+        )
+        if new_sig == sig:
+            break
+        sig = new_sig
     return _topk_window(edges, k)
 
 

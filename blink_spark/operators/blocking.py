@@ -108,6 +108,7 @@ def canopy_blocks(
     """
     import os
 
+    from blink_spark.functions.parityhash import sample_hash64
     from blink_spark.functions.similarity import array_cosine
     from blink_spark.io.scratch import release, scratch_dir, spill
 
@@ -117,7 +118,7 @@ def canopy_blocks(
         df.select(
             F.col(id_col).alias("cid"),
             F.col(vec_col).alias("cvec"),
-            _canopy_hash(id_col, seed, id_hash).alias("h"),
+            sample_hash64(id_col, seed, id_hash).alias("h"),
         )
         .orderBy("h", "cid")
         .limit(n_candidates)
@@ -162,14 +163,6 @@ def canopy_blocks(
     if d is not None:
         release(d)
     return _canopy_membership(df, accepted, s_loose, id_col, vec_col)
-
-
-def _canopy_hash(id_col: str, seed: int, id_hash: str):
-    if id_hash == "md5":
-        from blink_spark.functions.parityhash import md5_prefix_hash64
-
-        return md5_prefix_hash64(id_col)
-    return F.xxhash64(F.col(id_col), F.lit(seed))
 
 
 def _suppress_greedy(

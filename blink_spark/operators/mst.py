@@ -114,9 +114,7 @@ def max_spanning_forest_per_component(
 
 # ---------------------------------------------------- distributed Borůvka
 
-def max_spanning_forest(
-    edges: DataFrame, max_rounds: int = 30, checkpoint_fn=None
-) -> DataFrame:
+def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Distributed Borůvka: edges(src, dst, score) -> maximum spanning
     forest (src, dst, score) with src < dst.
 
@@ -129,20 +127,17 @@ def max_spanning_forest(
     DataFrame op, nothing is collected to the driver except the
     convergence counter.
 
-    Per-round state (labels + forest) is checkpointed DURABLY
-    (scratch parquet by default, like connected_components — never
+    Per-round state (labels + forest) is checkpointed DURABLY to
+    scratch parquet, like connected_components — never
     localCheckpoint, whose executor-resident blocks die with a lost
-    executor). ``checkpoint_fn`` takes a name and returns a
-    checkpointer when the caller wants a specific durable location:
-    ``checkpoint_fn=lambda name: make_parquet_checkpointer(dir, name=name)``."""
+    executor."""
     from blink_spark.operators.connected_components import (
         scratch_parquet_checkpointer,
     )
 
-    mk = checkpoint_fn or scratch_parquet_checkpointer
-    ck_comp = mk("boruvka_comp")
-    ck_forest = mk("boruvka_forest")
-    ck_cc = mk("boruvka_cc")
+    ck_comp = scratch_parquet_checkpointer("boruvka_comp")
+    ck_forest = scratch_parquet_checkpointer("boruvka_forest")
+    ck_cc = scratch_parquet_checkpointer("boruvka_cc")
     spark = edges.sparkSession
     # canonical undirected edges, deduped to best score per pair
     e = (
@@ -157,7 +152,7 @@ def max_spanning_forest(
     )
     # e is re-joined EVERY round; one durable spill stops each round
     # from recomputing the (possibly expensive) upstream edge lineage
-    e = mk("boruvka_edges")(e)
+    e = scratch_parquet_checkpointer("boruvka_edges")(e)
     # comp: node -> component label (min node id of the tree so far)
     comp = (
         e.select(F.col("u").alias("node"))

@@ -60,10 +60,10 @@ def test_ivf_recall(spark, emb):
     assert r >= 0.9, r
 
 
-def test_ivf_lloyd_refinement_raises_recall(spark):
-    """On a hard fixture (24 true clusters, heavy noise, 16 cells,
-    nprobe=3) the one-pass Lloyd refinement must beat the raw
-    hash-sampled centroids and clear 0.95 (measured: 0.928 -> 0.976)."""
+@pytest.fixture(scope="module")
+def hard(spark):
+    """24 true clusters under heavy noise: raw hash-sampled centroids
+    and codewords fit it poorly."""
     rng = np.random.RandomState(9)
     K = 24
     cents = rng.standard_normal((K, 12)) * 2
@@ -73,7 +73,14 @@ def test_ivf_lloyd_refinement_raises_recall(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
     df.count()
-    exact = ann.cosine_topk(df, k=5)
+    return df, ann.cosine_topk(df, k=5).cache()
+
+
+def test_ivf_lloyd_refinement_raises_recall(hard):
+    """On the hard fixture (16 cells, nprobe=3) the one-pass Lloyd
+    refinement must beat the raw hash-sampled centroids and clear 0.95
+    (measured: 0.928 -> 0.976)."""
+    df, exact = hard
     r0 = ann.recall_vs_exact(
         ann.ivf_topk(df, k=5, n_cells=16, nprobe=3, refine_iters=0), exact
     )
@@ -82,6 +89,22 @@ def test_ivf_lloyd_refinement_raises_recall(spark):
     )
     assert r1 > r0, (r1, r0)
     assert r1 >= 0.95, r1
+
+
+def test_pq_lloyd_refinement_raises_recall(hard):
+    """The PQ codebooks' Lloyd pass must move the codewords: on the
+    hard fixture (m=4, ksub=8, overfetch=4) it beats the raw sample
+    (measured: 0.750 -> 0.875)."""
+    df, exact = hard
+    r0, r1 = (
+        ann.recall_vs_exact(
+            ann.pq_topk(df, k=5, m=4, ksub=8, dim=12, overfetch=4, refine_iters=it),
+            exact,
+        )
+        for it in (0, 1)
+    )
+    assert r1 > r0, (r1, r0)
+    assert r1 >= 0.85, r1
 
 
 def test_lsh_recall(spark, emb):
@@ -107,6 +130,24 @@ def test_nn_descent_improves_on_lsh_init(spark, emb):
     r_nnd = ann.recall_vs_exact(nnd, exact)
     assert r_nnd >= r_init, (r_nnd, r_init)
     assert r_nnd >= 0.9, r_nnd
+
+
+def test_nn_descent_job_budget(spark, emb):
+    """Convergence is read from each round's checkpoint write (observed
+    count + hash-sum signature), so a round runs no separate probe job.
+    The fixture converges after 3 rounds; the rows are the ones the
+    anti-join-probe loop produced (digest of the sorted rows)."""
+    import hashlib
+
+    sc = spark.sparkContext
+    sc.setJobGroup("nnd_job_budget", "nnd_job_budget")
+    try:
+        rows = sorted(map(tuple, ann.nn_descent_topk(emb, k=5, iterations=4).collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 1000
+    assert hashlib.sha256(repr(rows).encode()).hexdigest()[:16] == "c92749fe9c485eaa"
+    assert len(sc.statusTracker().getJobIdsForGroup("nnd_job_budget")) <= 32
 
 
 def test_nn_descent_deterministic_across_partitioning(spark, emb):
@@ -187,15 +228,3 @@ def test_pq_deterministic_across_partitioning(spark, emb):
     a = ann.pq_topk(emb.repartition(1), k=5, m=4, ksub=16, dim=16, overfetch=8)
     b = ann.pq_topk(emb.repartition(13), k=5, m=4, ksub=16, dim=16, overfetch=8)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_ivfpq_residual_not_worse_than_raw(spark, emb):
-    """Residual encoding (FAISS IndexIVFPQ semantics) must not lose
-    recall vs quantizing raw vectors at identical parameters — the
-    residuals are strictly smaller targets for the same code budget."""
-    exact = ann.cosine_topk(emb, k=5)
-    kw = dict(k=5, m=4, ksub=16, dim=16, overfetch=8, n_cells=8, nprobe=6)
-    r_res = ann.recall_vs_exact(ann.pq_topk(emb, residual=True, **kw), exact)
-    r_raw = ann.recall_vs_exact(ann.pq_topk(emb, residual=False, **kw), exact)
-    assert r_res >= r_raw - 1e-9, (r_res, r_raw)
-    assert r_res >= 0.95, r_res

@@ -33,6 +33,7 @@ FAST_QUERIES = [
     # round-3 additions
     "eval_dendrogram_chain",
     "ann_pq_parity",
+    "ann_ivf_parity",
     "ann_ivf_refined_parity",
     "er_sorted_neighborhood",
     "er_fs_weights",

@@ -1,6 +1,7 @@
 """Deterministic splitting/sampling: proportion bounds, exact
 stratification, append-stability (the property randomSplit lacks),
-partition-independence."""
+partition-independence, and the id_hash check shared by every
+hash-min sample."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +11,8 @@ from blink_spark.functions.sampling import (
     per_group_sample,
     stratified_exact_split,
 )
+from blink_spark.operators import ann
+from blink_spark.operators.blocking import canopy_blocks
 
 FR = {"train": 0.8, "val": 0.1, "test": 0.1}
 
@@ -109,3 +112,24 @@ def test_stratified_split_exhaustive(docs):
     assert out.where(F.col("split").isNull()).count() == 0
     # helper columns must not leak
     assert set(out.columns) == {"doc_id", "grp", "split"}
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda df: ann.ivf_topk(df, k=2, n_cells=2, nprobe=1, id_hash="MD5"),
+        lambda df: ann.pq_topk(df, k=2, m=2, ksub=2, dim=4, id_hash="MD5"),
+        lambda df: canopy_blocks(df, 0.5, 0.9, id_hash="MD5"),
+        lambda df: hash_split(df, FR, id_col="vec_id", id_hash="MD5"),
+    ],
+    ids=["ivf_topk", "pq_topk", "canopy_blocks", "hash_split"],
+)
+def test_unknown_id_hash_rejected(spark, call):
+    """Only "xxhash" and "md5" name a sample hash; anything else (here
+    a misspelt "MD5") must raise, not silently fall back to xxhash."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="id_hash"):
+        call(df)
