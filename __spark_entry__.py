@@ -2387,17 +2387,28 @@ SELECT size, count(*)::BIGINT AS n_groups FROM (
 def _eval_ari_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 as a driver-oracled query: exact-integer ARI pair-counting
     components between the exact-dup partition (normalized-text groups)
-    and the (lang, source) partition as the gold analog. All integer
-    arithmetic — bit-identical across engines; ARI = ari_num/ari_den.
-    The float NMI/ARI path (`eval.nmi_ari`) is pytest-gated instead
-    (log/entropy can't hash-match across libm implementations)."""
-    from blink_spark.eval import ari_components
+    and the (lang, source) partition as the gold analog. n / idx2 /
+    sa2 / sb2 come from the one contingency kernel
+    (eval.nmi_ari_components); ari_num and ari_den are projected from
+    them in BIGINT, so ARI = ari_num/ari_den is bit-identical across
+    engines. The float NMI/ARI finish (`eval.nmi_ari`) is pytest-gated
+    instead."""
+    from blink_spark.eval import nmi_ari_components
 
     labels = _t(spark, sf_dir, "documents").select(
         ts.norm_sha256("text").alias("cluster_id"),
         F.concat_ws("|", "lang", "source").alias("entity_id"),
     )
-    return ari_components(labels)
+    n, idx2, sa2, sb2 = (F.col(c) for c in ("n", "idx2", "sa2", "sb2"))
+    n2 = n * (n - F.lit(1))
+    return nmi_ari_components(labels).select(
+        n,
+        idx2,
+        sa2,
+        sb2,
+        (F.lit(2) * (idx2 * n2 - sa2 * sb2)).alias("ari_num"),
+        ((sa2 + sb2) * n2 - F.lit(2) * sa2 * sb2).alias("ari_den"),
+    )
 
 
 _EVAL_ARI_SQL = f"""
@@ -2716,11 +2727,11 @@ FROM f
 
 
 def _eval_nmi_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 distributed NMI+ARI (eval.nmi_ari_components — the G9 sweep
-    now uses this instead of collecting the sparse contingency): same
-    groups-of-4 vs `source` fixture as eval_bcubed. Entropy sums are
-    1e-6-quantized ln terms summed as exact BIGINTs (order-free;
-    JVM↔DuckDB↔libm agreement pinned by
+    """A5 distributed NMI+ARI (eval.nmi_ari_components, a fold of the
+    one contingency kernel that pairwise, B³ and the G9 sweep's
+    `nmi_ari` share): same groups-of-4 vs `source` fixture as
+    eval_bcubed. Entropy sums are 1e-6-quantized ln terms summed as
+    exact BIGINTs (order-free; JVM↔DuckDB↔libm agreement pinned by
     tests/test_eval_nmi.py::test_xlnx_micro_cross_engine), ARI the
     exact-integer pair components — so NMI and ARI are each ONE IEEE
     divide of integers both engines reproduce bit-for-bit."""

@@ -29,10 +29,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blink_spark.eval import nmi_ari_distributed
+from blink_spark.eval import nmi_ari
 from blink_spark.io.scratch import spill_scratch
 from blink_spark.io.tables import StageStore
-from blink_spark.linking import LinkPipeline
+from blink_spark.linking import LinkPipeline, mention_predictions
 from blink_spark.operators.connected_components import (
     assign_clusters,
     connected_components,
@@ -56,21 +56,6 @@ def exclude_entities(flagged: DataFrame, dropped: DataFrame) -> DataFrame:
     da = dropped.select(F.col("entity_id").alias("id_a"))
     db = dropped.select(F.col("entity_id").alias("id_b"))
     return flagged.join(da, "id_a", "left_anti").join(db, "id_b", "left_anti")
-
-
-def _clusters_from_partition(part: DataFrame, men_ids: DataFrame) -> DataFrame:
-    pred = men_ids.join(
-        part.where(~F.col("is_entity")).select(
-            F.col("node_id").alias("file_id"),
-            F.col("entity_id").alias("pred_entity_id"),
-        ),
-        "file_id",
-        "left",
-    )
-    return pred.select(
-        "file_id",
-        F.coalesce("pred_entity_id", F.col("file_id")).alias("cluster_id"),
-    )
 
 
 def entity_discovery(
@@ -99,58 +84,47 @@ def entity_discovery(
     pipe = LinkPipeline(cfg, mention_knn=mention_knn)
     flagged, men_ids, _ = pipe.score_joint(mentions, catalogue, store=store)
     spark = mentions.sparkSession
-    rows: list[dict] = []
-    clusters_by_t: dict[float, DataFrame] = {}
     if drop_all:
         # eval_entity_discovery.py:336-349: strip every edge touching
         # an entity; cluster the mention graph by threshold + CC
-        mm, _ = spill_scratch(
+        table, _ = spill_scratch(
             flagged.where(~F.col("ent_a") & ~F.col("ent_b")).select(
                 "id_a", "id_b", "score"
             ),
             "discovery_mm",
         )
-        if thresholds is None:
-            thresholds = threshold_candidates(mm, "score", k=n_thresholds)
-        for t in thresholds:
-            kept = mm.where(F.col("score") >= F.lit(float(t)))
+
+        def clusters_at(kept: DataFrame) -> DataFrame:
             cc = connected_components(kept.select("id_a", "id_b"))
-            clusters = assign_clusters(men_ids, cc, id_col="file_id")
-            # distributed NMI/ARI: singleton-heavy rungs (exactly what
-            # high thresholds produce) make the sparse contingency
-            # O(corpus rows) — never collect it per rung
-            m = nmi_ari_distributed(clusters, gold)
-            rows.append(
-                {
-                    "threshold": float(t),
-                    "nmi": float(m["nmi"]),
-                    "ari": float(m["ari"]),
-                    "average": (float(m["nmi"]) + float(m["ari"])) / 2.0,
-                }
-            )
-            clusters_by_t[float(t)] = clusters
+            return assign_clusters(men_ids, cc, id_col="file_id")
+
     else:
-        surv = exclude_entities(flagged, dropped)
         # re-attachment is implicit: joint_graph's best-entity window
         # over the SURVIVING scored pairs is the reference's
         # nearest-surviving-entity fetch (:246-308)
-        graph, _ = spill_scratch(pipe.joint_graph(surv), "discovery_graph")
-        if thresholds is None:
-            thresholds = threshold_candidates(graph, "score", k=n_thresholds)
-        for t in thresholds:
-            g = graph.where(F.col("score") >= F.lit(float(t)))
-            part = entity_constrained_partition(g, undirected=undirected)
-            clusters = _clusters_from_partition(part, men_ids)
-            m = nmi_ari_distributed(clusters, gold)
-            rows.append(
-                {
-                    "threshold": float(t),
-                    "nmi": float(m["nmi"]),
-                    "ari": float(m["ari"]),
-                    "average": (float(m["nmi"]) + float(m["ari"])) / 2.0,
-                }
-            )
-            clusters_by_t[float(t)] = clusters
+        surv = exclude_entities(flagged, dropped)
+        table, _ = spill_scratch(pipe.joint_graph(surv), "discovery_graph")
+
+        def clusters_at(kept: DataFrame) -> DataFrame:
+            part = entity_constrained_partition(kept, undirected=undirected)
+            return mention_predictions(part, men_ids)[1]
+
+    if thresholds is None:
+        thresholds = threshold_candidates(table, "score", k=n_thresholds)
+    rows: list[dict] = []
+    clusters_by_t: dict[float, DataFrame] = {}
+    for t in thresholds:
+        clusters = clusters_at(table.where(F.col("score") >= F.lit(float(t))))
+        m = nmi_ari(clusters, gold)
+        rows.append(
+            {
+                "threshold": float(t),
+                "nmi": m["nmi"],
+                "ari": m["ari"],
+                "average": (m["nmi"] + m["ari"]) / 2.0,
+            }
+        )
+        clusters_by_t[float(t)] = clusters
     results = spark.createDataFrame(
         rows, "threshold double, nmi double, ari double, average double"
     )

@@ -6,10 +6,10 @@ of the reference's approximate retrieval,
 document gets a 60-bit bit-majority fingerprint; near-duplicates are
 pairs within a Hamming radius.
 
-Everything is JVM-side SQL (higher-order functions inside whole-stage
-codegen — no Python at all), with DuckDB SQL twins for the oracle
-harness. Token hash = first 60 bits of md5 (available identically in
-both engines), so Spark and DuckDB produce bit-identical fingerprints.
+Fingerprints come from one Arrow-batched numpy kernel (simhash_udf),
+with DuckDB SQL twins for the oracle harness. Token hash = first 60
+bits of md5 (available identically in both), so Spark and DuckDB
+produce bit-identical fingerprints.
 
 Scale path: candidate pairs come from a band equi-join, not a cross
 join. With B bands and radius r, r <= B-1 differing bits leave at
@@ -34,48 +34,20 @@ DEFAULT_BANDS = 4
 BAND_BITS = N_BITS // DEFAULT_BANDS  # 15
 
 
-def token_hash60_expr(tokens_sql_expr: str) -> str:
-    """Spark-SQL expr: array<string> -> array<bigint> of 60-bit md5
-    token hashes (distinct tokens; set semantics like MinHash)."""
-    return (
-        f"transform(array_distinct({tokens_sql_expr}), "
-        f"t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS bigint))"
-    )
-
-
 def token_hash60_sql(tokens_sql_expr: str) -> str:
-    """DuckDB twin of token_hash60_expr."""
+    """DuckDB SQL: list of tokens -> list of 60-bit md5 token hashes
+    (distinct tokens; set semantics like MinHash) — the oracle twin of
+    simhash_udf's token hash."""
     return (
         f"list_transform(list_distinct({tokens_sql_expr}), "
         f"t -> ('0x' || substr(md5(t), 1, 15))::BIGINT)"
     )
 
 
-def simhash_expr(hashes_col: str) -> Column:
-    """Spark Column: array<bigint> token hashes -> 60-bit simhash.
-
-    Bit j of the result is the majority vote of bit j over all token
-    hashes (>=0 net vote -> 1). Pure SQL higher-order functions.
-    """
-    return F.expr(
-        f"""
-        aggregate(
-          sequence(0, {N_BITS - 1}),
-          cast(0 AS bigint),
-          (acc, j) -> acc + IF(
-            aggregate(
-              {hashes_col},
-              cast(0 AS bigint),
-              (a, h) -> a + ((h div cast(pow(2, j) AS bigint)) % 2) * 2 - 1
-            ) >= 0,
-            cast(pow(2, j) AS bigint),
-            cast(0 AS bigint)))
-        """
-    )
-
-
 def simhash_sql(hashes_expr: str) -> str:
-    """DuckDB twin of simhash_expr."""
+    """DuckDB SQL: list of token hashes -> 60-bit simhash. Bit j of the
+    result is the majority vote of bit j over all token hashes (>=0 net
+    vote -> 1) — the oracle twin of simhash_udf."""
     return (
         f"list_sum([CASE WHEN coalesce(list_sum(list_transform({hashes_expr}, "
         f"h -> ((h // (1::BIGINT << j)) % 2) * 2 - 1)), 0) >= 0 "
@@ -88,9 +60,8 @@ def simhash_udf():
     """Arrow-batched pandas UDF: array<string> tokens -> simhash.
 
     The production kernel: one numpy bit-matrix per batch. Exact
-    integer math throughout, so it is bit-identical to simhash_expr /
-    the DuckDB oracle — verified in tests. ~100x faster than the
-    interpreted higher-order-function expression at scale.
+    integer math throughout, so it is bit-identical to the DuckDB
+    oracle (token_hash60_sql + simhash_sql) — verified in tests.
     """
     jbits = np.arange(N_BITS, dtype=np.int64)
     weights = (np.int64(1) << jbits)
@@ -111,7 +82,7 @@ def simhash_udf():
             out = np.empty(len(series), dtype=np.int64)
             for i, toks in enumerate(series):
                 if toks is None or len(toks) == 0:
-                    # empty vote: all bits >= 0 -> all ones (matches expr)
+                    # empty vote: all bits >= 0 -> all ones (matches SQL)
                     out[i] = (1 << N_BITS) - 1
                     continue
                 hs = np.fromiter(

@@ -5,8 +5,8 @@ crossencoder.py:210-220, batched scoring train_crossencoder_mst.py:64-89).
 Three kernels, per BASELINE.json north star:
   * Jaro-Winkler on paths      (batched Arrow pandas UDF)
   * token-set Jaccard          (native Column expr — JVM, codegen)
-  * hashed-TF cosine           (native expr for oracle parity + a
-                                Counter-based Arrow kernel for speed)
+  * TF cosine                  (Counter-based Arrow kernel, exact in
+                                any summation order)
 """
 
 from __future__ import annotations
@@ -116,39 +116,14 @@ def token_set_jaccard(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------- TF cosine
 
 
-def tf_cosine_expr(a: Column, b: Column) -> Column:
-    """Term-frequency cosine over token arrays, pure Column expressions.
-
-    dot = Σ_{t ∈ A∩B} tf_a(t)·tf_b(t); norms likewise. O(|A∩B|·|a|)
-    — used for oracle-parity queries and small corpora; the Arrow
-    kernel below is the throughput path.
-    """
-    da, db = F.array_distinct(a), F.array_distinct(b)
-
-    def tf(arr: Column, t: Column) -> Column:
-        return F.size(F.filter(arr, lambda x: x == t)).cast("double")
-
-    dot = F.aggregate(
-        F.array_intersect(da, db),
-        F.lit(0.0),
-        lambda acc, t: acc + tf(a, t) * tf(b, t),
-    )
-    norm_a = F.sqrt(F.aggregate(da, F.lit(0.0), lambda acc, t: acc + tf(a, t) * tf(a, t)))
-    norm_b = F.sqrt(F.aggregate(db, F.lit(0.0), lambda acc, t: acc + tf(b, t) * tf(b, t)))
-    return F.when((norm_a == 0) | (norm_b == 0), F.lit(0.0)).otherwise(
-        dot / (norm_a * norm_b)
-    )
-
-
 def tf_cosine_py(a: list[str], b: list[str]) -> float:
     """Pure-Python oracle + UDF kernel.
 
-    Bit-identical to tf_cosine_expr and the DuckDB oracle in ANY
-    summation order: term counts are integers, so dot and the squared
-    norms are exact in float64 (< 2^53); math.sqrt is correctly
-    rounded IEEE; the final division is a single rounding. This is why
-    the fast Counter kernel can replace the Column expression on the
-    hot path without breaking value-hash parity.
+    Bit-identical to the DuckDB oracle in ANY summation order: term
+    counts are integers, so dot and the squared norms are exact in
+    float64 (< 2^53); math.sqrt is correctly rounded IEEE; the final
+    division is a single rounding — so the Counter kernel keeps
+    value-hash parity.
     """
     import math
     from collections import Counter

@@ -63,6 +63,28 @@ def flag_entity_endpoints(scores: DataFrame, ent_ids: DataFrame) -> DataFrame:
     )
 
 
+def mention_predictions(
+    part: DataFrame, men_ids: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(pred, clusters) from a partition: pred (file_id,
+    pred_entity_id) has a row for every mention, NULL when it reached
+    no entity; clusters (file_id, cluster_id) names each mention's
+    cluster by its entity, or by the mention itself when unlinked."""
+    pred = men_ids.join(
+        part.where(~F.col("is_entity")).select(
+            F.col("node_id").alias("file_id"),
+            F.col("entity_id").alias("pred_entity_id"),
+        ),
+        "file_id",
+        "left",
+    )
+    clusters = pred.select(
+        "file_id",
+        F.coalesce("pred_entity_id", F.col("file_id")).alias("cluster_id"),
+    )
+    return pred, clusters
+
+
 class LinkPipeline:
     """Two-table retrieve -> rerank -> assign flow.
 
@@ -222,19 +244,7 @@ class LinkPipeline:
             max_component_edges=self.max_component_edges,
             oversize=self.oversize,
         )
-        # every mention gets a row; no-candidate mentions stay NULL
-        pred = men_ids.join(
-            part.where(~F.col("is_entity")).select(
-                F.col("node_id").alias("file_id"),
-                F.col("entity_id").alias("pred_entity_id"),
-            ),
-            "file_id",
-            "left",
-        )
-        clusters = pred.select(
-            "file_id",
-            F.coalesce("pred_entity_id", F.col("file_id")).alias("cluster_id"),
-        )
+        pred, clusters = mention_predictions(part, men_ids)
         res.tables = {
             "scores": flagged,
             "entity_candidates": cands,
@@ -277,15 +287,7 @@ def k_ladder(
     rows = []
     for k in ks:
         graph = pipe.joint_graph(flagged, mention_knn=k)
-        part = entity_constrained_partition(graph)
-        pred = men_ids.join(
-            part.where(~F.col("is_entity")).select(
-                F.col("node_id").alias("file_id"),
-                F.col("entity_id").alias("pred_entity_id"),
-            ),
-            "file_id",
-            "left",
-        )
+        pred, _ = mention_predictions(entity_constrained_partition(graph), men_ids)
         acc = linking_accuracy(pred, gold)
         rows.append(
             {

@@ -124,14 +124,16 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     (3) merge components along picked edges (CC over the picked-edge
     component graph — tiny: one edge per component). Components at
     least halve per round -> O(log n) rounds; every step is a
-    DataFrame op, nothing is collected to the driver except the
-    convergence counter.
+    DataFrame op, and nothing reaches the driver but the forest's row
+    count, observed on the round's forest checkpoint: it stops growing
+    once no cross-component edge is left.
 
     Per-round state (labels + forest) is checkpointed DURABLY to
     scratch parquet, like connected_components — never
     localCheckpoint, whose executor-resident blocks die with a lost
     executor."""
     from blink_spark.operators.connected_components import (
+        observed_checkpoint,
         scratch_parquet_checkpointer,
     )
 
@@ -161,16 +163,14 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
         .withColumn("comp", F.col("node"))
     )
     forest = spark.createDataFrame([], "u long, v long, score double")
-    converged = False
-    for _ in range(max_rounds):
+    n_forest = 0
+    # round max_rounds only checks for leftover cross edges
+    for rnd in range(max_rounds + 1):
         labeled = (
             e.join(comp.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
             .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
             .where(F.col("cu") != F.col("cv"))
         )
-        if labeled.isEmpty():
-            converged = True
-            break
         # best cross edge per component, from BOTH endpoints' perspective
         per_side = labeled.select(F.col("cu").alias("c"), "u", "v", "score").unionByName(
             labeled.select(F.col("cv").alias("c"), "u", "v", "score")
@@ -188,9 +188,27 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
             .select("u", "v", "score")
             .distinct()
         )
-        forest = forest.unionByName(picked).groupBy("u", "v").agg(
-            F.max("score").alias("score")
+        # forest edges are intra-component, so every picked edge is new:
+        # the forest's row count, observed on its checkpoint write, grows
+        # iff a cross-component edge was left — no separate probe action
+        forest, obs = observed_checkpoint(
+            ck_forest, forest.unionByName(picked), F.count(F.lit(1)).alias("n")
         )
+        if obs["n"] == n_forest:
+            break
+        if rnd == max_rounds:
+            # Components at least halve per round, so 30 rounds cover
+            # 2^30 components; exhausting them means something is wrong
+            # (or an absurd max_rounds override). Never return a
+            # silently partial forest — callers can't tell truncation
+            # from convergence.
+            raise RuntimeError(
+                f"max_spanning_forest: cross-component edges remain after "
+                f"{max_rounds} Boruvka rounds; the returned forest would be "
+                f"non-spanning. Raise max_rounds (components halve per round, "
+                f"so rounds ~ log2(n_nodes))."
+            )
+        n_forest = obs["n"]
         # contract: CC over the component graph induced by picked edges
         cedges = (
             picked.join(
@@ -209,23 +227,6 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
             .select("node", F.coalesce("new", "comp").alias("comp"))
         )
         comp = ck_comp(comp)
-        forest = ck_forest(forest)
-    if not converged and not (
-        e.join(comp.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
-        .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
-        .where(F.col("cu") != F.col("cv"))
-        .isEmpty()
-    ):
-        # Components at least halve per round, so 30 rounds cover 2^30
-        # components; exhausting them means something is wrong (or an
-        # absurd max_rounds override). Never return a silently partial
-        # forest — callers can't tell truncation from convergence.
-        raise RuntimeError(
-            f"max_spanning_forest: cross-component edges remain after "
-            f"{max_rounds} Boruvka rounds; the returned forest would be "
-            f"non-spanning. Raise max_rounds (components halve per round, "
-            f"so rounds ~ log2(n_nodes))."
-        )
     return forest.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), "score"
     )

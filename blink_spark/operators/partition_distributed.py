@@ -80,14 +80,21 @@ from blink_spark.operators.connected_components import (
     scratch_parquet_checkpointer,
 )
 
+# total min-label hops before _propagate_min gives up, and the most
+# hops it chains lazily between two checkpoints
+PROPAGATE_MAX_HOPS = 512
+HOPS_PER_ROUND = 8
+# pointer-doubling rounds: resolves kept chains up to 2^48 deep
+DOUBLING_MAX_ROUNDS = 48
+# fwd/bwd refinement rounds of the SCC-closed classes
+REFINE_ROUNDS = 1
+
 
 def _propagate_min(
     nodes: DataFrame,
     edges: DataFrame,
     forward: bool,
     label_col: str,
-    max_iterations: int = 512,
-    hops_per_round: int = 8,
     name: str = "g4_prop",
 ) -> DataFrame:
     """Min-label fixpoint along directed edges.
@@ -108,10 +115,10 @@ def _propagate_min(
     and checkpoint commit — the per-round latency floor on a large
     cluster, and the dominant cost of high-diameter chain graphs —
     amortize across the batch. The batch GROWS geometrically
-    1, 2, 4, ... up to ``hops_per_round``: small-diameter graphs (the
+    1, 2, 4, ... up to ``HOPS_PER_ROUND``: small-diameter graphs (the
     common kNN shape) converge on cheap batches instead of paying a
     full batch of stages per probe, while chains approach the
-    amortized regime. ``max_iterations`` caps TOTAL hops; overshooting
+    amortized regime. ``PROPAGATE_MAX_HOPS`` caps TOTAL hops; overshooting
     the fixpoint inside a batch is harmless (updates are idempotent at
     the fixpoint). Loud failure past the cap, as everywhere else in
     the repo.
@@ -122,8 +129,8 @@ def _propagate_min(
     prev_sum = None
     hops_done = 0
     batch = 1
-    while hops_done < max_iterations:
-        for _ in range(min(batch, max_iterations - hops_done)):
+    while hops_done < PROPAGATE_MAX_HOPS:
+        for _ in range(min(batch, PROPAGATE_MAX_HOPS - hops_done)):
             msgs = edges.join(
                 cur.select(F.col("node_id").alias(up), F.col(label_col)), up
             ).select(F.col(down).alias("node_id"), label_col)
@@ -138,11 +145,13 @@ def _propagate_min(
         if prev_sum is not None and s == prev_sum:
             return cur
         prev_sum = s
-        batch = min(batch * 2, hops_per_round)
+        batch = min(batch * 2, HOPS_PER_ROUND)
     raise ValueError(
-        f"_propagate_min({name}): no fixpoint after {max_iterations} "
-        "hops — the graph's directed diameter exceeds the cap; raise "
-        "max_iterations for pathological chain graphs"
+        f"_propagate_min({name}): no fixpoint after {PROPAGATE_MAX_HOPS} "
+        "hops — an oversize component's directed diameter exceeds the "
+        "cap. Fracture it with a higher score threshold or a lower "
+        "mention_knn, or resolve oversize components with "
+        "oversize='salvage'."
     )
 
 
@@ -191,9 +200,7 @@ def _entity_reaching(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return fixed.where(F.col("reach") == 0).select("node_id")
 
 
-def _scc_classes(
-    mm_edges: DataFrame, nodes: DataFrame, refine_rounds: int = 1
-) -> DataFrame:
+def _scc_classes(mm_edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """(node_id, scc_class) for mention nodes, where every class is a
     union of SCCs of the mention-mention subgraph.
 
@@ -218,7 +225,7 @@ def _scc_classes(
         "node_id", F.lit(0).cast("long").alias("scc_class")
     )
     edges = mm_edges.select("src", "dst")
-    for r in range(refine_rounds):
+    for r in range(REFINE_ROUNDS):
         e = edges
         if r > 0:
             # restrict to intra-class edges for refinement rounds
@@ -273,11 +280,7 @@ def _greedy_kept_edges(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _assign_by_doubling(
-    kept: DataFrame,
-    flags: DataFrame,
-    max_iterations: int = 48,
-) -> DataFrame:
+def _assign_by_doubling(kept: DataFrame, flags: DataFrame) -> DataFrame:
     """kept(src, dst) functional forest -> (node_id, entity_id) for
     every source, via pointer doubling: each round every unresolved
     chain halves, so depth-D chains resolve in ceil(log2 D) self-join
@@ -300,7 +303,7 @@ def _assign_by_doubling(
         ),
         undone,
     )
-    for _ in range(max_iterations):
+    for _ in range(DOUBLING_MAX_ROUNDS):
         if obs["undone"] == 0:
             return state.select("node_id", F.col("cur").alias("entity_id"))
         hop = state.select(
@@ -324,7 +327,7 @@ def _assign_by_doubling(
         )
     raise ValueError(
         "_assign_by_doubling: chains unresolved after "
-        f"{max_iterations} doubling rounds — a cycle in the kept graph "
+        f"{DOUBLING_MAX_ROUNDS} doubling rounds — a cycle in the kept graph "
         "would violate the greedy's in-tree invariant; this is a bug"
     )
 
@@ -332,7 +335,6 @@ def _assign_by_doubling(
 def distributed_partition(
     part: DataFrame,
     max_component_edges: int = 2_000_000,
-    refine_rounds: int = 1,
 ) -> DataFrame:
     """Exact G4 over edges(src, dst, score, src_is_entity,
     dst_is_entity) -> (node_id, is_entity, entity_id), bit-identical to
@@ -363,7 +365,7 @@ def distributed_partition(
         ok, "node_id"
     ).select("node_id")
     mm = live.where(~F.col("dst_is_entity")).select("src", "dst")
-    cls = _scc_classes(mm, mentions, refine_rounds=refine_rounds)
+    cls = _scc_classes(mm, mentions)
     cls, _ = spill_scratch(cls, "g4d_cls")
 
     g = live.join(
@@ -446,12 +448,11 @@ def distributed_partition(
         desc = ", ".join(f"class {r['g_src']}: {r['n']} edges" for r in worst)
         raise ValueError(
             "distributed_partition: SCC class sub-problem(s) exceed "
-            f"max_component_edges={max_component_edges} after "
-            f"{refine_rounds} refinement rounds ({desc}). These are "
-            "genuine strongly-connected cores (or label-class "
-            "coarsenings of them) — raise refine_rounds, raise "
-            "max_component_edges, or fracture the graph with a higher "
-            "score threshold."
+            f"max_component_edges={max_component_edges} ({desc}). These "
+            "are genuine strongly-connected cores (or label-class "
+            "coarsenings of them), which one task must hold. Fracture "
+            "them with a higher score threshold or a lower mention_knn, "
+            "or resolve oversize components with oversize='salvage'."
         )
     kept_sub = sub_edges.groupBy("g_src").applyInPandas(
         _greedy_kept_edges, schema=_KEPT_SCHEMA

@@ -40,6 +40,9 @@ FAST_QUERIES = [
     "er_fs_multilevel",
     "er_canopy_parity",
     "eval_bcubed",
+    # NMI/ARI folds of the one contingency kernel
+    "eval_ari_components",
+    "eval_nmi_components",
     # the sign-LSH flows run by ann_lsh_topk / dedup_embedding_lsh,
     # with Rademacher planes
     "ann_lsh_parity",

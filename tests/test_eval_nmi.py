@@ -1,5 +1,6 @@
-"""Distributed NMI/ARI (eval.nmi_ari_components) — the G9 sweep path's
-scale fix: no driver-side contingency collect (round-3 VERDICT item 2).
+"""Distributed NMI/ARI: `nmi_ari_components` (quantized, one row) and
+`nmi_ari` (the same contingency fold finished exactly on the driver) —
+no driver-side contingency collect.
 """
 
 import math
@@ -9,7 +10,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from blink_spark.eval import nmi_ari, nmi_ari_components, nmi_ari_distributed
+from blink_spark.eval import nmi_ari, nmi_ari_components
 
 
 def _labels_df(spark, rows):
@@ -22,9 +23,9 @@ def _gold_df(spark, rows):
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_distributed_matches_driver(spark, seed):
-    """nmi_ari_distributed == nmi_ari to the 1e-6 quantization grid on
-    random partitions (the driver version is itself pytest-pinned
-    against sklearn conventions)."""
+    """nmi_ari_components == nmi_ari to the 1e-6 quantization grid on
+    random partitions (nmi_ari is itself pytest-pinned against the
+    Python oracle)."""
     rng = random.Random(seed)
     n = 400
     clusters = _labels_df(
@@ -32,7 +33,9 @@ def test_distributed_matches_driver(spark, seed):
     )
     gold = _gold_df(spark, [(i, f"e{rng.randrange(9)}") for i in range(n)])
     want = nmi_ari(clusters, gold)
-    got = nmi_ari_distributed(clusters, gold)
+    got = nmi_ari_components(
+        clusters.join(gold, "file_id").select("cluster_id", "entity_id")
+    ).collect()[0]
     assert got["n"] == n
     assert abs(got["nmi"] - want["nmi"]) < 1e-4
     assert abs(got["ari"] - want["ari"]) < 1e-4
@@ -40,17 +43,17 @@ def test_distributed_matches_driver(spark, seed):
 
 def test_distributed_degenerate_cases(spark):
     # both trivial -> (1, 1); one trivial -> nmi 0; empty -> (1, 1)
-    both = nmi_ari_distributed(
+    both = nmi_ari(
         _labels_df(spark, [(i, "c") for i in range(5)]),
         _gold_df(spark, [(i, "e") for i in range(5)]),
     )
     assert both["nmi"] == 1.0 and both["ari"] == 1.0
-    one = nmi_ari_distributed(
+    one = nmi_ari(
         _labels_df(spark, [(i, "c") for i in range(6)]),
         _gold_df(spark, [(i, f"e{i % 2}") for i in range(6)]),
     )
     assert one["nmi"] == 0.0
-    empty = nmi_ari_distributed(
+    empty = nmi_ari(
         _labels_df(spark, []), _gold_df(spark, [])
     )
     assert empty["nmi"] == 1.0 and empty["ari"] == 1.0 and empty["n"] == 0
@@ -141,8 +144,51 @@ def test_ari_products_past_int64(spark):
     want = num / den
     assert -1.0 <= row["ari"] <= 1.0
     assert abs(row["ari"] - want) < 1e-6
-    # and the distributed wrapper returns it (no None / no wrap)
+    # and nmi_ari returns it (no None / no wrap)
     clusters = labels.select("file_id", "cluster_id")
     gold = labels.select("file_id", "entity_id")
-    got = nmi_ari_distributed(clusters, gold)
+    got = nmi_ari(clusters, gold)
     assert abs(got["ari"] - want) < 1e-6
+
+
+def _job_count(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_contingency_job_budget(spark):
+    """Every metric folds the one GROUPING SETS contingency: the NMI/ARI
+    components take no more Spark jobs than pairwise P/R/F1 on the same
+    labels, and B³ adds only its two marginal windows — no scratch
+    spill, no per-marginal aggregate."""
+    from blink_spark.eval import bcubed, pairwise_metrics
+
+    rng = random.Random(0)
+    rows = [(i, rng.randrange(300), rng.randrange(200)) for i in range(2000)]
+    clusters = spark.createDataFrame(
+        [(i, c) for i, c, _ in rows], "file_id long, cluster_id long"
+    ).cache()
+    gold = spark.createDataFrame(
+        [(i, e) for i, _, e in rows], "file_id long, entity_id long"
+    ).cache()
+    clusters.count(), gold.count()
+    labels = clusters.join(gold, "file_id").select("cluster_id", "entity_id")
+    try:
+        n_pairwise = _job_count(
+            spark, "pairwise_budget", lambda: pairwise_metrics(clusters, gold)
+        )
+        n_nmi = _job_count(
+            spark, "nmi_budget", lambda: nmi_ari_components(labels).collect()
+        )
+        n_bcubed = _job_count(
+            spark, "bcubed_budget", lambda: bcubed(labels).collect()
+        )
+    finally:
+        clusters.unpersist(), gold.unpersist()
+    assert n_nmi <= n_pairwise, (n_nmi, n_pairwise)
+    assert n_bcubed <= n_pairwise + 2, (n_bcubed, n_pairwise)

@@ -90,6 +90,33 @@ def test_boruvka_equals_kruskal(spark, seed, distinct):
     assert got == want  # identical edge SET, not just equal weight
 
 
+# below the 70 jobs a per-round emptiness probe costs on this graph (local[8])
+BORUVKA_JOB_BUDGET = 64
+
+
+def test_boruvka_job_budget(spark):
+    """Convergence is read from the forest's row count, observed on its
+    checkpoint write: no per-round emptiness probe and no post-loop
+    probe. The forest itself stays Kruskal's."""
+    rng = random.Random(42)
+    edges = [
+        (rng.randrange(300), rng.randrange(300), rng.randint(1, 50) / 10.0)
+        for _ in range(900)
+    ]
+    df = spark.createDataFrame(edges, "src long, dst long, score double").cache()
+    df.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("boruvka_job_budget", "boruvka_job_budget")
+    try:
+        got = {tuple(r) for r in max_spanning_forest(df).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    assert got == set(max_spanning_forest_py(edges))
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("boruvka_job_budget"))
+    assert n_jobs <= BORUVKA_JOB_BUDGET, n_jobs
+
+
 def test_per_component_equals_boruvka(spark):
     rng = random.Random(21)
     # two disjoint blobs -> two components
