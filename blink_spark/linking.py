@@ -102,7 +102,7 @@ class LinkPipeline:
         recall_k: int = 8,
         mention_knn: int = 4,
         max_component_edges: int = 2_000_000,
-        oversize: str = "error",
+        oversize: str = "distributed",
     ):
         self.cfg = cfg or ERConfig()
         self.recall_k = recall_k

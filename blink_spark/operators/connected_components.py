@@ -25,6 +25,7 @@ are identical at any parallelism — required by the scaling check).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, Window
@@ -154,22 +155,31 @@ def _size_partitions(n_edges: int, spark) -> int:
     return max(2, min(default, (n_edges // 1_000_000) + 1))
 
 
+@contextmanager
+def no_aqe(spark, shuffle_partitions: int | None = None):
+    """Scope for an iterative loop, restored on exit: AQE off (it would
+    only split each round's checkpoint write into one job per shuffle
+    stage) and, when given, the loop's own shuffle partition count."""
+    scoped = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        scoped["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    restore = {k: spark.conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in restore.items():
+            spark.conf.set(k, v)
+
+
 def _cc_alternating(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
     oriented = edges.select(
         F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
     ).where(F.col("u") != F.col("v")).distinct()
     cur, sig = observed_checkpoint(_checkpoint, oriented, *_edge_signature())
     spark = cur.sparkSession
-    # the loop sizes its own shuffles; AQE would only split each round's
-    # write into one job per shuffle stage
-    scoped = {
-        "spark.sql.shuffle.partitions": str(_size_partitions(sig["n"], spark)),
-        "spark.sql.adaptive.enabled": "false",
-    }
-    restore = {k: spark.conf.get(k) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
+    with no_aqe(spark, _size_partitions(sig["n"], spark)):
         for it in range(max_iterations):
             cur, new_sig = observed_checkpoint(
                 _checkpoint, _alternating_round(cur), *_edge_signature()
@@ -179,9 +189,6 @@ def _cc_alternating(edges: DataFrame, max_iterations: int, stats: CCStats, _chec
             if new_sig == sig:
                 break
             sig = new_sig
-    finally:
-        for k, v in restore.items():
-            spark.conf.set(k, v)
     # converged: star edges (node -> root); roots label themselves
     labelled = cur.unionByName(cur.select(F.col("v").alias("u"), "v"))
     return labelled.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))

@@ -36,7 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from blink_spark.operators.connected_components import connected_components
+from blink_spark.operators.connected_components import (
+    connected_components,
+    no_aqe,
+    observed_checkpoint,
+    scratch_parquet_checkpointer,
+)
 
 FOREST_SCHEMA = "src long, dst long, score double"
 
@@ -132,101 +137,98 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     scratch parquet, like connected_components — never
     localCheckpoint, whose executor-resident blocks die with a lost
     executor."""
-    from blink_spark.operators.connected_components import (
-        observed_checkpoint,
-        scratch_parquet_checkpointer,
-    )
-
     ck_comp = scratch_parquet_checkpointer("boruvka_comp")
     ck_forest = scratch_parquet_checkpointer("boruvka_forest")
     ck_cc = scratch_parquet_checkpointer("boruvka_cc")
     spark = edges.sparkSession
-    # canonical undirected edges, deduped to best score per pair
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-            F.col("score").cast("double").alias("score"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.max("score").alias("score"))
-    )
-    # e is re-joined EVERY round; one durable spill stops each round
-    # from recomputing the (possibly expensive) upstream edge lineage
-    e = scratch_parquet_checkpointer("boruvka_edges")(e)
-    # comp: node -> component label (min node id of the tree so far)
-    comp = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    forest = spark.createDataFrame([], "u long, v long, score double")
-    n_forest = 0
-    # round max_rounds only checks for leftover cross edges
-    for rnd in range(max_rounds + 1):
-        labeled = (
-            e.join(comp.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
-            .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
-            .where(F.col("cu") != F.col("cv"))
-        )
-        # best cross edge per component, from BOTH endpoints' perspective
-        per_side = labeled.select(F.col("cu").alias("c"), "u", "v", "score").unionByName(
-            labeled.select(F.col("cv").alias("c"), "u", "v", "score")
-        )
-        picked = (
-            per_side.withColumn(
-                "rk",
-                F.row_number().over(
-                    W.partitionBy("c").orderBy(
-                        F.desc("score"), F.asc("u"), F.asc("v")
-                    )
-                ),
+    # AQE off as in CC; the nested CC calls size their own partitions
+    with no_aqe(spark):
+        # canonical undirected edges, deduped to best score per pair
+        e = (
+            edges.select(
+                F.least("src", "dst").alias("u"),
+                F.greatest("src", "dst").alias("v"),
+                F.col("score").cast("double").alias("score"),
             )
-            .where(F.col("rk") == 1)
-            .select("u", "v", "score")
-            .distinct()
+            .where(F.col("u") != F.col("v"))
+            .groupBy("u", "v")
+            .agg(F.max("score").alias("score"))
         )
-        # forest edges are intra-component, so every picked edge is new:
-        # the forest's row count, observed on its checkpoint write, grows
-        # iff a cross-component edge was left — no separate probe action
-        forest, obs = observed_checkpoint(
-            ck_forest, forest.unionByName(picked), F.count(F.lit(1)).alias("n")
-        )
-        if obs["n"] == n_forest:
-            break
-        if rnd == max_rounds:
-            # Components at least halve per round, so 30 rounds cover
-            # 2^30 components; exhausting them means something is wrong
-            # (or an absurd max_rounds override). Never return a
-            # silently partial forest — callers can't tell truncation
-            # from convergence.
-            raise RuntimeError(
-                f"max_spanning_forest: cross-component edges remain after "
-                f"{max_rounds} Boruvka rounds; the returned forest would be "
-                f"non-spanning. Raise max_rounds (components halve per round, "
-                f"so rounds ~ log2(n_nodes))."
-            )
-        n_forest = obs["n"]
-        # contract: CC over the component graph induced by picked edges
-        cedges = (
-            picked.join(
-                comp.select(F.col("node").alias("u"), F.col("comp").alias("id_a")), "u"
-            )
-            .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("id_b")), "v")
-            .select("id_a", "id_b")
-        )
-        merged = connected_components(cedges, checkpoint_fn=ck_cc)
+        # e is re-joined EVERY round; one durable spill stops each round
+        # from recomputing the (possibly expensive) upstream edge lineage
+        e = scratch_parquet_checkpointer("boruvka_edges")(e)
+        # comp: node -> component label (min node id of the tree so far)
         comp = (
-            comp.join(
-                merged.select(F.col("id").alias("comp"), F.col("component").alias("new")),
-                "comp",
-                "left",
-            )
-            .select("node", F.coalesce("new", "comp").alias("comp"))
+            e.select(F.col("u").alias("node"))
+            .unionByName(e.select(F.col("v").alias("node")))
+            .distinct()
+            .withColumn("comp", F.col("node"))
         )
-        comp = ck_comp(comp)
+        forest = spark.createDataFrame([], "u long, v long, score double")
+        n_forest = 0
+        # round max_rounds only checks for leftover cross edges
+        for rnd in range(max_rounds + 1):
+            labeled = (
+                e.join(comp.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
+                .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
+                .where(F.col("cu") != F.col("cv"))
+            )
+            # best cross edge per component, from BOTH endpoints' perspective
+            per_side = labeled.select(F.col("cu").alias("c"), "u", "v", "score").unionByName(
+                labeled.select(F.col("cv").alias("c"), "u", "v", "score")
+            )
+            picked = (
+                per_side.withColumn(
+                    "rk",
+                    F.row_number().over(
+                        W.partitionBy("c").orderBy(
+                            F.desc("score"), F.asc("u"), F.asc("v")
+                        )
+                    ),
+                )
+                .where(F.col("rk") == 1)
+                .select("u", "v", "score")
+                .distinct()
+            )
+            # forest edges are intra-component, so every picked edge is new:
+            # the forest's row count, observed on its checkpoint write, grows
+            # iff a cross-component edge was left — no separate probe action
+            forest, obs = observed_checkpoint(
+                ck_forest, forest.unionByName(picked), F.count(F.lit(1)).alias("n")
+            )
+            if obs["n"] == n_forest:
+                break
+            if rnd == max_rounds:
+                # Components at least halve per round, so 30 rounds cover
+                # 2^30 components; exhausting them means something is wrong
+                # (or an absurd max_rounds override). Never return a
+                # silently partial forest — callers can't tell truncation
+                # from convergence.
+                raise RuntimeError(
+                    f"max_spanning_forest: cross-component edges remain after "
+                    f"{max_rounds} Boruvka rounds; the returned forest would be "
+                    f"non-spanning. Raise max_rounds (components halve per round, "
+                    f"so rounds ~ log2(n_nodes))."
+                )
+            n_forest = obs["n"]
+            # contract: CC over the component graph induced by picked edges
+            cedges = (
+                picked.join(
+                    comp.select(F.col("node").alias("u"), F.col("comp").alias("id_a")), "u"
+                )
+                .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("id_b")), "v")
+                .select("id_a", "id_b")
+            )
+            merged = connected_components(cedges, checkpoint_fn=ck_cc)
+            comp = (
+                comp.join(
+                    merged.select(F.col("id").alias("comp"), F.col("component").alias("new")),
+                    "comp",
+                    "left",
+                )
+                .select("node", F.coalesce("new", "comp").alias("comp"))
+            )
+            comp = ck_comp(comp)
     return forest.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), "score"
     )

@@ -62,8 +62,8 @@ still exceed ``max_component_edges`` after refinement raise loudly.
 
 Undirected mode (G3 MST prefilter + symmetrize) is NOT supported here:
 symmetrization makes every weak component one SCC, so the decomposition
-degenerates to the status quo — callers keep error/salvage for that
-mode. Cited reference behavior: special_partition.pyx:288-356 (greedy),
+degenerates to the status quo — there an oversize component raises
+unless the caller opts into ``oversize='salvage'``. Cited reference behavior: special_partition.pyx:288-356 (greedy),
 eval_cluster_linking.py:105-139 (invocation).
 """
 
@@ -72,12 +72,17 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from blink_spark.operators.connected_components import (
     exact_sum,
     observed_checkpoint,
     scratch_parquet_checkpointer,
+)
+from blink_spark.operators.linking import (
+    _assign_nodes,
+    _best_out_edge,
+    _node_flags,
+    special_partition_py,
 )
 
 # total min-label hops before _propagate_min gives up, and the most
@@ -166,23 +171,6 @@ def _dedup_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _node_flags(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(
-            F.col("src").alias("node_id"),
-            F.col("src_is_entity").alias("is_ent"),
-        )
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("node_id"),
-                F.col("dst_is_entity").alias("is_ent"),
-            )
-        )
-        .groupBy("node_id")
-        .agg(F.max("is_ent").alias("is_entity"))
-    )
-
-
 def _entity_reaching(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node_id) subset that can reach an entity along directed edges —
     the distributed form of linking.entity_reachable_nodes. Encoded as
@@ -267,8 +255,6 @@ def _greedy_kept_edges(pdf: pd.DataFrame) -> pd.DataFrame:
     virtual-entity targets, returning KEPT edges (assignment happens
     globally via pointer doubling — a kept exit edge's real target
     resolves through that target's own kept chain)."""
-    from blink_spark.operators.linking import special_partition_py
-
     edges = [
         (int(s), int(d), float(w))
         for s, d, w in zip(pdf["src"], pdf["dst"], pdf["score"])
@@ -384,16 +370,8 @@ def distributed_partition(
 
     # 3. per-source max-order external edge k(s); (score, dst) is the
     # per-source restriction of the global (score, src, dst) scan order
-    ext = g.where(F.col("virtual_ent"))
-    wk = W.partitionBy("src").orderBy(F.desc("score"), F.desc("dst"))
-    kbest = (
-        ext.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") == 1)
-        .select(
-            "src",
-            F.col("dst").alias("k_dst"),
-            F.col("score").alias("k_score"),
-        )
+    kbest = _best_out_edge(g.where(F.col("virtual_ent"))).select(
+        "src", F.col("dst").alias("k_dst"), F.col("score").alias("k_score")
     )
     internal = g.where(~F.col("virtual_ent"))
     int_above = internal.join(kbest, "src", "left").where(
@@ -460,14 +438,4 @@ def distributed_partition(
     kept = keeps_argmax.unionByName(kept_sub)
     kept, _ = spill_scratch(kept, "g4d_kept")
 
-    assigned = _assign_by_doubling(kept, flags)
-    return (
-        flags.join(assigned, "node_id", "left")
-        .select(
-            "node_id",
-            "is_entity",
-            F.when(F.col("is_entity"), F.col("node_id"))
-            .otherwise(F.col("entity_id"))
-            .alias("entity_id"),
-        )
-    )
+    return _assign_nodes(flags, _assign_by_doubling(kept, flags))

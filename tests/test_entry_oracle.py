@@ -47,6 +47,9 @@ FAST_QUERIES = [
     # with Rademacher planes
     "ann_lsh_parity",
     "dedup_embedding_lsh_parity",
+    # the G4 router's decision table and the whole LinkPipeline
+    "link_route_stats",
+    "link_clusters_chain",
 ]
 
 pytestmark = pytest.mark.skipif(

@@ -1,7 +1,8 @@
 """G4 de-starring: entity-star-only components must resolve via pure
 window argmax (no applyInPandas task ever holds a component — the
 hot-entity skew fix), bit-identical to the per-component greedy; mixed
-oversize components must fail loudly or degrade loudly, never OOM.
+oversize components resolve exactly by default (directed mode), and
+otherwise fail loudly or degrade loudly, never OOM.
 
 Reference semantics under test: special_partition.pyx:288-356 (greedy)
 and :391-414 (undirected MST prefilter)."""
@@ -154,8 +155,28 @@ def test_oversize_mixed_component_errors(spark):
     rows = _mixed_rows()
     with pytest.raises(ValueError, match="max_component_edges"):
         entity_constrained_partition(
-            _edges_df(spark, rows), max_component_edges=2
+            _edges_df(spark, rows), max_component_edges=2, oversize="error"
         ).collect()
+
+
+def test_g4_partition_job_budget(spark):
+    """The router is one routed-edge write with its route presence
+    observed on it: no stats spill, no route-count collect, no re-join
+    of stats onto edges. A star plus a mixed component, result
+    consumed, stays exact and within the job budget."""
+    rows = _mixed_rows() + _star_rows(n_mentions=60, n_entities=3)
+    df = _edges_df(spark, rows).cache()
+    df.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("g4_job_budget", "g4_job_budget")
+    try:
+        got = _collect_partition(entity_constrained_partition(df))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
+    assert got == _greedy_oracle(rows)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("g4_job_budget"))
+    assert n_jobs <= 15, n_jobs
 
 
 # ------------------------------------------------ distributed exact G4
@@ -204,12 +225,14 @@ def test_oversize_distributed_matches_greedy(spark):
     from blink_spark.operators.partition_distributed import distributed_partition  # noqa: F401
 
     rows = _random_mixed_rows(seed=7)
-    got = _collect_partition(
-        entity_constrained_partition(
-            _edges_df(spark, rows), max_component_edges=2, oversize="distributed"
+    want = _greedy_oracle(rows)
+    for kw in ({"oversize": "distributed"}, {}):  # {}: the default is exact
+        got = _collect_partition(
+            entity_constrained_partition(
+                _edges_df(spark, rows), max_component_edges=2, **kw
+            )
         )
-    )
-    assert got == _greedy_oracle(rows)
+        assert got == want, kw
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
@@ -293,6 +316,7 @@ def test_distributed_undirected_refused(spark):
         entity_constrained_partition(
             _edges_df(spark, _mixed_rows()),
             undirected=True,
+            max_component_edges=2,
             oversize="distributed",
         )
 

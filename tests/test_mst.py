@@ -90,8 +90,9 @@ def test_boruvka_equals_kruskal(spark, seed, distinct):
     assert got == want  # identical edge SET, not just equal weight
 
 
-# below the 70 jobs a per-round emptiness probe costs on this graph (local[8])
-BORUVKA_JOB_BUDGET = 64
+# the loop runs with AQE off: 37 jobs on this graph at local[8], 61 with
+# AQE splitting each checkpoint write into one job per shuffle stage
+BORUVKA_JOB_BUDGET = 40
 
 
 def test_boruvka_job_budget(spark):
