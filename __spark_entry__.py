@@ -40,6 +40,7 @@ from blink_spark.functions.similarity import (
 from blink_spark.functions import pii
 from blink_spark.operators import ann, curation, dedup, multimodal
 from blink_spark.operators.connected_components import assign_clusters, connected_components
+from blink_spark.operators.pairs import top_k_per_node
 from blink_spark.pipeline import ERConfig, ERPipeline
 
 # DuckDB-side token/shingle builders over the documents view
@@ -301,19 +302,7 @@ FROM p
 def _er_topk_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node top-3 edges over the scored pair graph (T1/T2 window)."""
     edges = _scored_pairs(spark, sf_dir).select("id_a", "id_b", "score")
-    fwd = edges.select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"), "score")
-    rev = edges.select(F.col("id_b").alias("qid"), F.col("id_a").alias("nid"), "score")
-    both = fwd.unionByName(rev)
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
-    kept = both.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 3)
-    return (
-        kept.select(
-            F.least("qid", "nid").alias("id_a"),
-            F.greatest("qid", "nid").alias("id_b"),
-            "score",
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return top_k_per_node(edges, 3)
 
 
 _ER_TOPK_EDGES_SQL = f"""

@@ -84,10 +84,11 @@ def entity_discovery(
     pipe = LinkPipeline(cfg, mention_knn=mention_knn)
     flagged, men_ids, _ = pipe.score_joint(mentions, catalogue, store=store)
     spark = mentions.sparkSession
+    # either branch's table feeds threshold_candidates and every rung
     if drop_all:
         # eval_entity_discovery.py:336-349: strip every edge touching
         # an entity; cluster the mention graph by threshold + CC
-        table, _ = spill_scratch(
+        table = spill_scratch(
             flagged.where(~F.col("ent_a") & ~F.col("ent_b")).select(
                 "id_a", "id_b", "score"
             ),
@@ -103,7 +104,7 @@ def entity_discovery(
         # over the SURVIVING scored pairs is the reference's
         # nearest-surviving-entity fetch (:246-308)
         surv = exclude_entities(flagged, dropped)
-        table, _ = spill_scratch(pipe.joint_graph(surv), "discovery_graph")
+        table = spill_scratch(pipe.joint_graph(surv), "discovery_graph")
 
         def clusters_at(kept: DataFrame) -> DataFrame:
             part = entity_constrained_partition(kept, undirected=undirected)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from blink_spark.io.scratch import spill_scratch
 from blink_spark.io.tables import StageStore
 from blink_spark.operators.linking import entity_constrained_partition
 from blink_spark.pipeline import ERConfig, ERPipeline
@@ -281,9 +282,8 @@ def k_ladder(
 
     pipe = LinkPipeline(cfg)
     flagged, men_ids, _ = pipe.score_joint(mentions, catalogue, store=store)
-    from blink_spark.io.scratch import spill_scratch
-
-    flagged, _ = spill_scratch(flagged, "k_ladder_scores")
+    # every rung rebuilds its graph from the scores
+    flagged = spill_scratch(flagged, "k_ladder_scores")
     rows = []
     for k in ks:
         graph = pipe.joint_graph(flagged, mention_knn=k)

@@ -34,6 +34,12 @@ from pyspark.sql import Window as W
 from blink_spark.functions.parityhash import sample_hash64
 from blink_spark.functions.rounding import qround
 from blink_spark.functions.similarity import array_cosine, array_dot
+from blink_spark.io.scratch import (
+    make_parquet_checkpointer,
+    observed_checkpoint,
+    spill_scratch,
+)
+from blink_spark.operators.connected_components import exact_sum
 
 
 def _topk_window(scored: DataFrame, k: int) -> DataFrame:
@@ -181,8 +187,6 @@ def ivf_refine_centroids(
     the per-cell mean (_component_means). Cells that attract no
     vectors keep their previous centroid. Tighter cells raise recall
     at fixed nprobe."""
-    from blink_spark.io.scratch import spill_scratch
-
     side = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("vec"))
     for _ in range(iters):
         assigned = _assign_cells_join(side, cents_df, 1, "nid", "vec")
@@ -193,7 +197,7 @@ def ivf_refine_centroids(
         # the table is n_cells rows but is consumed twice per pass
         # (assignment + mean join) and its lineage doubles each
         # iteration — spill per pass, same policy as the CC iterations
-        cents_df, _ = spill_scratch(cents_df, "ivf_cents_iter")
+        cents_df = spill_scratch(cents_df, "ivf_cents_iter")
     return cents_df
 
 
@@ -503,8 +507,6 @@ def pq_codebooks(
     Codewords that attract no subvectors keep their previous value.
     id_hash="md5" makes the sample SQL-reproducible for the parity
     oracle."""
-    from blink_spark.io.scratch import spill_scratch
-
     sample = ivf_cells_df(corpus, ksub, id_col, vec_col, seed, id_hash)
     cb = _subvectors(sample, m, dim, "cell_id", "centroid").select(
         "subspace", F.col("cell_id").alias("code"), F.col("sub").alias("centroid")
@@ -514,14 +516,14 @@ def pq_codebooks(
     # re-executing the full-corpus sample / training lineage — spill
     # the init and every pass (same policy as the pipeline's
     # multi-consumer tables)
-    cb, _ = spill_scratch(cb, "pq_codebook")
+    cb = spill_scratch(cb, "pq_codebook")
     for _ in range(refine_iters):
         assigned = pq_encode(corpus, cb, m, dim, id_col, vec_col, keep_sub=True)
         means = _component_means(assigned, ["subspace", "code"], "sub")
         cb = cb.join(means, ["subspace", "code"], "left").select(
             "subspace", "code", F.coalesce("newc", "centroid").alias("centroid")
         )
-        cb, _ = spill_scratch(cb, "pq_codebook")
+        cb = spill_scratch(cb, "pq_codebook")
     return cb
 
 
@@ -614,8 +616,6 @@ def pq_topk(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
     if n_cells:
-        from blink_spark.io.scratch import spill_scratch
-
         cents = ivf_cells_df(corpus, n_cells, id_col, vec_col, seed, id_hash)
         if refine_iters:
             cents = ivf_refine_centroids(
@@ -623,7 +623,7 @@ def pq_topk(
             )
         # n_cells rows, full-corpus Lloyd lineage, 2-4 consumers below
         # (ca, qa, residuals, coarse term) — spill so refinement runs once
-        cents, _ = spill_scratch(cents, "pq_cents")
+        cents = spill_scratch(cents, "pq_cents")
         ca = _assign_cells_join(cs, cents, 1, "neighbor_id", "c_vec").select(
             "neighbor_id", "cell_id"
         )
@@ -631,8 +631,8 @@ def pq_topk(
         # both consumed twice (pairs + residual / coarse term): n·1 and
         # |Q|·nprobe rows — cheap spills that stop the broadcast-rank
         # job from running twice
-        ca, _ = spill_scratch(ca, "pq_ca")
-        qa_full, _ = spill_scratch(qa_full, "pq_qa")
+        ca = spill_scratch(ca, "pq_ca")
+        qa_full = spill_scratch(qa_full, "pq_qa")
         qa = qa_full.select("query_id", "cell_id")
         # quantize residuals x - centroid(x); one shared codebook
         rcorpus = (
@@ -649,7 +649,7 @@ def pq_topk(
         # consumed by codebook training (once per Lloyd pass) AND final
         # encoding — materialize the residuals once, as a production
         # index build would
-        rcorpus, _ = spill_scratch(rcorpus, "pq_residuals")
+        rcorpus = spill_scratch(rcorpus, "pq_residuals")
         cb = pq_codebooks(
             rcorpus, m, ksub, dim, "neighbor_id", "rvec", seed, id_hash,
             refine_iters,
@@ -832,13 +832,7 @@ def nn_descent_topk(
     kill the whole descent)."""
     if sample_k is None:
         sample_k = max(4, k // 2)
-    from blink_spark.operators.connected_components import (
-        exact_sum,
-        observed_checkpoint,
-        scratch_parquet_checkpointer,
-    )
-
-    ckpt = scratch_parquet_checkpointer("nnd_iter")
+    ckpt = make_parquet_checkpointer(name="nnd_iter")
     signature = (
         F.count(F.lit(1)).alias("n"),
         exact_sum(F.xxhash64("query_id", "neighbor_id")).alias("h"),

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blink_spark.io.scratch import make_parquet_checkpointer
+
 
 def salt_hot_blocks(
     blocks: DataFrame,
@@ -106,11 +108,8 @@ def canopy_blocks(
     Returns (block_key, <id_col>) rows — one per (point, canopy) —
     feeding pairs.candidate_pairs like any other blocking.
     """
-    import os
-
     from blink_spark.functions.parityhash import sample_hash64
     from blink_spark.functions.similarity import array_cosine
-    from blink_spark.io.scratch import release, scratch_dir, spill
 
     if not s_tight > s_loose:
         raise ValueError("s_tight must exceed s_loose (tight ⊂ loose)")
@@ -125,9 +124,9 @@ def canopy_blocks(
     )
     # the two limits fold into the pool's own top-k: one collect
     batch = pool.limit(batch_size).collect()
-    remaining, spark, d = pool, df.sparkSession, None
+    remaining, spark = pool, df.sparkSession
+    ckpt = make_parquet_checkpointer(name="canopy_round")
     accepted: list = []
-    rnd = 0
     while True:
         n_before = len(accepted)
         accepted = _suppress_greedy(
@@ -156,12 +155,8 @@ def canopy_blocks(
             nxt = nxt.join(supp, "cid", "left_anti")
         # the rest of the pool goes to scratch parquet: every later
         # batch reads a durable table, not the pool's growing lineage
-        d = d or scratch_dir()
-        rnd += 1
-        remaining = spill(nxt, os.path.join(d, f"round_{rnd}"))
+        remaining = ckpt(nxt)
         batch = remaining.orderBy("h", "cid").limit(batch_size).collect()
-    if d is not None:
-        release(d)
     return _canopy_membership(df, accepted, s_loose, id_col, vec_col)
 
 

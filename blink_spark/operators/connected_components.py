@@ -6,18 +6,18 @@ connected_components on a driver-resident COO matrix
 That is a single-node dead end at 10^12 rows, so this module is the
 "north-star" custom operator: distributed large-star / small-star
 (Kiveris et al., 2014, "Connected Components in MapReduce and
-Beyond") with per-iteration checkpointing to cut lineage (the
-reference's pickle-every-stage memoization,
-eval_cluster_linking.py:411-415, becomes a parquet checkpoint). It needs O(log n) rounds even on
-pathological chains, where min-label propagation needs O(diameter).
-A round is two window minimums over ``partitionBy(u)`` and one
-``distinct``.
+Beyond"). It needs O(log n) rounds even on pathological chains, where
+min-label propagation needs O(diameter). A round is two window
+minimums over ``partitionBy(u)`` and one ``distinct``.
 
-Each round runs one Spark action, its checkpoint write: the loop's
-convergence signature rides on that write via ``DataFrame.observe``
-(``observed_checkpoint``). So a checkpointer must EXECUTE its frame —
-a lazy one would block ``Observation.get``; every checkpointer in this
-repo is an eager parquet write.
+A round is one Spark action: its checkpoint write, with the loop's
+convergence signature observed on it (``io/scratch.py`` holds the
+checkpointer and ``observed_checkpoint``). There is no separate write
+of the oriented input: round 1 runs on the lazy oriented plan at the
+session's partition count, and each later round is sized from the
+edge count observed on the round before it. The loop stops when a
+round's signature equals the previous round's, or when a round is
+empty; past ``max_iterations`` it raises.
 
 Component label = min node id in the component (order-free, so results
 are identical at any parallelism — required by the scaling check).
@@ -28,61 +28,16 @@ from __future__ import annotations
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from blink_spark.io import scratch
+from blink_spark.io.scratch import make_parquet_checkpointer, observed_checkpoint
 
 
 @dataclass
 class CCStats:
     iterations: int = 0
     rounds: list[dict] = field(default_factory=list)
-
-
-def make_parquet_checkpointer(scratch_dir: str, keep_last: int = 2, name: str = "cc_iter"):
-    """Per-iteration checkpointer backed by scratch parquet. Preferred
-    over localCheckpoint: measured on this host, the local block store
-    burns ~100x CPU per row for these tables; on a real cluster
-    localCheckpoint blocks are executor-memory-resident and
-    non-durable — one lost executor kills the whole iterative job,
-    while a parquet iteration table lets it resume.
-
-    Only the last ``keep_last`` iteration tables are retained — once
-    iteration N is durably written, N - keep_last can no longer be an
-    input to anything, so it's deleted. ``name`` namespaces the
-    iteration files: loops that interleave two checkpoint streams
-    (e.g. Boruvka's component labels + forest) need separate counters
-    so one stream's GC never deletes the other's live table."""
-    import shutil
-
-    counter = {"n": 0}
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        counter["n"] += 1
-        out = scratch.spill(df, f"{scratch_dir}/{name}_{counter['n']}")
-        stale = counter["n"] - keep_last
-        if stale >= 1:
-            shutil.rmtree(f"{scratch_dir}/{name}_{stale}", ignore_errors=True)
-        return out
-
-    return ckpt
-
-
-def scratch_parquet_checkpointer(name: str = "cc_iter", keep_last: int = 2):
-    """A parquet checkpointer on a fresh session-scoped scratch dir
-    (removed at interpreter exit) — the default for every iterative
-    operator when the caller doesn't supply a durable location."""
-    return make_parquet_checkpointer(scratch.scratch_dir(), keep_last=keep_last, name=name)
-
-
-def observed_checkpoint(checkpoint_fn, df: DataFrame, *exprs: Column) -> tuple[DataFrame, dict]:
-    """``checkpoint_fn(df)`` plus the aggregates ``exprs``, keyed by
-    alias, over the rows its write saw — a convergence signature at no
-    extra Spark action. ``checkpoint_fn`` must execute the frame."""
-    obs = Observation()
-    out = checkpoint_fn(df.observe(obs, *exprs))
-    return out, obs.get
 
 
 def exact_sum(c: Column) -> Column:
@@ -134,15 +89,14 @@ def connected_components(
     partitioning/parallelism. One checkpoint write per round and no
     other action; the result is lazy over the last round's table.
     ``checkpoint_fn`` (df -> df) must execute its frame, as
-    ``make_parquet_checkpointer`` does (see the module docstring)."""
-    # default is DURABLE: scratch parquet, never localCheckpoint (see
-    # make_parquet_checkpointer; io/scratch.py documents the measured
-    # ~100x local-block-store CPU cost)
+    ``make_parquet_checkpointer`` does; the default is one on a fresh
+    scratch dir. Raises ValueError if no fixpoint is reached within
+    ``max_iterations`` rounds."""
     return _cc_alternating(
         edges,
         max_iterations,
         stats if stats is not None else CCStats(),
-        checkpoint_fn or scratch_parquet_checkpointer(),
+        checkpoint_fn or make_parquet_checkpointer(),
     )
 
 
@@ -174,24 +128,33 @@ def no_aqe(spark, shuffle_partitions: int | None = None):
 
 
 def _cc_alternating(edges: DataFrame, max_iterations: int, stats: CCStats, _checkpoint) -> DataFrame:
-    oriented = edges.select(
+    cur = edges.select(
         F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
     ).where(F.col("u") != F.col("v")).distinct()
-    cur, sig = observed_checkpoint(_checkpoint, oriented, *_edge_signature())
-    spark = cur.sparkSession
-    with no_aqe(spark, _size_partitions(sig["n"], spark)):
-        for it in range(max_iterations):
+    spark = edges.sparkSession
+    # round 1 runs on the lazy oriented plan at the session's partition
+    # count; later rounds are sized from the previous round's edges
+    sig, parts = None, None
+    for it in range(max_iterations):
+        with no_aqe(spark, parts):
             cur, new_sig = observed_checkpoint(
                 _checkpoint, _alternating_round(cur), *_edge_signature()
             )
-            stats.iterations = it + 1
-            stats.rounds.append({"iter": it + 1, "edges": new_sig["n"]})
-            if new_sig == sig:
-                break
-            sig = new_sig
-    # converged: star edges (node -> root); roots label themselves
-    labelled = cur.unionByName(cur.select(F.col("v").alias("u"), "v"))
-    return labelled.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
+        stats.iterations = it + 1
+        stats.rounds.append({"iter": it + 1, "edges": new_sig["n"]})
+        if new_sig["n"] == 0 or new_sig == sig:
+            # converged: star edges (node -> root); roots label themselves
+            labelled = cur.unionByName(cur.select(F.col("v").alias("u"), "v"))
+            return labelled.groupBy(F.col("u").alias("id")).agg(
+                F.min("v").alias("component")
+            )
+        sig = new_sig
+        parts = _size_partitions(new_sig["n"], spark)
+    raise ValueError(
+        f"connected_components: no fixpoint after max_iterations={max_iterations} "
+        "rounds; the labels would be unconverged. Raise max_iterations "
+        "(rounds grow ~ log2 of the longest path)."
+    )
 
 
 def assign_clusters(

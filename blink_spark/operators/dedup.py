@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from blink_spark.functions import text
 from blink_spark.functions.similarity import array_cosine, token_set_jaccard
+from blink_spark.io.scratch import spill_scratch
 from blink_spark.operators import blocking
 from blink_spark.operators.connected_components import assign_clusters, connected_components
 from blink_spark.operators.pairs import candidate_pairs
@@ -91,7 +92,6 @@ def minhash_lsh_dup_pairs(
     task threads — this is the same kernel + parquet-boundary design
     as the flagship pipeline's s1."""
     from blink_spark.functions.similarity import presorted_jaccard_udf
-    from blink_spark.io.scratch import spill_scratch
 
     grp = F.col(group_col) if group_col else F.lit("all")
     if signature == "arrow":
@@ -147,7 +147,8 @@ def minhash_lsh_dup_pairs(
         )
     else:
         raise ValueError(f"unknown signature: {signature!r} (arrow|md5)")
-    base, _ = spill_scratch(base, "minhash_sig")
+    # feeds salting, the bucket pair join and both verify-join sides
+    base = spill_scratch(base, "minhash_sig")
     blocks = blocking.salt_hot_blocks(
         base.select("file_id", F.explode("bands").alias("block_key")),
         "file_id",

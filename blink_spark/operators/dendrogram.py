@@ -32,6 +32,8 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blink_spark.io.scratch import spill_scratch
+
 _LINKAGES = ("single", "complete", "average")
 
 
@@ -165,14 +167,12 @@ def dendrogram_purity(
             .limit(max_leaves)
             .drop("h")
         )
-    from blink_spark.io.scratch import spill_scratch
-
     # multi-consumer (collect + two semi-joins): spill once so the
     # labels plan executes exactly once — sampled or not, re-executing
     # an expensive (or nondeterministic) upstream per consumer would
     # triple the job and could diverge the semi-join keep set from the
     # collected lab_map
-    lab, _ = spill_scratch(lab, "dendrogram_leaves")
+    lab = spill_scratch(lab, "dendrogram_leaves")
     lab_rows = lab.collect()
     keep_df = lab.select("leaf")
     e = edges.select(
@@ -184,7 +184,7 @@ def dendrogram_purity(
         e.join(keep_df.withColumnRenamed("leaf", "a"), "a", "left_semi")
         .join(keep_df.withColumnRenamed("leaf", "b"), "b", "left_semi")
     )
-    e, _ = spill_scratch(e, "dendrogram_edges")
+    e = spill_scratch(e, "dendrogram_edges")
     n_edges = e.count()
     if n_edges > max_edges:
         raise ValueError(

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from blink_spark.functions.rounding import qround
+from blink_spark.io.scratch import spill_scratch
 
 _EPS = 1e-6
 
@@ -148,9 +149,7 @@ def em_fit(
     # (unless the caller already spilled the full table)
     gammas = gammas.select(*gcols)
     if not spilled:
-        from blink_spark.io.scratch import spill_scratch
-
-        gammas, _ = spill_scratch(gammas, "fs_gammas")
+        gammas = spill_scratch(gammas, "fs_gammas")
     n_pairs = None
     dec = lambda c: c.cast("decimal(38,12)")  # noqa: E731 — exact sums
     for _ in range(iters):
@@ -379,7 +378,6 @@ def fs_cluster(
 
     Returns {"clusters": DataFrame(id_col, cluster_id),
     "scored": DataFrame, "fit": em_fit result, "u0": initial u}."""
-    from blink_spark.io.scratch import spill_scratch
     from blink_spark.operators.connected_components import (
         assign_clusters,
         connected_components,
@@ -390,7 +388,7 @@ def fs_cluster(
     gammas = attach_gammas(joined, comparisons)
     # the double feature-join lineage has three consumers (EM, scoring,
     # the thresholded edge set fed to CC) — materialize it once
-    gammas, _ = spill_scratch(gammas, "fs_gammas_full")
+    gammas = spill_scratch(gammas, "fs_gammas_full")
     fields = list(comparisons)
     levels = {f: len(comparisons[f]) for f in fields}
     u0 = estimate_u_probs(records, comparisons, id_col, u_sample, seed)["u"]

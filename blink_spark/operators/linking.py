@@ -34,11 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from blink_spark.operators.connected_components import (
-    connected_components,
-    observed_checkpoint,
-    scratch_parquet_checkpointer,
-)
+from blink_spark.io.scratch import make_parquet_checkpointer, observed_checkpoint
+from blink_spark.operators.connected_components import connected_components
 
 PARTITION_SCHEMA = "node_id long, is_entity boolean, entity_id long"
 
@@ -316,7 +313,7 @@ def _route_components(
         "component", "n_edges", route.alias("route"),
     )
     return observed_checkpoint(
-        scratch_parquet_checkpointer(name="g4_routed"),
+        make_parquet_checkpointer(name="g4_routed"),
         routed,
         *(
             F.max((F.col("route") == r).cast("int")).alias(r)

@@ -36,12 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from blink_spark.operators.connected_components import (
-    connected_components,
-    no_aqe,
+from blink_spark.io.scratch import (
+    make_parquet_checkpointer,
     observed_checkpoint,
-    scratch_parquet_checkpointer,
+    spill_scratch,
 )
+from blink_spark.operators.connected_components import connected_components, no_aqe
 
 FOREST_SCHEMA = "src long, dst long, score double"
 
@@ -137,9 +137,9 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     scratch parquet, like connected_components — never
     localCheckpoint, whose executor-resident blocks die with a lost
     executor."""
-    ck_comp = scratch_parquet_checkpointer("boruvka_comp")
-    ck_forest = scratch_parquet_checkpointer("boruvka_forest")
-    ck_cc = scratch_parquet_checkpointer("boruvka_cc")
+    ck_comp = make_parquet_checkpointer(name="boruvka_comp")
+    ck_forest = make_parquet_checkpointer(name="boruvka_forest")
+    ck_cc = make_parquet_checkpointer(name="boruvka_cc")
     spark = edges.sparkSession
     # AQE off as in CC; the nested CC calls size their own partitions
     with no_aqe(spark):
@@ -156,7 +156,7 @@ def max_spanning_forest(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
         )
         # e is re-joined EVERY round; one durable spill stops each round
         # from recomputing the (possibly expensive) upstream edge lineage
-        e = scratch_parquet_checkpointer("boruvka_edges")(e)
+        e = spill_scratch(e, "boruvka_edges")
         # comp: node -> component label (min node id of the tree so far)
         comp = (
             e.select(F.col("u").alias("node"))

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from blink_spark.io.scratch import spill_scratch
+
 
 def candidate_pairs(blocks: DataFrame, id_col: str = "file_id") -> DataFrame:
     """(block_key, id) -> distinct (id_a, id_b), id_a < id_b.
@@ -153,9 +155,7 @@ def sorted_neighborhood_pairs(
     local = sorted_df.mapInPandas(_index, schema="sid long, pid int, lrn long")
     # two consumers (counts + the offset join) and window-1 rank joins
     # downstream — materialize the range sort exactly once
-    from blink_spark.io.scratch import spill_scratch
-
-    local, _ = spill_scratch(local, "sn_rank")
+    local = spill_scratch(local, "sn_rank")
     counts = local.groupBy("pid").agg(F.count(F.lit(1)).alias("c"))
     woff = W.orderBy("pid")  # one row per partition — bounded window
     offsets = counts.select(

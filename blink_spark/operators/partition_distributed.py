@@ -53,12 +53,12 @@ still reaches an entity without it):
    self-join rounds.
 
 SCC grouping uses forward/backward min-label propagation over the
-mention-mention subgraph to a TRUE fixpoint, optionally refined within
-classes. Same-SCC nodes provably share (fwd, bwd), so label classes are
-UNIONS of SCCs — and the whole decomposition above remains exact for
-any SCC-closed coarsening (a cycle never crosses a class boundary), so
-a coarse class costs parallel grain, never correctness. Classes that
-still exceed ``max_component_edges`` after refinement raise loudly.
+mention-mention subgraph to a TRUE fixpoint. Same-SCC nodes provably
+share (fwd, bwd), so label classes are UNIONS of SCCs — and the whole
+decomposition above remains exact for any SCC-closed coarsening (a
+cycle never crosses a class boundary), so a coarse class costs
+parallel grain, never correctness. Classes that exceed
+``max_component_edges`` raise loudly.
 
 Undirected mode (G3 MST prefilter + symmetrize) is NOT supported here:
 symmetrization makes every weak component one SCC, so the decomposition
@@ -73,11 +73,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blink_spark.operators.connected_components import (
-    exact_sum,
+from blink_spark.io.scratch import (
+    make_parquet_checkpointer,
     observed_checkpoint,
-    scratch_parquet_checkpointer,
+    spill_scratch,
 )
+from blink_spark.operators.connected_components import exact_sum
 from blink_spark.operators.linking import (
     _assign_nodes,
     _best_out_edge,
@@ -91,8 +92,6 @@ PROPAGATE_MAX_HOPS = 512
 HOPS_PER_ROUND = 8
 # pointer-doubling rounds: resolves kept chains up to 2^48 deep
 DOUBLING_MAX_ROUNDS = 48
-# fwd/bwd refinement rounds of the SCC-closed classes
-REFINE_ROUNDS = 1
 
 
 def _propagate_min(
@@ -129,7 +128,7 @@ def _propagate_min(
     the repo.
     """
     up, down = ("src", "dst") if forward else ("dst", "src")
-    ckpt = scratch_parquet_checkpointer(name=name)
+    ckpt = make_parquet_checkpointer(name=name)
     cur = ckpt(nodes.select("node_id", label_col))
     prev_sum = None
     hops_done = 0
@@ -197,54 +196,25 @@ def _scc_classes(mm_edges: DataFrame, nodes: DataFrame) -> DataFrame:
     id entity cannot collapse unrelated chains into one class). Nodes
     of one SCC reach exactly the same node sets, so they share
     (fwd, bwd); classes therefore never split an SCC — the only
-    property the decomposition needs. Each refinement round recomputes
-    fwd/bwd over intra-class edges only, splitting classes further
-    (still never through an SCC: a cycle is intra-class by induction).
-    Class ids are xxhash64 of the label pair — a collision can only
-    MERGE classes, which stays SCC-closed (costs grain, not
-    correctness).
+    property the decomposition needs. Class ids are xxhash64 of the
+    label pair — a collision can only MERGE classes, which stays
+    SCC-closed (costs grain, not correctness).
 
-    The initial class is a CONSTANT, not the node id: the round-0
-    class must key on (fwd, bwd) alone, and hashing a per-node-unique
-    seed into it would make every class a singleton — which silently
+    The class keys on (fwd, bwd) alone: hashing a per-node-unique value
+    into it would make every class a singleton — which silently
     un-groups real SCCs and lets the cross-class argmax keep 2-cycles
     (caught by test_distributed_partition_random_graphs_exact)."""
-    cls = nodes.select(
-        "node_id", F.lit(0).cast("long").alias("scc_class")
-    )
     edges = mm_edges.select("src", "dst")
-    for r in range(REFINE_ROUNDS):
-        e = edges
-        if r > 0:
-            # restrict to intra-class edges for refinement rounds
-            c_src = cls.select(
-                F.col("node_id").alias("src"), F.col("scc_class").alias("c_s")
-            )
-            c_dst = cls.select(
-                F.col("node_id").alias("dst"), F.col("scc_class").alias("c_d")
-            )
-            e = (
-                edges.join(c_src, "src")
-                .join(c_dst, "dst")
-                .where(F.col("c_s") == F.col("c_d"))
-                .select("src", "dst")
-            )
-        init = nodes.select("node_id", F.col("node_id").cast("long").alias("lbl"))
-        fwd = _propagate_min(init, e, True, "lbl", name=f"g4_fwd{r}").select(
-            "node_id", F.col("lbl").alias("fwd")
-        )
-        bwd = _propagate_min(init, e, False, "lbl", name=f"g4_bwd{r}").select(
-            "node_id", F.col("lbl").alias("bwd")
-        )
-        cls = (
-            cls.join(fwd, "node_id")
-            .join(bwd, "node_id")
-            .select(
-                "node_id",
-                F.xxhash64("scc_class", "fwd", "bwd").alias("scc_class"),
-            )
-        )
-    return cls
+    init = nodes.select("node_id", F.col("node_id").cast("long").alias("lbl"))
+    fwd = _propagate_min(init, edges, True, "lbl", name="g4_fwd").select(
+        "node_id", F.col("lbl").alias("fwd")
+    )
+    bwd = _propagate_min(init, edges, False, "lbl", name="g4_bwd").select(
+        "node_id", F.col("lbl").alias("bwd")
+    )
+    return fwd.join(bwd, "node_id").select(
+        "node_id", F.xxhash64("fwd", "bwd").alias("scc_class")
+    )
 
 
 _KEPT_SCHEMA = "src long, dst long"
@@ -272,7 +242,7 @@ def _assign_by_doubling(kept: DataFrame, flags: DataFrame) -> DataFrame:
     chain halves, so depth-D chains resolve in ceil(log2 D) self-join
     rounds (the kept graph is acyclic in-trees rooted at entities —
     guarded anyway by the round cap)."""
-    ckpt = scratch_parquet_checkpointer(name="g4_chase")
+    ckpt = make_parquet_checkpointer(name="g4_chase")
     undone = F.count(F.when(~F.col("done"), 1)).alias("undone")
     ent = flags.select(
         F.col("node_id").alias("cur"),
@@ -326,12 +296,15 @@ def distributed_partition(
     dst_is_entity) -> (node_id, is_entity, entity_id), bit-identical to
     the per-component sequential greedy, with no task ever holding more
     than one SCC-class sub-problem (see module docstring for the
-    exactness argument). Raises if an SCC class still exceeds
-    ``max_component_edges`` after refinement."""
-    from blink_spark.io.scratch import spill_scratch
+    exactness argument). Raises if an SCC class exceeds
+    ``max_component_edges``.
 
-    e, _ = spill_scratch(_dedup_edges(part), "g4d_edges")
-    flags, _ = spill_scratch(_node_flags(e), "g4d_flags")
+    Each spill below cuts a table with two or more consumers or one
+    that feeds a loop; single-consumer tables stay lazy."""
+    # e feeds flags, the reachability loop and live
+    e = spill_scratch(_dedup_edges(part), "g4d_edges")
+    # flags feed the reachability seeds, mentions and both assign steps
+    flags = spill_scratch(_node_flags(e), "g4d_flags")
 
     # 1. entity-reachability filter (greedy precondition): drop edges
     # touching any node that cannot reach an entity — those mentions
@@ -344,15 +317,17 @@ def distributed_partition(
         # reaches an entity (itself) at every test
         .where(~F.col("src_is_entity"))
     )
-    live, _ = spill_scratch(live, "g4d_live")
+    # live feeds the fwd/bwd loops (via mm) and the classed table g
+    live = spill_scratch(live, "g4d_live")
 
     # 2. SCC-closed classes over the mention-mention subgraph
     mentions = flags.where(~F.col("is_entity")).join(
         ok, "node_id"
     ).select("node_id")
     mm = live.where(~F.col("dst_is_entity")).select("src", "dst")
+    # not spilled: cls is a join of two loop outputs and g's write
+    # below is its one consumer
     cls = _scc_classes(mm, mentions)
-    cls, _ = spill_scratch(cls, "g4d_cls")
 
     g = live.join(
         cls.select(F.col("node_id").alias("src"), F.col("scc_class").alias("g_src")),
@@ -366,7 +341,8 @@ def distributed_partition(
         "virtual_ent",
         F.col("dst_is_entity") | (F.col("g_dst") != F.col("g_src")),
     )
-    g, _ = spill_scratch(g, "g4d_classed")
+    # g feeds kbest, internal and sub_k
+    g = spill_scratch(g, "g4d_classed")
 
     # 3. per-source max-order external edge k(s); (score, dst) is the
     # per-source restriction of the global (score, src, dst) scan order
@@ -380,7 +356,8 @@ def distributed_partition(
         | ((F.col("score") == F.col("k_score")) & (F.col("dst") > F.col("k_dst")))
     )
     sub_srcs = int_above.select("src").distinct()
-    sub_srcs, _ = spill_scratch(sub_srcs, "g4d_subsrcs")
+    # sub_srcs feeds keeps_argmax, sub_k, sub_int and dst_in_sub
+    sub_srcs = spill_scratch(sub_srcs, "g4d_subsrcs")
 
     # 4a. sources with no surviving internal edge: k(s) is kept outright
     keeps_argmax = (
@@ -418,7 +395,8 @@ def distributed_partition(
             "virtual_ent"
         ),
     )
-    sub_edges, _ = spill_scratch(sub_edges, "g4d_sub")
+    # sub_edges feeds the size guard's collect and the greedy
+    sub_edges = spill_scratch(sub_edges, "g4d_sub")
 
     sizes = sub_edges.groupBy("g_src").agg(F.count(F.lit(1)).alias("n"))
     worst = sizes.orderBy(F.desc("n")).limit(3).collect()
@@ -435,7 +413,6 @@ def distributed_partition(
     kept_sub = sub_edges.groupBy("g_src").applyInPandas(
         _greedy_kept_edges, schema=_KEPT_SCHEMA
     )
+    # not spilled: the doubling loop's first checkpoint is its one consumer
     kept = keeps_argmax.unionByName(kept_sub)
-    kept, _ = spill_scratch(kept, "g4d_kept")
-
     return _assign_nodes(flags, _assign_by_doubling(kept, flags))

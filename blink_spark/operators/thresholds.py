@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from blink_spark.functions.rounding import qround, qround_py
+from blink_spark.io.scratch import spill_scratch
 
 # ------------------------------------------------------------------ DP
 
@@ -238,7 +239,6 @@ def threshold_ladder(
     The expensive part — scoring — happened upstream; each rung is one
     CC over a shrinking edge set."""
     from blink_spark.eval import pairwise_metrics
-    from blink_spark.io.scratch import spill_scratch
     from blink_spark.operators.connected_components import (
         assign_clusters,
         connected_components,
@@ -247,7 +247,8 @@ def threshold_ladder(
     spark = edges.sparkSession
     if thresholds is None:
         thresholds = threshold_candidates(edges, "score", k=n_thresholds)
-    edges, _ = spill_scratch(edges, "threshold_ladder_edges")
+    # every rung filters the same edges
+    edges = spill_scratch(edges, "threshold_ladder_edges")
     nodes = gold.select("file_id").distinct()
     rows = []
     for t in thresholds:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from blink_spark.functions import text
 from blink_spark.functions.minhash import content_signature_features_udf
 from blink_spark.functions.similarity import presorted_pair_scores_udf
+from blink_spark.io.scratch import make_parquet_checkpointer, spill_scratch
 from blink_spark.io.tables import StageStore
 from blink_spark.operators import blocking
 from blink_spark.operators.connected_components import (
@@ -233,16 +234,7 @@ class ERPipeline:
         measured here, both localCheckpoint and the columnar cache burn
         far more CPU than a parquet round-trip for these shapes, and
         parquet is the same mechanism the durable store uses anyway."""
-        from blink_spark.io import scratch as _scratch
-
         res = ERResult()
-        # registered for cleanup at interpreter exit (bench loops
-        # previously leaked one mkdtemp per run)
-        scratch_dir = None if store is not None else _scratch.scratch_dir()
-
-        def spill(df: DataFrame, name: str) -> DataFrame:
-            return _scratch.spill(df, f"{scratch_dir}/{name}")
-
         # columns each stage's consumers depend on: a store written by
         # an older layout short-circuits resume only if these exist,
         # otherwise the stage silently recomputes (schema-versioning
@@ -278,7 +270,7 @@ class ERPipeline:
                     store.write_metrics(name, {"elapsed_sec": time.time() - t0, **lin})
                     df = store.read(name)
                 elif spill_no_store:
-                    df = spill(df, name)
+                    df = spill_scratch(df, name)
             res.tables[name] = df
             res.timings[name] = time.time() - t0
             return df
@@ -295,16 +287,11 @@ class ERPipeline:
         if until == "score":
             return res
         cc_stats = CCStats()
-        from blink_spark.operators.connected_components import make_parquet_checkpointer
-
-        cc_dir = (
-            store.fs_scratch_path("_cc_scratch")
-            if store is not None
-            else f"{scratch_dir}/cc"
+        # a path store keeps CC's rounds beside its tables; otherwise
+        # (no store, or a catalog-table store) they go to session scratch
+        cc_ckpt = make_parquet_checkpointer(
+            store.fs_scratch_path("_cc_scratch") if store is not None else None
         )
-        if cc_dir is None:  # catalog-table store: CC scratch goes to temp
-            cc_dir = f"{_scratch.scratch_dir()}/cc"
-        cc_ckpt = make_parquet_checkpointer(cc_dir)
         clusters = stage(
             "s3_clusters", lambda: self.s3_clusters(edges, s0, cc_stats, cc_ckpt)
         )

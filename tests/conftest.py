@@ -27,3 +27,20 @@ def gold(corpus):
     return corpus.select(
         text.stable_file_id("repo", "path", "commit").alias("file_id"), "entity_id"
     )
+
+
+@pytest.fixture
+def spill_paths(monkeypatch):
+    """Paths written by blink_spark.io.scratch.spill while the test runs
+    — every parquet lineage cut in the library goes through it."""
+    from blink_spark.io import scratch
+
+    paths = []
+    real = scratch.spill
+
+    def counting(df, path):
+        paths.append(path)
+        return real(df, path)
+
+    monkeypatch.setattr(scratch, "spill", counting)
+    return paths

@@ -119,10 +119,19 @@ def test_cc_awkward_graphs(spark, kind, iterations):
     assert st.iterations == iterations
 
 
+def test_cc_raises_past_max_iterations(spark):
+    """An unconverged graph must fail loudly, not come back labelled:
+    the shuffled chain needs 10 rounds."""
+    df = spark.createDataFrame(_awkward_graph("chain2000"), "id_a long, id_b long")
+    with pytest.raises(ValueError, match="max_iterations=3"):
+        connected_components(df, max_iterations=3)
+
+
 def test_cc_alternating_job_budget(spark):
     """One alternating call on a 2-round graph, result consumed: a round
     is one checkpoint write with its convergence signature observed on
-    it, so there are no per-round probe jobs and no final checkpoint."""
+    it, so there are no per-round probe jobs, no write of the oriented
+    input and no final checkpoint."""
     sc = spark.sparkContext
     edges = [(b * 10 + i, b * 10 + i + 1) for b in range(50) for i in range(2)]
     df = spark.createDataFrame(edges, "id_a long, id_b long").cache()
@@ -135,4 +144,4 @@ def test_cc_alternating_job_budget(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         df.unpersist()
     assert st.iterations == 2 and len(rows) == 150
-    assert len(sc.statusTracker().getJobIdsForGroup("cc_job_budget")) <= 16
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_job_budget")) <= 4

@@ -50,6 +50,11 @@ FAST_QUERIES = [
     # the G4 router's decision table and the whole LinkPipeline
     "link_route_stats",
     "link_clusters_chain",
+    # connected components, Borůvka (with its nested CC) and the
+    # library's top_k_per_node
+    "er_chain_cc",
+    "graph_mst_forest",
+    "er_topk_edges",
 ]
 
 pytestmark = pytest.mark.skipif(

@@ -176,7 +176,7 @@ def test_g4_partition_job_budget(spark):
         df.unpersist()
     assert got == _greedy_oracle(rows)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup("g4_job_budget"))
-    assert n_jobs <= 15, n_jobs
+    assert n_jobs <= 13, n_jobs
 
 
 # ------------------------------------------------ distributed exact G4

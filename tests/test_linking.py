@@ -175,6 +175,22 @@ def test_linking_end_to_end(spark, link_fixture):
     assert bad == 0
 
 
+def test_link_pipeline_boundary_budget(spark, link_fixture, spill_paths):
+    """A LinkPipeline run writes only its multi-consumer tables, the CC
+    rounds and the G4 routing write: CC makes no write of its oriented
+    input and G4 no stats spill or route-count collect."""
+    mentions, catalogue, _, _ = link_fixture
+    sc = spark.sparkContext
+    sc.setJobGroup("link_boundary_budget", "link_boundary_budget")
+    try:
+        LinkPipeline(CFG).run(mentions, catalogue).tables["pred"].collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("link_boundary_budget"))
+    assert len(spill_paths) <= 5, spill_paths
+    assert n_jobs <= 52, n_jobs
+
+
 def test_topk_fracture_healed_by_entity_anchor(spark):
     """The measured failure G4 exists to prevent: with per-node top-k
     edges a big clone family fractures (pipeline.py:69-75). With a

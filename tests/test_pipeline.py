@@ -126,3 +126,18 @@ def test_salted_hot_family_stays_one_cluster(spark):
     m = pairwise_metrics(res.tables["s3_clusters"], gold)
     assert m["precision"] == 1.0
     assert m["recall"] >= 0.99, m
+
+
+def test_er_pipeline_boundary_budget(spark, corpus, spill_paths):
+    """A storeless run cuts lineage only where a table has two or more
+    consumers or feeds a loop: the s1 and s2 spills and one write per
+    CC round (no write of CC's oriented input)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("er_boundary_budget", "er_boundary_budget")
+    try:
+        ERPipeline().run(corpus).tables["clusters"].collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("er_boundary_budget"))
+    assert len(spill_paths) <= 4, spill_paths
+    assert n_jobs <= 12, n_jobs
