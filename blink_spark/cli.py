@@ -44,9 +44,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--num-hashes", type=int, default=128)
     p.add_argument("--shingle-k", type=int, default=5)
     p.add_argument("--threshold", type=float, default=0.45)
-    p.add_argument("--top-k", type=int, default=0,
-                   help="per-node edge cap; 0 = keep all edges above threshold "
-                        "(default — top-k fractures clone subgroups larger than k)")
     p.add_argument("--pair-budget", type=int, default=100_000)
     p.add_argument("--eval-gold", action="store_true",
                    help="synthetic corpus only: print pairwise P/R/F1")
@@ -59,7 +56,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="with --synthetic-entities: derive a canonical "
                         "per-entity catalogue from the generated corpus")
     p.add_argument("--mention-knn", type=int, default=4)
-    p.add_argument("--recall-k", type=int, default=8)
     p.add_argument("--graph-mode", default="directed",
                    choices=["directed", "undirected"])
     # ---- entity-discovery experiment (G9, eval_entity_discovery.py) ----
@@ -172,7 +168,7 @@ def run_linking(spark, args, cfg, files, store) -> dict:
     # pairs (computed without the catalogue rows) and silently link
     # nothing — resume is existence+schema-based, not input-based.
     link_store = store.sub("link_stages")
-    pipe = LinkPipeline(cfg, recall_k=args.recall_k, mention_knn=args.mention_knn)
+    pipe = LinkPipeline(cfg, mention_knn=args.mention_knn)
     res = pipe.run(
         mentions,
         catalogue,
@@ -273,7 +269,6 @@ def main(argv: list[str] | None = None) -> int:
         num_hashes=args.num_hashes,
         shingle_k=args.shingle_k,
         threshold=args.threshold,
-        top_k=args.top_k or None,
         pair_budget=args.pair_budget,
     )
     if args.synthetic_entities:

@@ -123,18 +123,20 @@ def content_signature_features_udf(
     num_hashes: int = 128,
     seed: int = 42,
     shingle_k: int = 1,
-    bands: int = 0,
-    rows_per_band: int = 0,
+    *,
+    bands: int,
+    rows_per_band: int,
     return_shingles: bool = False,
 ):
     """The fused stage-1 kernel: ONE Arrow pass over raw content
     computes tokenization, 64-bit token hashes (pandas siphash,
     vectorized), the MinHash signature over numeric k-gram shingles,
-    LSH band keys (when bands > 0; group/lang hash folded in), and the
-    stage-2 scoring features (sorted unique hashes, counts, TF L2
-    norm, token count). Computing unique/counts/norm once per FILE
-    (not per pair side) cuts stage-2 per-pair work to a merge-
-    intersect + dot product.
+    its LSH band keys (group/lang hash folded in), and the stage-2
+    scoring features (sorted unique hashes, counts, TF L2 norm).
+    Computing unique/counts/norm once per FILE (not per pair side)
+    cuts stage-2 per-pair work to a merge-intersect + dot product.
+    The signature itself is not emitted: every reader blocks on its
+    band keys.
 
     All heavy per-row work lives HERE, in Python worker processes:
     measured on this host, JVM-side regex and wide expression trees do
@@ -142,9 +144,8 @@ def content_signature_features_udf(
     near-linearly.
 
     (content string, group string) ->
-        struct<minhash array<bigint>, bands array<bigint>,
-               tu array<bigint>, tc array<bigint>, tnorm double,
-               n_tokens int[, su array<bigint>]>
+        struct<bands array<bigint>, tu array<bigint>, tc array<bigint>,
+               tnorm double[, su array<bigint>]>
 
     return_shingles adds ``su``: the sorted unique k-gram SHINGLE
     hashes — the exact-Jaccard verify set for MinHash-LSH candidates
@@ -153,12 +154,10 @@ def content_signature_features_udf(
     a_params, b_params = perm_params(num_hashes, seed)
     c = _U64(SHINGLE_C)
     fields = [
-        T.StructField("minhash", T.ArrayType(T.LongType())),
         T.StructField("bands", T.ArrayType(T.LongType())),
         T.StructField("tu", T.ArrayType(T.LongType())),
         T.StructField("tc", T.ArrayType(T.LongType())),
         T.StructField("tnorm", T.DoubleType()),
-        T.StructField("n_tokens", T.IntegerType()),
     ]
     if return_shingles:
         fields.append(T.StructField("su", T.ArrayType(T.LongType())))
@@ -175,7 +174,6 @@ def content_signature_features_udf(
         empty_sig_u64 = (
             ((_U64(1) << _U64(62)) + np.arange(num_hashes, dtype=_U64))
         )
-        empty_sig = (empty_sig_u64 >> _U64(1)).astype(np.int64).tolist()
         group_cache: dict[str, int] = {}
 
         def ghash(g: str) -> int:
@@ -186,14 +184,12 @@ def content_signature_features_udf(
             return v
 
         for contents, groups in batches:
-            sigs, bnds, tus, tcs, norms, ntoks = [], [], [], [], [], []
+            bnds, tus, tcs, norms = [], [], [], []
             sus: list[list[int]] = []
             for content, group in zip(contents, groups):
                 toks = tokenize_py(content)
-                ntoks.append(len(toks))
                 if not toks:
                     sig_u64 = empty_sig_u64
-                    sigs.append(empty_sig)
                     tus.append([])
                     tcs.append([])
                     norms.append(0.0)
@@ -209,41 +205,28 @@ def content_signature_features_udf(
                     norms.append(math.sqrt(float((tc * tc).sum())))
                     h = raw.view(_U64)
                     if shingle_k > 1:
-                        n = len(h)
-                        if n <= shingle_k:
-                            acc0 = _U64(0)
-                            for v in h:
-                                acc0 = (acc0 * c + v) & _MASK64
-                            h = np.array([acc0], dtype=_U64)
-                        else:
-                            m = n - shingle_k + 1
-                            acc = np.zeros(m, dtype=_U64)
-                            for j in range(shingle_k):
-                                acc = (acc * c + h[j : j + m]) & _MASK64
-                            h = acc
+                        # Horner over each window of w tokens; a doc of
+                        # at most k tokens is one whole-doc shingle.
+                        # Array ops wrap mod 2^64 silently (numpy
+                        # scalar ops would warn on the same overflow).
+                        w = min(shingle_k, len(h))
+                        m = len(h) - w + 1
+                        acc = np.zeros(m, dtype=_U64)
+                        for j in range(w):
+                            acc = (acc * c + h[j : j + m]) & _MASK64
+                        h = acc
                     if return_shingles:
                         sus.append(
                             np.sort(np.unique(h).view(np.int64)).tolist()
                         )
                     v = (h[:, None] * a + b) & _MASK64
                     sig_u64 = v.min(axis=0)
-                    sigs.append((sig_u64 >> _U64(1)).astype(np.int64).tolist())
-                if bands:
-                    bnds.append(
-                        band_keys_py(
-                            sig_u64, ghash(group or ""), bands, rows_per_band
-                        ).tolist()
-                    )
-                else:
-                    bnds.append([])
-            cols = {
-                "minhash": sigs,
-                "bands": bnds,
-                "tu": tus,
-                "tc": tcs,
-                "tnorm": norms,
-                "n_tokens": pd.Series(ntoks, dtype="int32"),
-            }
+                bnds.append(
+                    band_keys_py(
+                        sig_u64, ghash(group or ""), bands, rows_per_band
+                    ).tolist()
+                )
+            cols = {"bands": bnds, "tu": tus, "tc": tcs, "tnorm": norms}
             if return_shingles:
                 cols["su"] = sus
             yield pd.DataFrame(cols)

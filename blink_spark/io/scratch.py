@@ -57,12 +57,6 @@ def scratch_dir(prefix: str = "blink_scratch_") -> str:
 _fresh_dir = scratch_dir  # make_parquet_checkpointer's parameter shadows the name
 
 
-def release(path: str) -> None:
-    """Delete a scratch dir now instead of at exit."""
-    shutil.rmtree(path, ignore_errors=True)
-    _CLEANUP.discard(path)
-
-
 def spill(df: DataFrame, path: str) -> DataFrame:
     """Materialize df to parquet and return the re-read — a durable
     stage boundary that cuts lineage and stops multi-consumer plans

@@ -89,24 +89,21 @@ def mention_predictions(
 class LinkPipeline:
     """Two-table retrieve -> rerank -> assign flow.
 
-    cfg: the shared ER stage knobs (blocking, scoring weights,
-    threshold). recall_k: entity candidates retained per mention for
-    the recall@k metric (reference recall_k,
-    eval_cluster_linking.py:493-495). mention_knn: mention-mention
-    edges per mention in the joint graph (the reference's k ladder,
-    eval_cluster_linking.py:403-406; 0 = entity edges only).
+    cfg: the shared ER stage knobs (signature, blocking, threshold).
+    mention_knn: mention-mention edges per mention in the joint graph
+    (the reference's k ladder, eval_cluster_linking.py:403-406; 0 =
+    entity edges only). max_component_edges / oversize: the G4 skew
+    guards of entity_constrained_partition.
     """
 
     def __init__(
         self,
         cfg: ERConfig | None = None,
-        recall_k: int = 8,
         mention_knn: int = 4,
         max_component_edges: int = 2_000_000,
         oversize: str = "distributed",
     ):
         self.cfg = cfg or ERConfig()
-        self.recall_k = recall_k
         self.mention_knn = mention_knn
         # G4 skew guards, passed through to entity_constrained_partition
         self.max_component_edges = max_component_edges
@@ -138,11 +135,12 @@ class LinkPipeline:
         men_ids = pipe.s0_normalize(mentions).select("file_id").distinct()
         return flag_entity_endpoints(scores, ent_ids), men_ids, ent_ids
 
-    def entity_candidates(self, flagged: DataFrame, k: int | None = None) -> DataFrame:
+    def entity_candidates(self, flagged: DataFrame, k: int) -> DataFrame:
         """Per-mention top-k entity candidates (the retrieve stage's
-        output; feeds recall@k and the graph's best-entity edge).
+        output; k=1 is the graph's best-entity edge, larger k the
+        recall@k candidate set, reference recall_k,
+        eval_cluster_linking.py:493-495).
         (mention_id, entity_id, score, rank)"""
-        k = k or self.recall_k
         me = flagged.where(F.col("ent_a") != F.col("ent_b")).select(
             F.when(F.col("ent_a"), F.col("id_b")).otherwise(F.col("id_a")).alias("mention_id"),
             F.when(F.col("ent_a"), F.col("id_a")).otherwise(F.col("id_b")).alias("entity_id"),
@@ -237,7 +235,6 @@ class LinkPipeline:
         flagged, men_ids, ent_ids = self.score_joint(
             mentions, catalogue, store=store, resume=resume
         )
-        cands = self.entity_candidates(flagged)
         graph = self.joint_graph(flagged, train_labels=train_labels)
         part = entity_constrained_partition(
             graph,
@@ -248,7 +245,6 @@ class LinkPipeline:
         pred, clusters = mention_predictions(part, men_ids)
         res.tables = {
             "scores": flagged,
-            "entity_candidates": cands,
             "joint_graph": graph,
             "partition": part,
             "pred": pred,
@@ -256,9 +252,7 @@ class LinkPipeline:
         }
         if store is not None:
             store.write(pred, "link_pred")
-            store.write_metrics(
-                "link", {"recall_k": self.recall_k, "mention_knn": self.mention_knn}
-            )
+            store.write_metrics("link", {"mention_knn": self.mention_knn})
         return res
 
 

@@ -11,7 +11,7 @@ stages:
   s1_blocks       lang+LSH bands, salted hot blocks  (index+type partition, E6/E9)
   s2_pairs        blocked self-join                  (kNN retrieve, J1/J2)
   s2_scores       JW / Jaccard / TF-cosine blend     (cross-encoder rerank, E10)
-  s2_edges        threshold + top-k per node         (F6 + T1/T2)
+  s2_edges        blended score >= threshold         (F6)
   s3_clusters     iterative connected components     (G6)
 
 Every stage is a pure DataFrame -> DataFrame transform; ``run()``
@@ -38,7 +38,12 @@ from blink_spark.operators.connected_components import (
     assign_clusters,
     connected_components,
 )
-from blink_spark.operators.pairs import attach_features, candidate_pairs, top_k_per_node
+from blink_spark.operators.pairs import attach_features, candidate_pairs
+
+# the MinHash permutation seed, and the s2 blend weights of path
+# Jaro-Winkler, token-set Jaccard and TF cosine
+MINHASH_SEED = 42
+W_JW, W_JACCARD, W_COSINE = 0.2, 0.4, 0.4
 
 
 @dataclass
@@ -53,30 +58,27 @@ class ERConfig:
     num_hashes: int = 128
     bands: int = 32
     rows_per_band: int = 4
-    seed: int = 42
     # caps any single block's pair count (~sqrt(2B) rows/block): the
     # worst-case join task is the pipeline's serial floor, so keep it
     # seconds-sized; recall across salt boundaries is preserved by the
     # other bands (independent salt cuts), the exact-sha block, and CC
     # transitivity
     pair_budget: int = 100_000
-    # stage 2 (precision knobs)
-    w_jw: float = 0.2
-    w_jaccard: float = 0.4
-    w_cosine: float = 0.4
+    # stage 2 (precision knob)
     threshold: float = 0.45
-    # per-node top-k edge pruning is OFF by default: in a clone family
-    # any variant subgroup larger than k out-scores its bridge edges on
-    # BOTH endpoints and disconnects (measured: a 1000-file family's
-    # 166 license-header variants split off at k=20 AND k=60, recall
-    # 0.73). The reference avoids this with entity-constrained
-    # partitioning (special_partition.pyx:288-356) — with a catalogue,
-    # that is blink_spark.linking.LinkPipeline; in pure dedup the
-    # equivalent is threshold-only edges + CC. top_k remains available
-    # as the T1/T2 ladder knob for recall-bounded retrieval use.
-    top_k: int | None = None
-    # stage 3
-    cc_max_iterations: int = 50
+
+
+def signature_kernel(cfg: ERConfig, return_shingles: bool = False):
+    """The fused stage-1 kernel for ``cfg`` (batch s1 and the
+    streaming front end build it here)."""
+    return content_signature_features_udf(
+        cfg.num_hashes,
+        MINHASH_SEED,
+        shingle_k=cfg.shingle_k,
+        bands=cfg.bands,
+        rows_per_band=cfg.rows_per_band,
+        return_shingles=return_shingles,
+    )
 
 
 @dataclass
@@ -108,19 +110,12 @@ class ERPipeline:
         )
 
     def s1_signatures(self, s0: DataFrame) -> DataFrame:
-        c = self.cfg
         # ONE fused Arrow pass over content: tokenize (python re —
         # java regex does not scale across local task threads), hash,
-        # numeric k-gram shingling, MinHash, and the stage-2 scoring
-        # features (sorted unique hashes + counts + TF norm). No token
-        # strings ever cross a shuffle.
-        feat_udf = content_signature_features_udf(
-            c.num_hashes,
-            c.seed,
-            shingle_k=c.shingle_k,
-            bands=c.bands,
-            rows_per_band=c.rows_per_band,
-        )
+        # numeric k-gram shingling, MinHash band keys, and the stage-2
+        # scoring features (sorted unique hashes + counts + TF norm).
+        # No token strings ever cross a shuffle.
+        feat_udf = signature_kernel(self.cfg)
         return (
             s0.select(
                 "file_id",
@@ -138,7 +133,6 @@ class ERPipeline:
                 F.col("ft.tu").alias("tu"),
                 F.col("ft.tc").alias("tc"),
                 F.col("ft.tnorm").alias("tnorm"),
-                F.col("ft.n_tokens").alias("n_tokens"),
             )
         )
 
@@ -159,7 +153,6 @@ class ERPipeline:
         return candidate_pairs(blocks, "file_id")
 
     def s2_scores(self, pairs: DataFrame, s1: DataFrame) -> DataFrame:
-        c = self.cfg
         feat = attach_features(
             pairs, s1, "file_id", ["path", "sha256", "tu", "tc", "tnorm"]
         )
@@ -186,22 +179,27 @@ class ERPipeline:
             "is_exact",
         )
         blend = (
-            F.lit(c.w_jw) * F.col("jw_path")
-            + F.lit(c.w_jaccard) * F.col("jaccard")
-            + F.lit(c.w_cosine) * F.col("cosine")
+            F.lit(W_JW) * F.col("jw_path")
+            + F.lit(W_JACCARD) * F.col("jaccard")
+            + F.lit(W_COSINE) * F.col("cosine")
         )
         return scored.withColumn(
             "score", F.when(F.col("is_exact"), F.lit(1.0)).otherwise(blend)
         )
 
     def s2_edges(self, scores: DataFrame) -> DataFrame:
-        c = self.cfg
-        edges = scores.where(F.col("score") >= c.threshold).select(
+        """Every scored pair at or above the threshold. No per-node
+        top-k cut: in a clone family any variant subgroup larger than k
+        out-scores its bridge edges on BOTH endpoints and disconnects
+        (measured: a 1000-file family's 166 license-header variants
+        split off at k=20 AND k=60, recall 0.73). The reference avoids
+        this with entity-constrained partitioning
+        (special_partition.pyx:288-356), which is
+        blink_spark.linking.LinkPipeline; in pure dedup the equivalent
+        is threshold-only edges + CC."""
+        return scores.where(F.col("score") >= self.cfg.threshold).select(
             "id_a", "id_b", "score"
         )
-        if c.top_k:
-            edges = top_k_per_node(edges, c.top_k)
-        return edges
 
     def s3_clusters(
         self,
@@ -212,7 +210,6 @@ class ERPipeline:
     ) -> DataFrame:
         comp = connected_components(
             edges.select("id_a", "id_b"),
-            max_iterations=self.cfg.cc_max_iterations,
             stats=stats,
             checkpoint_fn=checkpoint_fn,
         )

@@ -32,10 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from blink_spark.functions import text
-from blink_spark.functions.minhash import content_signature_features_udf
 from blink_spark.functions.rounding import qround
 from blink_spark.functions.similarity import presorted_jaccard_udf
-from blink_spark.pipeline import ERConfig
+from blink_spark.pipeline import ERConfig, signature_kernel
 
 
 def normalize_stream(files: DataFrame, cfg: ERConfig | None = None) -> DataFrame:
@@ -58,11 +57,7 @@ def signature_stream(
 ) -> DataFrame:
     """s1 on a stream: ONE fused Arrow pass per micro-batch (bands +
     sorted unique shingle hashes for downstream verify joins)."""
-    c = cfg or ERConfig()
-    feat = content_signature_features_udf(
-        c.num_hashes, c.seed, shingle_k=c.shingle_k,
-        bands=c.bands, rows_per_band=c.rows_per_band, return_shingles=True,
-    )
+    feat = signature_kernel(cfg or ERConfig(), return_shingles=True)
     keep = [col for col in ("event_ts",) if col in s0.columns]
     return s0.select(
         "file_id", "lang", "sha256", *keep,

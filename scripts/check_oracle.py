@@ -10,13 +10,12 @@ cells). Exit code = number of failing queries.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -39,6 +38,14 @@ def main() -> int:
     ap.add_argument("--only", nargs="*", default=None)
     args = ap.parse_args()
 
+    # check this checkout: the driver imports it through sys.path,
+    # Spark's Python workers through PYTHONPATH (read when pyspark
+    # launches its JVM)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [root] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
     import __spark_entry__ as entry_mod
     from blink_spark.session import get_spark
 

@@ -50,7 +50,9 @@ FAST_QUERIES = [
     # the G4 router's decision table and the whole LinkPipeline
     "link_route_stats",
     "link_clusters_chain",
-    # connected components, Borůvka (with its nested CC) and the
+    # connected components, the per-language Kruskal max spanning
+    # forest (max_spanning_forest_per_component(group_col="lang"); no CC
+    # and no Borůvka, which test_mst.py checks against Kruskal) and the
     # library's top_k_per_node
     "er_chain_cc",
     "graph_mst_forest",

@@ -231,9 +231,9 @@ def test_entity_candidate_recall(spark, link_fixture):
     """A9/A2 analog: the gold entity appears in the top-recall_k
     candidates for nearly every mention."""
     mentions, catalogue, gold, _ = link_fixture
-    pipe = LinkPipeline(CFG, recall_k=8)
+    pipe = LinkPipeline(CFG)
     flagged, men_ids, _ = pipe.score_joint(mentions, catalogue)
-    cands = pipe.entity_candidates(flagged)
+    cands = pipe.entity_candidates(flagged, k=8)
     hit = cands.join(
         gold.select(F.col("file_id").alias("mention_id"), "entity_id"),
         ["mention_id", "entity_id"],

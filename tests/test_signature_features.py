@@ -30,10 +30,11 @@ def test_features_match_python_oracle(spark):
     )
     udf = mh.content_signature_features_udf(32, seed=42, shingle_k=3, bands=4, rows_per_band=8)
     rows = {r["id"]: r["ft"] for r in df.select("id", udf("content", "lang").alias("ft")).collect()}
+    g = int(pd.util.hash_array(np.asarray(["py"], dtype=object))[0])
     for i, doc in enumerate(docs):
         toks = mh.tokenize_py(doc)
         ft = rows[i]
-        assert ft["n_tokens"] == len(toks)
+        assert list(ft.asDict()) == ["bands", "tu", "tc", "tnorm"]
         if not toks:
             assert ft["tu"] == [] and ft["tc"] == [] and ft["tnorm"] == 0.0
             continue
@@ -45,17 +46,15 @@ def test_features_match_python_oracle(spark):
         assert ft["tnorm"] == pytest.approx(
             math.sqrt(sum(v * v for v in cnt.values())), abs=1e-12
         )
-        # minhash: same as the standalone oracle over the same hashes
+        # band keys: band_keys_py over the pre-shift signature of the
+        # same shingles, which the standalone oracle minhash_py (it
+        # returns the signature shifted right by one) must agree with
         exp_sig = mh.minhash_py(hs.tolist(), 32, 42, shingle_k=3)
-        assert ft["minhash"] == exp_sig
-        # band keys: recomputable from the signature
-        sig_u64 = (np.asarray(ft["minhash"], dtype=np.int64).astype(np.uint64) << np.uint64(1))
-        # band_keys_py expects the PRE-shift signature; recompute from hashes
         a, b = mh.perm_params(32, 42)
         sh = np.asarray(mh.shingle_hashes_py(hs.tolist(), 3), dtype=np.uint64)
         v = (sh[:, None] * a[None, :] + b[None, :]) & np.uint64(0xFFFFFFFFFFFFFFFF)
         raw_sig = v.min(axis=0)
-        g = int(pd.util.hash_array(np.asarray(["py"], dtype=object))[0])
+        assert (raw_sig >> np.uint64(1)).astype(np.int64).tolist() == exp_sig
         exp_bands = mh.band_keys_py(raw_sig, g, 4, 8).tolist()
         assert ft["bands"] == exp_bands
 
@@ -77,8 +76,27 @@ def test_udf_deterministic_across_partitioning(spark):
         [(i, d, "l") for i, d in enumerate(docs)], "id long, content string, lang string"
     )
     udf = mh.content_signature_features_udf(16, 7, 2, bands=4, rows_per_band=4)
-    a = {r["id"]: (r["ft"]["minhash"], r["ft"]["bands"])
-         for r in df.repartition(2).select("id", udf("content", "lang").alias("ft")).collect()}
-    b = {r["id"]: (r["ft"]["minhash"], r["ft"]["bands"])
-         for r in df.repartition(9).select("id", udf("content", "lang").alias("ft")).collect()}
+    def feats(n_parts):
+        return {r["id"]: (r["ft"]["bands"], r["ft"]["tu"], r["ft"]["tc"])
+                for r in df.repartition(n_parts).select("id", udf("content", "lang").alias("ft")).collect()}
+
+    a, b = feats(2), feats(9)
     assert a == b
+
+
+def test_short_doc_shingle_raises_no_overflow_warning():
+    """A doc of at most shingle_k tokens is one whole-doc shingle; its
+    Horner combine wraps mod 2^64 without a numpy overflow warning."""
+    import warnings
+
+    udf = mh.content_signature_features_udf(8, 42, shingle_k=3, bands=2, rows_per_band=4)
+    batch = (pd.Series(["alpha beta"]), pd.Series(["py"]))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        (out,) = list(udf.func(iter([batch])))
+    hs = pd.util.hash_array(np.asarray(["alpha", "beta"], dtype=object)).view(np.int64)
+    a, b = mh.perm_params(8, 42)
+    sh = np.asarray(mh.shingle_hashes_py(hs.tolist(), 3), dtype=np.uint64)
+    raw_sig = ((sh[:, None] * a[None, :] + b[None, :]) & np.uint64(0xFFFFFFFFFFFFFFFF)).min(axis=0)
+    g = int(pd.util.hash_array(np.asarray(["py"], dtype=object))[0])
+    assert out["bands"][0] == mh.band_keys_py(raw_sig, g, 2, 4).tolist()
